@@ -38,12 +38,12 @@ TERM_S = int((T_END - T0).total_seconds())
 Z99 = NormalDist().inv_cdf(1 - 0.01 / 2)  # alpha = 0.01 two-sided
 
 
-def _size_bytes(conf_val: str) -> int:
-    v = conf_val.strip().lower()
-    for suf, mult in (("k", 1 << 10), ("m", 1 << 20), ("g", 1 << 30), ("b", 1)):
-        if v.endswith(suf):
-            return int(float(v[: -len(suf)])) * mult
-    return int(v)
+def _size_bytes(spark: SparkSession, conf_val: str) -> int:
+    """A Spark byte-size string ("134217728", "128mb", "1g") in bytes,
+    parsed by Spark's own parser."""
+    return int(
+        spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(conf_val)
+    )
 
 
 def _spread(spark: SparkSession, df: DataFrame, path: str) -> DataFrame:
@@ -91,7 +91,7 @@ def _spread(spark: SparkSession, df: DataFrame, path: str) -> DataFrame:
     except Exception:
         n_rg = 1
     max_pb = _size_bytes(
-        spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728")
+        spark, spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728")
     )
     eff = min(n_rg, max(1, -(-size // max_pb)))
     if eff >= p:

@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from logdag_spark.config import to_utc_ms
+from logdag_spark.session import local_frame
 
 DEFAULT_T0 = datetime(2024, 1, 1, tzinfo=timezone.utc)
 N_HOSTS = 9
@@ -96,7 +97,7 @@ def host_meta(spark: SparkSession) -> DataFrame:
     (/root/reference/logdag/data/area_def.txt.sample; membership test at
     /root/reference/logdag/log2event.py:226-252).
     """
-    return spark.createDataFrame(host_rows(), "host string, area string")
+    return local_frame(spark, host_rows(), "host string, area string")
 
 
 def template_dim(spark: SparkSession) -> DataFrame:

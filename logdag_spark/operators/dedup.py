@@ -25,6 +25,11 @@ from pyspark.storagelevel import StorageLevel
 
 from logdag_spark.operators.text import tokenize
 
+# cap on simhash_near_dups' driver-built (slice, flip-mask) table.  Every
+# signature row fans out into one variant per mask, and the knobs allow
+# tables the driver cannot hold (n_tables=1, max_hamming=8: ~5e9 masks)
+MAX_FLIP_MASKS = 1 << 16
+
 
 # ------------------------------------------------------------------- exact
 
@@ -694,7 +699,21 @@ def simhash_near_dups(
         )
 
     from itertools import combinations
+    from math import comb
 
+    n_masks = sum(
+        comb(slice_width(t), r) for t in range(n_tables) for r in range(tol + 1)
+    )
+    if n_masks > MAX_FLIP_MASKS:
+        raise ValueError(
+            f"max_hamming={max_hamming} over n_tables={n_tables} slices needs "
+            f"{n_masks} flip masks (at most {MAX_FLIP_MASKS}): raise n_tables"
+        )
+    if tol > 0 and n_tables == 1:
+        raise ValueError(
+            "one 64-bit slice with max_hamming > 0 needs flip masks that "
+            "overflow long: use n_tables >= 2"
+        )
     mask_rows = [
         (t, sum(1 << p for p in c))
         for t in range(n_tables)

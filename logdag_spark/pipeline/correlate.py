@@ -38,6 +38,7 @@ from pyspark.sql.window import Window
 
 from logdag_spark.config import PipelineConfig
 from logdag_spark.pipeline.aggregate import n_bins
+from logdag_spark.session import local_frame
 
 
 UNIT_HOSTS_SCHEMA = (
@@ -91,9 +92,7 @@ def make_unit_hosts(
     hosts = [
         (r["host"], r["area"]) for r in host_meta.select("host", "area").collect()
     ]
-    return spark.createDataFrame(
-        unit_specs(dt_range, cfg, hosts), UNIT_HOSTS_SCHEMA
-    )
+    return local_frame(spark, unit_specs(dt_range, cfg, hosts), UNIT_HOSTS_SCHEMA)
 
 
 def assign_units(binned: DataFrame, unit_hosts: DataFrame) -> DataFrame:
@@ -401,19 +400,6 @@ def unit_nbins_rows(
         if unit not in seen:
             seen[unit] = n_bins((dts, dte), bin_size, method, bin_diff)
     return list(seen.items())
-
-
-def unit_nbins_df(
-    spark: SparkSession, unit_hosts: DataFrame, bin_size: timedelta,
-    method: str = "sequential", bin_diff: timedelta | None = None,
-) -> DataFrame:
-    """Per-unit zero-filled bin count N (constant when units share a term)."""
-    units = unit_hosts.select("unit", "dts", "dte").distinct().collect()
-    rows = [
-        (u["unit"], n_bins((u["dts"], u["dte"]), bin_size, method, bin_diff))
-        for u in units
-    ]
-    return spark.createDataFrame(rows, "unit string, n long")
 
 
 def merge_syncevents(matrix: DataFrame, evdim: DataFrame) -> tuple[DataFrame, DataFrame]:

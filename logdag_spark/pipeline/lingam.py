@@ -27,7 +27,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from logdag_spark.pipeline.pc import EDGE_SCHEMA
+from logdag_spark.pipeline.pc import EDGE_SCHEMA, NOEDGE_SCHEMA
+from logdag_spark.session import kernel_groups, local_frame
 
 _K1, _K2, _GAMMA = 79.047, 7.4129, 0.37457
 
@@ -403,13 +404,13 @@ def lingam_edges(
         return lingam_matrix_to_edges(unit, B, eids)
 
     if noedge is None:
-        noedge = spark.createDataFrame([], "unit string, eid1 long, eid2 long")
+        noedge = local_frame(spark, [], NOEDGE_SCHEMA)
     else:
         # fresh attribute ids (see pc_edges: cogroup self-join ambiguity)
         noedge = noedge.select("unit", "eid1", "eid2").toDF("unit", "eid1", "eid2")
     return (
-        matrix.groupBy("unit")
-        .cogroup(noedge.groupBy("unit"))
+        kernel_groups(matrix, "unit")
+        .cogroup(kernel_groups(noedge, "unit"))
         .applyInPandas(kernel, EDGE_SCHEMA)
     )
 
@@ -488,7 +489,7 @@ def lingam_corr_edges(
         return (unit, src, dst, True, coef)
 
     if noedge is None:
-        noedge = spark.createDataFrame([], "unit string, eid1 long, eid2 long")
+        noedge = local_frame(spark, [], NOEDGE_SCHEMA)
     else:
         noedge = noedge.select("unit", "eid1", "eid2").toDF("unit", "eid1", "eid2")
 
@@ -528,7 +529,7 @@ def lingam_corr_edges(
             row = fit_sub(unit, pdf[["unit", "eid", "bin", "cnt"]], e1, e2)
             return pd.DataFrame([row] if row else [], columns=out_cols)
 
-        return fan.groupBy("unit", "eid1", "eid2").applyInPandas(
+        return kernel_groups(fan, "unit", "eid1", "eid2").applyInPandas(
             pair_kernel, EDGE_SCHEMA
         )
 
@@ -557,7 +558,7 @@ def lingam_corr_edges(
         return pd.DataFrame(rows, columns=out_cols)
 
     return (
-        matrix.groupBy("unit")
-        .cogroup(noedge.groupBy("unit"))
+        kernel_groups(matrix, "unit")
+        .cogroup(kernel_groups(noedge, "unit"))
         .applyInPandas(kernel, EDGE_SCHEMA)
     )

@@ -53,6 +53,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from logdag_spark.session import local_frame
+
 
 def parse_tokens(df: DataFrame, template_dim) -> DataFrame:
     """Assign ``gid`` by template match; unmatched rows get gid NULL.
@@ -127,9 +129,7 @@ def parse_tokens(df: DataFrame, template_dim) -> DataFrame:
                 else key_case.when(cond, key_arr)
             )
         dim = F.broadcast(
-            spark.createDataFrame(
-                dim_rows, f"_l{j} int, _dk{j} array<int>, _g{j} int"
-            )
+            local_frame(spark, dim_rows, f"_l{j} int, _dk{j} array<int>, _g{j} int")
         )
         out = (
             out.withColumn(f"_k{j}", key_case)

@@ -33,9 +33,12 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from logdag_spark.session import kernel_groups, local_frame
+
 EDGE_SCHEMA = (
     "unit string, src_eid long, dst_eid long, directed boolean, weight double"
 )
+NOEDGE_SCHEMA = "unit string, eid1 long, eid2 long"
 
 
 # ------------------------------------------------------------ distributions
@@ -396,15 +399,15 @@ def pc_edges(
         return graph_to_edges(unit, g, corr, eids)
 
     if noedge is None:
-        noedge = spark.createDataFrame([], "unit string, eid1 long, eid2 long")
+        noedge = local_frame(spark, [], NOEDGE_SCHEMA)
     else:
         # fresh attribute ids: noedge usually derives from the same evdim
         # lineage as matrix, which trips the self-join ambiguity check in
         # the cogroup
         noedge = noedge.select("unit", "eid1", "eid2").toDF("unit", "eid1", "eid2")
     return (
-        matrix.groupBy("unit")
-        .cogroup(noedge.groupBy("unit"))
+        kernel_groups(matrix, "unit")
+        .cogroup(kernel_groups(noedge, "unit"))
         .applyInPandas(kernel, EDGE_SCHEMA)
     )
 
@@ -449,4 +452,4 @@ def orient_depth0_edges(edges: DataFrame) -> DataFrame:
         g = orient_cpdag(adj, _EmptySepsets())
         return graph_to_edges(unit, g, wmat, nodes)
 
-    return edges.groupBy("unit").applyInPandas(kernel, EDGE_SCHEMA)
+    return kernel_groups(edges, "unit").applyInPandas(kernel, EDGE_SCHEMA)

@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from logdag_spark.session import local_frame
+
 
 def candidate_pairs(evdim: DataFrame) -> DataFrame:
     """All eid pairs per unit: (unit, eid1, eid2, host1, host2, ...).
@@ -284,9 +286,7 @@ def host_allow_pairs(
             from pyspark.sql import SparkSession
 
             spark = SparkSession.getActiveSession()
-            allows.append(
-                spark.createDataFrame([], "host1 string, host2 string")
-            )
+            allows.append(local_frame(spark, [], "host1 string, host2 string"))
     if not allows:
         return None
     out = allows[0]

@@ -46,6 +46,7 @@ from logdag_spark.pipeline.pknowledge import (
 )
 from logdag_spark.pipeline.route import route
 from logdag_spark.pipeline.series_filter import filter_series, weighted_output_ok
+from logdag_spark.session import local_frame
 
 
 @dataclass
@@ -193,7 +194,7 @@ def run_pipeline(
                 f"unknown unit(s) {sorted(missing)}; "
                 f"unit names look like all_YYYYMMDD / <host>_YYYYMMDD"
             )
-    uh = spark.createDataFrame(specs, UNIT_HOSTS_SCHEMA)
+    uh = local_frame(spark, specs, UNIT_HOSTS_SCHEMA)
     long = assign_units(binned, uh)
     evdim = event_dim(long)
     mat = unit_matrix(long, evdim)
@@ -206,7 +207,7 @@ def run_pipeline(
         specs, cfg.bin_size, cfg.ci_bin_method,
         cfg.bin_diff if cfg.ci_bin_method != "sequential" else None,
     )
-    nb = spark.createDataFrame(nb_rows, "unit string, n long")
+    nb = local_frame(spark, nb_rows, "unit string, n long")
 
     # prior-knowledge pruning (G7): the reference applies the configured
     # rule set to every unit before every algorithm

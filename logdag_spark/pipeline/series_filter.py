@@ -46,6 +46,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from logdag_spark.config import PipelineConfig, str2dur, to_utc_ms
+from logdag_spark.session import kernel_groups
 
 
 # ---------------------------------------------------------------- numerics
@@ -486,7 +487,7 @@ def filter_series(
         (F.min(off_ms) / 1000.0).alias("mn"),
         (F.max(off_ms) / 1000.0).alias("mx"),
     )
-    out = pre.groupBy(*SERIES_COLS).applyInPandas(kernel, _VERDICT_SCHEMA)
+    out = kernel_groups(pre, *SERIES_COLS).applyInPandas(kernel, _VERDICT_SCHEMA)
     if weighted:
         return out.drop("verdict").unionByName(rest)
     # the verdict frame is consumed twice (raw keys + replaced rows) —

@@ -12,7 +12,24 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, GroupedData, SparkSession
+from pyspark.sql.types import DataType, StructType
+
+MAX_DRIVER_MEM_MB = 48 * 1024
+
+
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """``spark.driver.memory`` default: half of the host's MemTotal,
+    capped at 48g.  In local mode the driver is also the executor, and a
+    heap sized past the host's RAM grows until the kernel OOM-kills the
+    JVM.  Without ``meminfo`` (not Linux) Spark's own 1g default stays."""
+    try:
+        with open(meminfo) as f:
+            kb = next(int(line.split()[1]) for line in f
+                      if line.startswith("MemTotal:"))
+    except (OSError, StopIteration):
+        return "1g"
+    return f"{max(1024, min(MAX_DRIVER_MEM_MB, kb // 2048))}m"
 
 
 def get_spark(
@@ -45,7 +62,10 @@ def get_spark(
         # (token arrays, embeddings) are ~0.5KB -> ~32MB per batch, well
         # inside executor memory
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
         # task-commit renames instead of a serial job-commit rename loop
@@ -66,7 +86,39 @@ def get_spark(
     return spark
 
 
-def stop_spark() -> None:
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()
+def kernel_groups(df: DataFrame, *keys: str) -> GroupedData:
+    """``df.groupBy(*keys)`` for a grouped-map Python kernel, its input
+    hash-partitioned on ``keys`` to ``spark.sql.shuffle.partitions``.
+
+    A kernel's input is small by design (pre-aggregated bins, one unit
+    matrix), so AQE's byte-based coalescing would fold its exchange into
+    one or two partitions and run every group's Python on one core.  AQE
+    never coalesces a repartition-by-number exchange, and that exchange
+    already satisfies the grouping, so the plan gains no extra shuffle.
+    Cogrouped frames pass through here on both sides so they stay
+    co-partitioned."""
+    n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    return df.repartition(n, *keys).groupBy(*keys)
+
+
+def local_frame(
+    spark: SparkSession, rows: list[tuple], schema: str | StructType
+) -> DataFrame:
+    """A driver-side row list as an Arrow-backed ``LocalRelation``.
+
+    ``spark.createDataFrame(<list>, ddl)`` plans a ``LogicalRDD`` over a
+    Python RDD, so every plan that broadcasts it first runs a job in
+    Python workers; an Arrow table is shipped to the JVM once and planned
+    as a local relation, also when ``rows`` is empty.  Timestamps follow
+    the Arrow convention: naive datetimes are read as UTC."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = DataType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) if rows else [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, schema)

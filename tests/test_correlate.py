@@ -21,8 +21,10 @@ from logdag_spark.pipeline.correlate import (
     merge_syncevents,
     pairwise_corr,
     unit_matrix,
-    unit_nbins_df,
+    unit_nbins_rows,
+    unit_specs,
 )
+from logdag_spark.session import local_frame
 
 DT_RANGE = (DEFAULT_T0, DEFAULT_T0 + timedelta(hours=24))
 
@@ -40,7 +42,11 @@ def slice_outputs(spark):
     long = assign_units(binned, uh)
     ed = event_dim(long).cache()
     mat = unit_matrix(long, ed).cache()
-    nb = unit_nbins_df(spark, uh, timedelta(minutes=5))
+    nb = local_frame(
+        spark,
+        unit_nbins_rows(unit_specs(DT_RANGE, cfg, fx.host_rows()), timedelta(minutes=5)),
+        "unit string, n long",
+    )
     return ed, mat, nb, uh
 
 

@@ -75,3 +75,28 @@ def test_entry_smoke(spark):
 
     df = se.entry(spark)
     assert df.count() > 0
+
+
+def test_spread_accepts_spark_byte_strings(spark, tmp_path):
+    """Any byte string Spark accepts for maxPartitionBytes ("128mb",
+    "1g", plain bytes) must work in the spread-enabled loads."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from logdag_spark.entry_queries import _size_bytes, _spread
+
+    path = str(tmp_path / "t.parquet")
+    pq.write_table(pa.table({"x": list(range(100))}), path)
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "128mb")
+    try:
+        out = _spread(spark, spark.read.parquet(path), path)
+    finally:
+        spark.conf.set(key, old)
+    # one row group under an 8-core session: spread to every core
+    assert out.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
+    assert sorted(r["x"] for r in out.collect()) == list(range(100))
+    assert _size_bytes(spark, "128mb") == 128 << 20
+    assert _size_bytes(spark, "1g") == 1 << 30
+    assert _size_bytes(spark, "134217728") == 134217728

@@ -1026,3 +1026,29 @@ def test_tokenize_edge_semantics(spark):
     assert got["c"] == []
     assert got["d"] is None
     assert got["e"] == ["leading", "and", "trailing"]
+
+
+def test_simhash_mask_fan_out_is_bounded(spark, docs_with_dups):
+    """One 64-bit slice at tolerance 8 would need sum C(64, <=8) ~ 5e9
+    driver-side flip masks (and bit-63 masks overflow long): rejected
+    before any mask is built.  The alarm turns a runaway enumeration into
+    a failure instead of a driver OOM."""
+    import signal
+
+    def _timeout(signum, frame):
+        raise TimeoutError("flip-mask enumeration did not stop")
+
+    prev = signal.signal(signal.SIGALRM, _timeout)
+    signal.alarm(20)
+    try:
+        with pytest.raises(ValueError, match="flip masks"):
+            dedup.simhash_near_dups(docs_with_dups, max_hamming=8, n_tables=1)
+        # 2 x sum C(32, <=5) = 485,650 masks: above the cap
+        with pytest.raises(ValueError, match="flip masks"):
+            dedup.simhash_near_dups(docs_with_dups, max_hamming=10, n_tables=2)
+        # a single slice overflows long at any tolerance above 0
+        with pytest.raises(ValueError, match="overflow long"):
+            dedup.simhash_near_dups(docs_with_dups, max_hamming=1, n_tables=1)
+    finally:
+        signal.alarm(0)
+        signal.signal(signal.SIGALRM, prev)

@@ -6,6 +6,9 @@ small number of generated cases with a fixed deadline-free profile."""
 
 from __future__ import annotations
 
+from collections import Counter
+from datetime import datetime, timedelta, timezone
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -161,3 +164,119 @@ def test_remove_dup_spans_matches_pure_python(spark, docs, n):
         ]
         want[i] = (len(toks), len(toks) - len(kept), " ".join(kept))
     assert got == want
+
+
+# ------------------------------------------ partition-count invariance
+#
+# The grouped-map kernels run one task per spark.sql.shuffle.partitions
+# partition; their rows must not depend on how many there are.
+
+PROP_KERNEL = settings(PROP, max_examples=4)
+T0 = datetime(2024, 1, 1, tzinfo=timezone.utc)
+SERIES_SCHEMA = (
+    "measure string, host string, key string, area string, group string, "
+    "ts timestamp, val double"
+)
+
+
+def _rows_at_partitions(spark, build) -> list[Counter]:
+    """``build()``'s rows at 1, the session's default and 7 shuffle
+    partitions; ``build`` runs after each setting, so it plans anew."""
+    default = spark.conf.get("spark.sql.shuffle.partitions")
+    out = []
+    try:
+        for n in ("1", default, "7"):
+            spark.conf.set("spark.sql.shuffle.partitions", n)
+            out.append(Counter(tuple(r) for r in build().collect()))
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", default)
+    return out
+
+
+@st.composite
+def log_series(draw):
+    """Per-series (kind, seed): strictly periodic series are dropped,
+    bursty ones keep a Fourier remainder, sparse ones fail sizetest and
+    pass raw."""
+    kinds = st.sampled_from(["periodic", "bursty", "uniform", "sparse"])
+    return draw(st.lists(st.tuples(kinds, st.integers(0, 2**16)),
+                         min_size=1, max_size=6))
+
+
+def _series_rows(case) -> list[tuple]:
+    rows = []
+    for s, (kind, seed) in enumerate(case):
+        r = np.random.default_rng(seed)
+        if kind == "periodic":
+            period = int(r.integers(60, 1800))
+            off = np.arange(int(r.integers(0, period)), 86400, period)
+        elif kind == "bursty":
+            off = np.concatenate([r.uniform(c - 1800, c + 1800, 60)
+                                  for c in r.uniform(3600, 82800, 3)])
+        elif kind == "uniform":
+            off = r.uniform(0, 86400, int(r.integers(20, 400)))
+        else:
+            off = r.uniform(0, 86400, int(r.integers(1, 5)))
+        rows += [
+            ("log_feature", f"h{s % 3}", str(s), "core", "g",
+             T0 + timedelta(milliseconds=int(o * 1000)), 1.0)
+            for o in off
+        ]
+    # another measure passes through untouched
+    rows.append(("snmp", "h0", "if0", "core", "g", T0, 3.0))
+    return rows
+
+
+@PROP_KERNEL
+@given(log_series())
+def test_filter_series_rows_independent_of_partition_count(spark, case):
+    from logdag_spark.config import PipelineConfig
+    from logdag_spark.pipeline.series_filter import filter_series
+
+    routed = spark.createDataFrame(_series_rows(case), SERIES_SCHEMA).cache()
+    rng = (T0, T0 + timedelta(hours=24))
+    for output in ("weighted", "events"):
+        one, default, seven = _rows_at_partitions(
+            spark, lambda: filter_series(routed, rng, PipelineConfig(), output=output)
+        )
+        assert one == default == seven, output
+    routed.unpersist()
+
+
+@st.composite
+def pc_units(draw):
+    """Units of chained Poisson series, with optional noedge pairs."""
+    units = draw(st.lists(st.tuples(st.integers(2, 5), st.integers(0, 2**16)),
+                          min_size=1, max_size=3))
+    noedge = draw(st.lists(st.tuples(st.integers(0, len(units) - 1),
+                                     st.integers(0, 4), st.integers(0, 4)),
+                           max_size=3))
+    return units, noedge
+
+
+@PROP_KERNEL
+@given(pc_units())
+def test_pc_edges_rows_independent_of_partition_count(spark, case):
+    from logdag_spark.pipeline.pc import pc_edges
+
+    units, noedge_idx = case
+    nb = 300
+    rows = []
+    for u, (p, seed) in enumerate(units):
+        r = np.random.default_rng(seed)
+        x = r.poisson(2, nb)
+        for eid in range(p):
+            rows += [(f"u{u}", eid, T0 + timedelta(minutes=b), float(x[b]))
+                     for b in range(nb) if x[b] > 0]
+            x = x + r.poisson(1, nb) if r.random() < 0.7 else r.poisson(2, nb)
+    mdf = spark.createDataFrame(rows, "unit string, eid long, bin timestamp, cnt double")
+    noedge = spark.createDataFrame(
+        [(f"u{u}", a, b) for u, a, b in noedge_idx if a != b],
+        "unit string, eid1 long, eid2 long",
+    )
+    meta = {f"u{u}": (T0, nb) for u in range(len(units))}
+    for ne in (None, noedge):
+        one, default, seven = _rows_at_partitions(
+            spark, lambda: pc_edges(mdf, meta, timedelta(minutes=1), noedge=ne)
+        )
+        assert one == default == seven
