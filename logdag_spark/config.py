@@ -11,7 +11,7 @@ parameters (:173-186).  Duration strings use the reference's grammar
 from __future__ import annotations
 
 import re
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from datetime import datetime, timedelta, timezone
 
 _UNIT_SECONDS = {"s": 1, "m": 60, "h": 3600, "d": 86400, "w": 604800}
@@ -43,11 +43,6 @@ def str2dur(s: str) -> timedelta:
             raise ValueError(f"bad duration string: {s!r}")
         total += float(m.group(1)) * _UNIT_SECONDS[m.group(2)]
     return timedelta(seconds=total)
-
-
-def dur_to_interval(d: timedelta) -> str:
-    """Render a timedelta as a Spark window/INTERVAL duration string."""
-    return f"{int(d.total_seconds())} seconds"
 
 
 @dataclass
@@ -85,7 +80,6 @@ class PipelineConfig:
     # pair itself; a single wide unit fans across the cluster at the cost
     # of ~(p-1)x row duplication through the shuffle)
     lingam_corr_parallelism: str = "unit"
-    skeleton_method: str = "stable"
     skeleton_depth: int = -1
     skeleton_threshold: float = 0.01
     binarize: bool = False
@@ -101,7 +95,6 @@ class PipelineConfig:
     snmp_bin_size: str = "1m"
     # sinks
     warehouse: str = "/tmp/logdag_spark_warehouse"
-    extra: dict = field(default_factory=dict)
 
     @property
     def bin_size(self) -> timedelta:

@@ -48,7 +48,6 @@ class Catalog:
         warehouse: str,
         codec: str = "zstd",
         iceberg_catalog: str | None = None,
-        writer_version: str = "v1",
     ):
         """``codec`` picks the checkpoint parquet compression.  Default
         zstd: ~25% smaller files, which is what matters when checkpoints
@@ -61,21 +60,6 @@ class Catalog:
         ``iceberg_catalog`` names a configured Iceberg Spark SQL catalog
         (cluster setup: ``spark.sql.catalog.<name> =
         org.apache.iceberg.spark.SparkCatalog`` + warehouse confs); when
-        ``writer_version`` selects the parquet format version for the
-        parquet checkpoint backend: ``"v1"`` (default, maximum reader
-        compatibility) or ``"v2"`` — data-page-v2 with
-        DELTA_BINARY_PACKED on int64/timestamp columns, measured 27%
-        smaller on the raw-timestamp-dominated ``events_ts`` table
-        (200 → 146 MB at bench scale) at time-neutral write cost
-        (BENCH/BASELINE.md round-5 audit).  At object-store scale the
-        byte win is bandwidth and storage; v2 pages are readable by
-        Spark, pyarrow and DuckDB.  Applied by toggling the session
-        hadoop conf around each write (parquet-mr reads it at task
-        serialization; per-write ``option()`` does not propagate), so
-        concurrent writes from OTHER threads of this session during a
-        v2 write would also pick it up — this pipeline writes stages
-        serially.
-
         given AND the Iceberg runtime is on the classpath, checkpoints
         become Iceberg tables ``<name>.logdag.<table>`` — atomic
         snapshot commits, ``overwritePartitions`` for idempotent chunk
@@ -84,15 +68,14 @@ class Catalog:
         partitioned-parquet path below provides the same resume
         semantics via dynamic partition overwrite + a completion
         manifest; the choice is per-Catalog and every caller is
-        backend-agnostic."""
+        backend-agnostic.
+
+        Deployments that want data-page-v2 parquet (DELTA_BINARY_PACKED
+        int64/timestamp pages) set
+        ``spark.hadoop.parquet.writer.version=v2`` in the session conf."""
         self.spark = spark
         self.warehouse = warehouse
         self.codec = codec
-        if writer_version not in ("v1", "v2"):
-            raise ValueError(
-                f"writer_version must be 'v1' or 'v2', got {writer_version!r}"
-            )
-        self.writer_version = writer_version
         os.makedirs(warehouse, exist_ok=True)
         self.use_iceberg = iceberg_catalog is not None and _iceberg_available(spark)
         if iceberg_catalog is not None and not self.use_iceberg:
@@ -202,18 +185,7 @@ class Catalog:
             writer = df.write.mode(mode).option("compression", self.codec)
             if partition_by:
                 writer = writer.partitionBy(*partition_by)
-            hconf = self.spark.sparkContext._jsc.hadoopConfiguration()
-            prev_ver = hconf.get("parquet.writer.version")
-            if self.writer_version != "v1":
-                hconf.set("parquet.writer.version", self.writer_version)
-            try:
-                writer.parquet(self.path(table))
-            finally:
-                if self.writer_version != "v1":
-                    if prev_ver is None:
-                        hconf.unset("parquet.writer.version")
-                    else:
-                        hconf.set("parquet.writer.version", prev_ver)
+            writer.parquet(self.path(table))
             # completion manifest: written only after the Spark commit
             # returned, so exists() never resumes from a partial write
             with open(

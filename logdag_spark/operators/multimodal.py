@@ -41,12 +41,9 @@ def _decode(payload: bytes, kind: str) -> np.ndarray:
     """THE stubbed seam: a real deployment plugs Pillow/torchaudio/pyav
     here.  The deterministic fake hashes the payload into a fixed-length
     pseudo-feature so the distributed plumbing is fully testable."""
-    try:  # pragma: no cover - decoder libs absent in this container
-        raise ImportError
-    except ImportError:
-        digest = hashlib.sha256(payload or b"").digest()
-        arr = np.frombuffer(digest, dtype=np.uint8).astype(np.float32)
-        return arr / 255.0
+    digest = hashlib.sha256(payload or b"").digest()
+    arr = np.frombuffer(digest, dtype=np.uint8).astype(np.float32)
+    return arr / 255.0
 
 
 def extract_features(df: DataFrame, batch_size_hint: int = 1024) -> DataFrame:

@@ -5,20 +5,16 @@ The reference's upstream tokenization is regex-based log parsing
 that to the document-corpus operations a 100 TB training-data pipeline
 needs: tokenization/token counting, language ID, quality scoring, and
 rolling-hash fingerprinting.  All are built-in-function column
-expressions (JVM, codegen) — no Python in the hot path; the regex
-tokenizer also ships a pandas-UDF variant as the grok extension point.
+expressions (JVM, codegen) — no Python in the hot path.
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 from pyspark.sql.window import Window
 from pyspark.storagelevel import StorageLevel
 
-TOKEN_RE = r"[A-Za-z0-9_']+"
 _STOPWORDS = (
     "the a an and or of to in is are was were be been it this that with for on"
 ).split()
@@ -45,16 +41,6 @@ def tokenize(col: str = "text") -> Column:
 
 def token_count(col: str = "text") -> Column:
     return F.size(tokenize(col))
-
-
-def tokenize_pandas(col: str = "text") -> Column:
-    """Arrow-batched regex tokenizer (the vectorized-UDF variant)."""
-
-    @F.pandas_udf(T.ArrayType(T.StringType()))
-    def _tok(s: pd.Series) -> pd.Series:
-        return s.str.lower().str.findall(TOKEN_RE)
-
-    return _tok(F.col(col))
 
 
 def stopword_ratio(col: str = "text") -> Column:
@@ -151,15 +137,6 @@ def fingerprint_portable(col: str = "text", window: int = 8) -> Column:
         )
 
     return F.transform(F.array(tokenize(col)), per_doc)[0]
-
-
-def add_text_features(df: DataFrame, col: str = "text") -> DataFrame:
-    return (
-        df.withColumn("n_tokens", token_count(col))
-        .withColumn("lang_pred", lang_id(col))
-        .withColumn("quality", quality_score(col))
-        .withColumn("fp", fingerprint(col))
-    )
 
 
 def pack_sequences(

@@ -1,7 +1,6 @@
 from logdag_spark.pipeline.parse import (  # noqa: F401
     parse_tokens,
     parse_tokens_arrow,
-    parse_tokens_pandas,
 )
 from logdag_spark.pipeline.enrich import enrich  # noqa: F401
 from logdag_spark.pipeline.route import route  # noqa: F401

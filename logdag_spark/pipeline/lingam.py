@@ -27,6 +27,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from logdag_spark.config import to_utc_ms
 from logdag_spark.pipeline.pc import EDGE_SCHEMA, NOEDGE_SCHEMA
 from logdag_spark.session import kernel_groups, local_frame
 
@@ -365,17 +366,13 @@ def lingam_edges(
     ``method``/``bin_diff`` must match the discretize stage (bin labels
     step by bin_diff for slide/radius).
     """
-    from logdag_spark.pipeline.pc import (
-        _to_utc_ms,
-        assemble_unit_matrix,
-        label_step_ms,
-    )
+    from logdag_spark.pipeline.pc import assemble_unit_matrix, label_step_ms
 
     if algorithm not in ("direct", "ica"):
         raise ValueError(f"invalid lingam algorithm {algorithm!r}")
     spark = matrix.sparkSession
     step_ms, offset_ms = label_step_ms(bin_size, method, bin_diff)
-    meta = {u: (_to_utc_ms(t0), nb) for u, (t0, nb) in unit_meta.items()}
+    meta = {u: (to_utc_ms(t0), nb) for u, (t0, nb) in unit_meta.items()}
 
     def kernel(mdf: pd.DataFrame, ndf: pd.DataFrame) -> pd.DataFrame:
         if len(mdf) == 0:
@@ -457,11 +454,7 @@ def lingam_corr_edges(
     """
     from itertools import combinations
 
-    from logdag_spark.pipeline.pc import (
-        _to_utc_ms,
-        assemble_unit_matrix,
-        label_step_ms,
-    )
+    from logdag_spark.pipeline.pc import assemble_unit_matrix, label_step_ms
 
     if algorithm not in ("direct", "ica"):
         raise ValueError(f"invalid lingam algorithm {algorithm!r}")
@@ -469,7 +462,7 @@ def lingam_corr_edges(
         raise ValueError(f"parallelism must be 'unit' or 'pair', got {parallelism!r}")
     spark = matrix.sparkSession
     step_ms, offset_ms = label_step_ms(bin_size, method, bin_diff)
-    meta = {u: (_to_utc_ms(t0), nb) for u, (t0, nb) in unit_meta.items()}
+    meta = {u: (to_utc_ms(t0), nb) for u, (t0, nb) in unit_meta.items()}
     out_cols = ["unit", "src_eid", "dst_eid", "directed", "weight"]
 
     def fit_sub(unit: str, mdf: pd.DataFrame, a_eid: int, b_eid: int):

@@ -7,31 +7,25 @@ part of the engine: match each ``tokens array<int32>`` against the
 template dictionary (constant positions must equal, wildcard positions
 match anything) — grok semantics over token ids.
 
-Three interchangeable implementations (tests assert they agree):
+Two interchangeable implementations (tests assert they agree):
 
 * ``parse_tokens_arrow`` — scalar ``arrow_udf`` (PySpark 4.x): the
   kernel receives the ``list<int32>`` column as a raw Arrow ListArray
   and matches against the flat int32 values buffer with one fancy-index
   gather per length group — NO per-row Python objects anywhere.  The
-  PIPELINE DEFAULT: measured ~1.5x faster than the pandas kernel on the
-  bench corpus (8.4 s -> 5.6 s at scale 2000 / 8 cores) because the
-  Arrow->pandas conversion of a list column materializes one numpy
-  object per row and ``np.stack`` re-copies them; reading the
-  offsets/values buffers directly skips both.
-* ``parse_tokens_pandas`` — Arrow-batched ``pandas_udf``: templates are
-  shipped once per executor via closure capture; each batch is matched
-  with numpy broadcasting grouped by token-array length.  Same
-  north-rule "vectorized pandas/Arrow UDF" form; kept as the fallback
-  for PySpark < 4 deployments (no ``arrow_udf``) and as the
-  cross-implementation witness in the impls-agree test.
+  pipeline's parse kernel: measured ~1.5x faster than a ``pandas_udf``
+  formulation on the bench corpus (8.4 s -> 5.6 s at scale 2000 / 8
+  cores) because the Arrow->pandas conversion of a list column
+  materializes one numpy object per row and ``np.stack`` re-copies
+  them; reading the offsets/values buffers directly skips both.
 * ``parse_tokens`` — pure Catalyst alternative: per-(length, wildcard
   mask) broadcast hash joins on the masked token subsequence.  Zero
-  Python; useful where a deployment forbids Python workers.  (Measured
-  ~10x slower than the Python kernels here: JVM row-at-a-time
-  expression eval loses to numpy broadcasting for
-  many-templates-per-row matching.)
+  Python; the test reference and the streaming-ingest path, and usable
+  where a deployment forbids Python workers.  (Measured ~10x slower
+  than the Python kernel here: JVM row-at-a-time expression eval loses
+  to numpy broadcasting for many-templates-per-row matching.)
 
-Both Python kernels share a per-length match plan (``_build_plan``):
+The Python kernel uses a per-length match plan (``_build_plan``):
 dense numpy broadcast compare while a length has few templates, and a
 mask-grouped hash lookup (gather mask columns -> rolling hash ->
 searchsorted -> exact verify) once it has many — real amulog
@@ -47,7 +41,6 @@ bit-identical (per-row token-array equality, BASELINE.json).
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -79,7 +72,7 @@ def parse_tokens(df: DataFrame, template_dim) -> DataFrame:
     The round-1 formulation of the broadcast join silently DROPPED rows
     sharing a token length with a template but matching none (VERDICT r1
     bug #1: inner-join + post-filter); these are plain left joins, and
-    the impls-agree test pins ``parse_tokens_pandas`` equivalence on
+    the impls-agree test pins ``parse_tokens_arrow`` equivalence on
     same-length-unmatched corpora.
     """
     spark = df.sparkSession
@@ -191,7 +184,7 @@ def _key_hash(mat: np.ndarray) -> np.ndarray:
 
 
 def _build_plan(template_dim) -> dict[int, tuple]:
-    """Per-length match plan for the Python kernels.
+    """Per-length match plan for the Python kernel.
 
     length -> ("dense", gids, pats): templates few enough that one
     numpy broadcast compare (wildcard = -1 matches anything) is cheapest.
@@ -256,8 +249,8 @@ def _match_length(gather, entry) -> np.ndarray:
     """Smallest matching gid per row (``_NO_MATCH`` = none) for one
     length group.  ``gather(positions)`` returns the (n_rows, k) token
     matrix at those positions — the arrow kernel gathers straight from
-    the flat values buffer, the pandas kernel slices its stacked matrix,
-    so the matching logic (and its tests) is shared."""
+    the flat values buffer, so the matching logic (and its tests) stays
+    independent of the Arrow buffer layout."""
     if entry[0] == "dense":
         _, gids, pats = entry
         mat = gather(np.arange(pats.shape[1]))
@@ -302,7 +295,7 @@ def parse_tokens_arrow(df: DataFrame, template_dim) -> DataFrame:
     offsets are reconstructed from ``n_tok`` (the table invariant
     ``n_tok == len(tokens)``, BASELINE input_hint), and each length
     group becomes one ``flat[offsets + arange(L)]`` gather feeding the
-    same broadcast compare as the pandas kernel.  Only ``tokens`` and
+    shared ``_match_length`` compare.  Only ``tokens`` and
     ``n_tok`` ship to Python; ``gid`` comes back — the rest of the row
     never leaves the JVM, so the token-array pass-through invariant is
     structural.
@@ -354,33 +347,3 @@ def parse_tokens_arrow(df: DataFrame, template_dim) -> DataFrame:
 
     return df.withColumn("gid", _match("tokens", "n_tok").cast("int"))
 
-
-def parse_tokens_pandas(df: DataFrame, template_dim) -> DataFrame:
-    """Same semantics through an Arrow-batched pandas UDF (no per-row Python)."""
-    plan = _build_plan(template_dim)
-    if not plan:
-        return df.withColumn("gid", F.lit(None).cast("int"))
-
-    @F.pandas_udf(T.IntegerType())
-    def _match(tokens: pd.Series, n_tok: pd.Series) -> pd.Series:
-        out = np.full(len(tokens), -1, dtype=np.int64)
-        # the table already carries n_tok — a tokens.map(len) here would
-        # be one interpreted Python len() per row (~31M calls per bench
-        # run, measured ~4% of the whole parse stage)
-        lengths = n_tok.to_numpy()
-        for length, entry in plan.items():
-            sel = np.nonzero(lengths == length)[0]
-            if sel.size == 0:
-                continue
-            mat = np.stack(tokens.iloc[sel].to_numpy())  # (n_rows, length)
-
-            def gather(cols, mat=mat):
-                return mat[:, cols]
-
-            cand = _match_length(gather, entry)
-            hit = cand < _NO_MATCH
-            # smallest matching gid wins (same tie-break as parse_tokens)
-            out[sel[hit]] = cand[hit]
-        return pd.Series(out).where(pd.Series(out) >= 0).astype("Int32")
-
-    return df.withColumn("gid", _match("tokens", "n_tok").cast("int"))

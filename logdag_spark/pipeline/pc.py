@@ -33,6 +33,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from logdag_spark.config import to_utc_ms
 from logdag_spark.session import kernel_groups, local_frame
 
 EDGE_SCHEMA = (
@@ -333,12 +334,6 @@ def label_step_ms(
     return step, offset
 
 
-def _to_utc_ms(t0: datetime) -> int:
-    from logdag_spark.config import to_utc_ms
-
-    return to_utc_ms(t0)
-
-
 def assemble_unit_matrix(
     mdf: pd.DataFrame, t0_ms: int, nb: int, step_ms: int, offset_ms: int = 0
 ) -> tuple[np.ndarray, np.ndarray]:
@@ -377,7 +372,7 @@ def pc_edges(
     """
     spark = matrix.sparkSession
     step_ms, offset_ms = label_step_ms(bin_size, method, bin_diff)
-    meta = {u: (_to_utc_ms(t0), nb) for u, (t0, nb) in unit_meta.items()}
+    meta = {u: (to_utc_ms(t0), nb) for u, (t0, nb) in unit_meta.items()}
 
     def kernel(mdf: pd.DataFrame, ndf: pd.DataFrame) -> pd.DataFrame:
         if len(mdf) == 0:

@@ -33,11 +33,7 @@ from logdag_spark.pipeline.correlate import (
     unit_specs,
 )
 from logdag_spark.pipeline.enrich import enrich
-from logdag_spark.pipeline.parse import (
-    parse_tokens,
-    parse_tokens_arrow,
-    parse_tokens_pandas,
-)
+from logdag_spark.pipeline.parse import parse_tokens_arrow
 from logdag_spark.pipeline.pc import orient_depth0_edges, pc_edges
 from logdag_spark.pipeline.pknowledge import (
     build_noedge,
@@ -79,7 +75,6 @@ def run_pipeline(
     dt_range: tuple[datetime, datetime],
     cfg: PipelineConfig | None = None,
     catalog: Catalog | None = None,
-    use_pandas_parse: bool = True,
     apply_filters: bool = True,
     pk_context: dict | None = None,
     checkpoint_stages: tuple[str, ...] = (
@@ -98,20 +93,6 @@ def run_pipeline(
     instead of paying two pure-serial collect jobs per run.  When absent
     they are collected from the DataFrames (the dims are tiny)."""
     cfg = cfg or PipelineConfig()
-    # use_pandas_parse=True selects the vectorized Python kernel family:
-    # the scalar-arrow_udf kernel on PySpark 4.x, the pandas_udf kernel
-    # otherwise (same semantics, impls-agree-tested); False selects the
-    # pure-Catalyst joins for Python-worker-free deployments
-    if use_pandas_parse:
-        _parse = (
-            parse_tokens_arrow if hasattr(F, "arrow_udf") else parse_tokens_pandas
-        )
-    else:
-        _parse = parse_tokens
-
-    def parse(df: DataFrame, tdim: DataFrame) -> DataFrame:
-        return _parse(df, template_specs if template_specs is not None else tdim)
-
     def ck(df: DataFrame, name: str, partition_by=None) -> DataFrame:
         if catalog is None or name not in checkpoint_stages:
             return df
@@ -125,7 +106,9 @@ def run_pipeline(
             return catalog.write(df, name, stage=name)
         return df.cache()
 
-    parsed = parse(tokens, template_dim)
+    parsed = parse_tokens_arrow(
+        tokens, template_specs if template_specs is not None else template_dim
+    )
     enriched = enrich(parsed, host_meta, template_dim)
     routed = route(enriched)
     if catalog and "events_ts" in checkpoint_stages:
@@ -242,7 +225,7 @@ def run_pipeline(
     bin_diff = cfg.bin_diff if cfg.ci_bin_method != "sequential" else None
 
     def _unit_meta():
-        # naive datetimes are UTC by convention (pc._to_utc_ms handles both)
+        # naive datetimes are UTC by convention (config.to_utc_ms handles both)
         nmap = dict(nb_rows)
         return {
             unit: (dts, int(nmap[unit])) for unit, _h, _a, dts, _dte in specs

@@ -7,11 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from logdag_spark import fixtures as fx
-from logdag_spark.pipeline import (
-    parse_tokens,
-    parse_tokens_arrow,
-    parse_tokens_pandas,
-)
+from logdag_spark.pipeline import parse_tokens, parse_tokens_arrow
 
 
 @pytest.fixture(scope="module")
@@ -19,9 +15,7 @@ def labeled(spark):
     return fx.gen_tokens(spark, scale=0.05).cache()
 
 
-@pytest.mark.parametrize(
-    "impl", [parse_tokens, parse_tokens_pandas, parse_tokens_arrow]
-)
+@pytest.mark.parametrize("impl", [parse_tokens, parse_tokens_arrow])
 def test_parse_exact(spark, labeled, impl):
     tdim = fx.template_dim(spark)
     parsed = impl(fx.contract(labeled), tdim)
@@ -33,9 +27,7 @@ def test_parse_exact(spark, labeled, impl):
     assert j.count() == labeled.count()  # no dup matches, no drops
 
 
-@pytest.mark.parametrize(
-    "impl", [parse_tokens, parse_tokens_pandas, parse_tokens_arrow]
-)
+@pytest.mark.parametrize("impl", [parse_tokens, parse_tokens_arrow])
 def test_unmatched_rows_keep_null_gid(spark, impl):
     """Rows matching no template survive with gid NULL — including rows
     whose token length EQUALS a template length but whose constants match
@@ -58,10 +50,10 @@ def test_unmatched_rows_keep_null_gid(spark, impl):
 
 def test_large_dictionary_hashed_path(spark):
     """Above ``_DENSE_MAX_PER_LENGTH`` templates per length the Python
-    kernels switch from the dense broadcast compare to mask-grouped hash
+    kernel switches from the dense broadcast compare to mask-grouped hash
     lookup (real amulog dictionaries run to thousands of templates —
-    measured 58 ms vs 19.4 s per 64k-row batch at 1200 templates).  All
-    three impls must agree on a dictionary big enough to force the
+    measured 58 ms vs 19.4 s per 64k-row batch at 1200 templates).  Both
+    impls must agree on a dictionary big enough to force the
     hashed plan, including the all-wildcard fallback (length 7) and
     junk rows that match nothing (length 9 has no wildcard)."""
     from logdag_spark.pipeline.parse import _DENSE_MAX_PER_LENGTH, _build_plan
@@ -97,9 +89,7 @@ def test_large_dictionary_hashed_path(spark):
     )
     a = parse_tokens(corpus, specs).select("doc_id", "gid")
     b = parse_tokens_arrow(corpus, specs).select("doc_id", "gid")
-    c = parse_tokens_pandas(corpus, specs).select("doc_id", "gid")
     assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
-    assert a.exceptAll(c).count() == 0 and c.exceptAll(a).count() == 0
     got = {r["doc_id"]: r["gid"] for r in b.collect()}
     wild7 = next(g for g, p in specs if len(p) == 7 and all(x < 0 for x in p))
     for g, pat in specs:
@@ -147,8 +137,6 @@ def test_impls_agree(spark, labeled):
     )
     corpus = fx.contract(labeled).unionByName(junk)
     a = parse_tokens(corpus, tdim).select("doc_id", "gid")
-    b = parse_tokens_pandas(corpus, tdim).select("doc_id", "gid")
     c = parse_tokens_arrow(corpus, tdim).select("doc_id", "gid")
     assert a.count() == corpus.count()
-    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
     assert a.exceptAll(c).count() == 0 and c.exceptAll(a).count() == 0

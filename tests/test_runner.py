@@ -233,39 +233,6 @@ def test_catalog_partial_write_not_resumable(spark, tmp_path):
     assert cat.exists("t1") and cat.read("t1").count() == 5
 
 
-def test_catalog_writer_version_v2(spark, tmp_path):
-    """``writer_version="v2"`` writes data-page-v2 checkpoints
-    (DELTA_BINARY_PACKED on the int64/timestamp columns — measured 27%
-    smaller on the ts-dominated events_ts table, BENCH/BASELINE.md r5)
-    that read back row-identical, and the session hadoop conf is
-    restored afterwards so unrelated writes keep the v1 default."""
-    import glob
-
-    import pyarrow.parquet as pq
-    from pyspark.sql import functions as F
-
-    df = spark.range(20000).select(
-        F.col("id").alias("k"),
-        F.timestamp_millis(F.lit(1700000000000) + F.col("id") * 737).alias("ts"),
-    )
-    with pytest.raises(ValueError, match="writer_version"):
-        Catalog(spark, str(tmp_path / "bad"), writer_version="v3")
-    cat = Catalog(spark, str(tmp_path / "wh"), writer_version="v2")
-    out = cat.write(df, "t2")
-    assert out.exceptAll(df).count() == 0 and df.exceptAll(out).count() == 0
-    f = glob.glob(str(tmp_path / "wh" / "t2" / "*.parquet"))[0]
-    md = pq.ParquetFile(f).metadata
-    encs = {
-        e
-        for rg in range(md.num_row_groups)
-        for ci in range(md.row_group(rg).num_columns)
-        for e in md.row_group(rg).column(ci).encodings
-    }
-    assert "DELTA_BINARY_PACKED" in encs
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    assert hconf.get("parquet.writer.version") is None
-
-
 def test_snmp_feature_pipeline(spark, inputs):
     """Mixed log+snmp run with the SNMP feature stage configured: raw
     snmp_feature samples are replaced by hostsum-derived feature
