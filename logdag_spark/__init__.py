@@ -10,7 +10,8 @@ as file:line).  Architecture is Spark-first (DataFrame/SQL + Catalyst), not
 a port: the reference's eager pandas loops become lazy declarative plans,
 its multiprocessing.Pool over (window x area) units becomes plain
 DataFrame partition parallelism, and its per-series numpy kernels become
-Arrow-batched ``applyInPandas`` grouped-map UDFs.
+Arrow-batched Python kernels (``mapInArrow`` for the series filter,
+``applyInPandas`` grouped maps per unit).
 """
 
 __version__ = "0.1.0"

@@ -8,10 +8,14 @@ here).  This module is a from-scratch implementation of:
 * PC-stable skeleton search (order-independent neighbor snapshots per
   depth level) with sepset bookkeeping and a depth cap
   (``skeleton_depth``, /root/reference/logdag/makedag.py:116-122);
+  the CI tests of a depth level run as batches — the k-th test of every
+  still-undecided pair in one call — with the sequential loop's tests,
+  removals and sepsets;
 * CI tests: Fisher-z partial correlation (gaussian) and the G-square test
   on binarized data (reference selects by ``ci_func``,
-  pc_input.py:19-27);  chi-square survival and the normal CDF are
-  implemented with stdlib math (scipy is absent);
+  pc_input.py:19-27), G-square tables for a whole batch from one numpy
+  ``bincount``;  chi-square survival and the normal CDF are implemented
+  with stdlib math (scipy is absent);
 * CPDAG orientation: v-structures from sepsets + Meek rules R1-R3.
 
 Spark shape: each analysis unit's matrix is small by construction
@@ -27,6 +31,7 @@ from __future__ import annotations
 
 import math
 from datetime import datetime, timedelta
+from functools import partial
 from itertools import combinations
 
 import numpy as np
@@ -104,8 +109,32 @@ def ci_test_fisherz(corr: np.ndarray, n: int, i: int, j: int, S: tuple[int, ...]
     return norm_sf2(z)
 
 
+def ci_fisherz_batch(
+    corr: np.ndarray, n: int, x: np.ndarray, y: np.ndarray, S: np.ndarray
+) -> np.ndarray:
+    """:func:`ci_test_fisherz` p-values for a batch of tests, one at a
+    time: a stacked ``pinv`` would not be bit-identical to the scalar."""
+    return np.array(
+        [ci_test_fisherz(corr, n, i, j, tuple(s)) for i, j, s in zip(x, y, S)]
+    )
+
+
 def ci_test_gsq(data: np.ndarray, i: int, j: int, S: tuple[int, ...]) -> float:
-    """G-square CI test for binary data.
+    """G-square CI test p-value for one test: :func:`ci_gsq_batch` of one."""
+    s = np.asarray(S, dtype=np.int64).reshape(1, len(S))
+    return float(ci_gsq_batch(data, np.array([i]), np.array([j]), s)[0])
+
+
+# elements per chunk of the (tests x bins) cell-index matrix: 32 MB of intp
+_GSQ_CHUNK = 1 << 22
+
+
+def ci_gsq_batch(
+    data: np.ndarray, x: np.ndarray, y: np.ndarray, S: np.ndarray
+) -> np.ndarray:
+    """G-square CI test p-values for binary data, one per test
+    ``(x[t], y[t] | S[t])``; ``S`` is (tests x |S|), every test of a batch
+    conditions on the same number of variables.
 
     G² = 2 Σ observed·ln(observed/expected) over the (x, y) table within
     each configuration of S; dof = 2^|S| for binary variables.  When the
@@ -113,36 +142,51 @@ def ci_test_gsq(data: np.ndarray, i: int, j: int, S: tuple[int, ...]) -> float:
     and we conservatively keep the edge (p = 0), the standard gsq-package
     heuristic (reference selects this test for binarized input,
     /root/reference/logdag/pc_input.py:19-22).
+
+    All tests' tables come from one ``bincount``; the arithmetic per test
+    is the scalar one, so p-values do not depend on the batch: within a
+    configuration the cells are summed in the order 00, 01, 10, 11,
+    configurations accumulate in order, and ``chi2_sf`` runs per test.
     """
     n = data.shape[0]
-    dof = 2 ** len(S)
+    n_tests, d = S.shape
+    dof = 2**d
     if n < 10 * dof:
-        return 0.0
-    x = data[:, i].astype(np.int64)
-    y = data[:, j].astype(np.int64)
-    if len(S) == 0:
-        cfg = np.zeros(n, dtype=np.int64)
-        n_cfg = 1
-    else:
-        sub = data[:, list(S)].astype(np.int64)
-        weights = (2 ** np.arange(len(S))).astype(np.int64)
-        cfg = sub @ weights
-        n_cfg = 2 ** len(S)
-    # counts[cfg, x, y]
-    flat = (cfg * 4 + x * 2 + y).astype(np.int64)
-    counts = np.bincount(flat, minlength=n_cfg * 4).reshape(n_cfg, 2, 2).astype(float)
-    g2 = 0.0
-    for k in range(n_cfg):
-        tab = counts[k]
-        tot = tab.sum()
-        if tot == 0:
-            continue
-        rows = tab.sum(axis=1, keepdims=True)
-        cols = tab.sum(axis=0, keepdims=True)
-        exp = rows @ cols / tot
-        nz = tab > 0
-        g2 += 2.0 * float((tab[nz] * np.log(tab[nz] / exp[nz])).sum())
-    return chi2_sf(g2, dof)
+        return np.zeros(n_tests)
+    cells = 4 * dof
+    # per variable its n bins, in the narrowest type that holds a cell index
+    cols_of = np.ascontiguousarray(
+        np.asarray(data).T, dtype=np.min_scalar_type(cells - 1)
+    )
+    g2 = np.empty(n_tests)
+    step = max(1, _GSQ_CHUNK // max(n, 1))
+    for lo in range(0, n_tests, step):
+        hi = min(lo + step, n_tests)
+        # cell index per (test, bin): cfg * 4 + x * 2 + y, cfg = Σ S_k 2^k,
+        # offset per test so that one bincount yields every table
+        code = cols_of[x[lo:hi]] * 2 + cols_of[y[lo:hi]]
+        for k in range(d):
+            code += cols_of[S[lo:hi, k]] << (k + 2)
+        flat = code.astype(np.intp)
+        flat += (np.arange(hi - lo) * cells)[:, None]
+        tab = (
+            np.bincount(flat.ravel(), minlength=(hi - lo) * cells)
+            .reshape(hi - lo, dof, 2, 2)
+            .astype(float)
+        )
+        rows = tab.sum(axis=3)
+        cols = tab.sum(axis=2)
+        # an empty configuration (tot 0) has no nonzero cell: divide by 1
+        tot = np.maximum(rows.sum(axis=2), 1.0)
+        exp = rows[:, :, :, None] * cols[:, :, None, :] / tot[:, :, None, None]
+        ratio = np.divide(tab, exp, out=np.ones_like(tab), where=tab > 0)
+        term = tab * np.log(ratio)
+        s = ((term[..., 0, 0] + term[..., 0, 1]) + term[..., 1, 0]) + term[..., 1, 1]
+        acc = np.zeros(hi - lo)
+        for k in range(dof):
+            acc += 2.0 * s[:, k]
+        g2[lo:hi] = acc
+    return np.array([chi2_sf(float(v), dof) for v in g2])
 
 
 # --------------------------------------------------------------- PC-stable
@@ -157,38 +201,63 @@ def pc_skeleton_stable(
 ):
     """PC-stable skeleton: returns (adjacency bool matrix, sepsets dict).
 
-    ``ci(i, j, S) -> pval``.  Neighbor sets are frozen per depth level so
+    ``ci(x, y, S) -> pvals`` tests a batch: ``x``, ``y`` are index arrays
+    and ``S`` is (tests x depth).  Neighbor sets are frozen per depth level so
     edge-removal order cannot change the result (the ``stable`` method the
     reference configures, /root/reference/logdag/data/config.conf.default:176).
     ``init_adj`` encodes prior-knowledge noedge pruning (G7,
     /root/reference/logdag/pknowledge.py:82-91): start from complete minus
     forbidden instead of complete.
+
+    With frozen neighbor sets a pair's fate at one level depends only on
+    its own tests: visiting i in ascending order, the pair (a, b), a < b,
+    tests (a, b, S) for S over the subsets of a's other neighbors, then
+    (b, a, S) over b's, and the first p-value above ``alpha`` removes it.
+    So a level runs as batches: the k-th test of every still-undecided
+    pair in one ``ci`` call, for k = 0, 1, ... (depth 0 is two calls, one
+    per orientation).  Exactly the sequential loop's tests run, each in
+    its own orientation, and removals and sepsets are applied in its
+    visiting order.
     """
     adj = np.ones((p, p), dtype=bool) if init_adj is None else init_adj.copy()
     np.fill_diagonal(adj, False)
     sepsets: dict[tuple[int, int], tuple[int, ...]] = {}
     depth = 0
-    while True:
-        if max_depth >= 0 and depth > max_depth:
-            break
-        frozen = adj.copy()
-        any_candidate = False
-        for i in range(p):
-            nbrs_i = np.nonzero(frozen[i])[0]
-            for j in nbrs_i:
-                if not adj[i, j]:
-                    continue
-                others = [k for k in nbrs_i if k != j]
-                if len(others) < depth:
-                    continue
-                any_candidate = True
-                for S in combinations(others, depth):
-                    if ci(i, j, S) > alpha:
-                        adj[i, j] = adj[j, i] = False
-                        sepsets[(i, j)] = sepsets[(j, i)] = S
-                        break
-        if not any_candidate:
-            break
+    while max_depth < 0 or depth <= max_depth:
+        nbrs = [np.nonzero(adj[i])[0].tolist() for i in range(p)]
+        if not any(len(nb) > depth for nb in nbrs):
+            break  # no pair has a conditioning set of this size
+
+        # adj is this level's frozen snapshot until the removals below
+        def pair_tests(a, b):
+            for i, j in ((a, b), (b, a)):
+                if adj[i, j] and len(nbrs[i]) > depth:
+                    others = [k for k in nbrs[i] if k != j] if depth else ()
+                    for S in combinations(others, depth):
+                        yield i, j, S
+
+        pairs = np.argwhere(np.triu(adj | adj.T)).tolist()
+        live = [pair_tests(a, b) for a, b in pairs]
+        removed = []
+        while live:
+            batch = [(t, q) for q in live if (t := next(q, None)) is not None]
+            if not batch:
+                break
+            x, y, S = zip(*(t for t, _ in batch))
+            pvals = ci(
+                np.array(x, dtype=np.int64),
+                np.array(y, dtype=np.int64),
+                np.array(S, dtype=np.int64).reshape(len(batch), depth),
+            )
+            live = []
+            for (t, q), pv in zip(batch, pvals):
+                if pv > alpha:
+                    removed.append(t)
+                else:
+                    live.append(q)
+        for i, j, S in sorted(removed):
+            adj[i, j] = adj[j, i] = False
+            sepsets[(i, j)] = sepsets[(j, i)] = S
         depth += 1
     return adj, sepsets
 
@@ -284,11 +353,13 @@ def estimate_dag_matrix(
         corr = np.corrcoef(data.astype(float), rowvar=False)
     corr = np.nan_to_num(corr)
     if ci_func == "fisherz":
-        def ci(i, j, S):
-            return ci_test_fisherz(corr, n, i, j, S)
+        ci = partial(ci_fisherz_batch, corr, n)
     elif ci_func == "gsq":
-        def ci(i, j, S):
-            return ci_test_gsq(data, i, j, S)
+        if not np.isin(data, (0, 1)).all():
+            raise ValueError("gsq tests binary data: pass binarize=True")
+        # (bins x events) view of an (events x bins) uint8 array: every
+        # batch gathers whole variables without a copy of the matrix
+        ci = partial(ci_gsq_batch, np.ascontiguousarray(data.T, dtype=np.uint8).T)
     else:
         raise ValueError(f"unknown ci_func {ci_func!r}")
     adj, sepsets = pc_skeleton_stable(p, ci, alpha, init_adj, max_depth)
@@ -420,31 +491,34 @@ def orient_depth0_edges(edges: DataFrame) -> DataFrame:
     over the (small) surviving edge set — the heavy lifting stays in the
     single-shuffle sufficient-statistics plan.
     """
+    return kernel_groups(edges, "unit").applyInPandas(orient_depth0_unit, EDGE_SCHEMA)
 
-    def kernel(edf: pd.DataFrame) -> pd.DataFrame:
-        if len(edf) == 0:
-            return pd.DataFrame(
-                columns=["unit", "src_eid", "dst_eid", "directed", "weight"]
-            )
-        unit = edf["unit"].iloc[0]
-        nodes = np.sort(
-            np.unique(np.concatenate([edf["src_eid"].values, edf["dst_eid"].values]))
+
+def orient_depth0_unit(edf: pd.DataFrame) -> pd.DataFrame:
+    """:func:`orient_depth0_edges` on one unit's skeleton rows."""
+    if len(edf) == 0:
+        return pd.DataFrame(
+            columns=["unit", "src_eid", "dst_eid", "directed", "weight"]
         )
-        pos = {e: k for k, e in enumerate(nodes)}
-        p = len(nodes)
-        adj = np.zeros((p, p), dtype=bool)
-        wmat = np.zeros((p, p))
-        for _, r in edf.iterrows():
-            i, j = pos[r["src_eid"]], pos[r["dst_eid"]]
-            adj[i, j] = adj[j, i] = True
-            wmat[i, j] = wmat[j, i] = r["weight"]
+    unit = edf["unit"].iloc[0]
+    src, dst = edf["src_eid"].to_numpy(), edf["dst_eid"].to_numpy()
+    nodes = np.unique(np.concatenate([src, dst]))
+    i, j = np.searchsorted(nodes, src), np.searchsorted(nodes, dst)
+    p = len(nodes)
+    adj = np.zeros((p, p), dtype=bool)
+    adj[i, j] = adj[j, i] = True
+    # both cells of each row in row order: a cell written twice keeps
+    # the later weight
+    cell = np.column_stack([i * p + j, j * p + i]).ravel()
+    weight = np.repeat(edf["weight"].to_numpy(dtype=float), 2)
+    last = len(cell) - 1 - np.unique(cell[::-1], return_index=True)[1]
+    wmat = np.zeros((p, p))
+    wmat.flat[cell[last]] = weight[last]
 
-        class _EmptySepsets(dict):
-            # depth-0: every non-adjacent pair was separated by the empty set
-            def get(self, key, default=None):
-                return ()
+    class _EmptySepsets(dict):
+        # depth-0: every non-adjacent pair was separated by the empty set
+        def get(self, key, default=None):
+            return ()
 
-        g = orient_cpdag(adj, _EmptySepsets())
-        return graph_to_edges(unit, g, wmat, nodes)
-
-    return kernel_groups(edges, "unit").applyInPandas(kernel, EDGE_SCHEMA)
+    g = orient_cpdag(adj, _EmptySepsets())
+    return graph_to_edges(unit, g, wmat, nodes)

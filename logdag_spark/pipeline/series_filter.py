@@ -15,9 +15,13 @@ Fresh implementations of the reference's log-event filters
 * ``remove_linear``   — drop series whose cumulative-count curve is close
   to a straight line (filter_log.py:162-185).
 
-All rules for one series run inside a single ``applyInPandas`` grouped-map
-kernel over (measure, host, key) — one shuffle total, numpy-vectorized
-inside (scipy is absent; FFT via numpy.fft, ``argrelmax`` re-derived).
+All rules for one series run inside one ``mapInArrow`` kernel call per
+partition: the pre-binned rows are hash-partitioned by series and sorted
+by (series, bin offset), and the kernel walks each Arrow batch series by
+series, carrying a series that straddles two batches over to the next —
+one shuffle total, one Python call per batch rather than per series,
+numpy-vectorized inside (scipy is absent; FFT via numpy.fft,
+``argrelmax`` re-derived as an O(n) running maximum).
 At 10^12 rows the group count is |series| x |chunks|, each group small and
 independent — ideal executor parallelism, no driver involvement.
 
@@ -38,15 +42,22 @@ from __future__ import annotations
 
 import math
 from datetime import datetime, timedelta
-from typing import Iterable
+from functools import partial
+from typing import Iterable, Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import (
+    DoubleType, StringType, StructField, StructType, TimestampType,
+)
 
 from logdag_spark.config import PipelineConfig, str2dur, to_utc_ms
-from logdag_spark.session import kernel_groups
+from logdag_spark.session import kernel_partitions
 
 
 # ---------------------------------------------------------------- numerics
@@ -55,16 +66,36 @@ from logdag_spark.session import kernel_groups
 def argrelmax(a: np.ndarray, order: int) -> np.ndarray:
     """Indices of local maxima: a[i] > a[i±k] for all k=1..order, edges
     clipped (scipy.signal.argrelmax(mode='clip') semantics, used at
-    period.py:50 — re-derived, scipy is not available)."""
+    period.py:50 — re-derived, scipy is not available).
+
+    Compares each point with the maxima of its left and right windows,
+    taken by one O(n) running-maximum pass over the edge-padded array
+    (van Herk / Gil-Werman).  A window wider than the array holds no more
+    values than the whole clipped side, so ``order`` is capped at n; a
+    NaN in a window propagates through the maximum and fails the test,
+    as it fails every comparison."""
     n = len(a)
     if n == 0:
         return np.array([], dtype=int)
-    ok = np.ones(n, dtype=bool)
-    for k in range(1, order + 1):
-        plus = np.concatenate([a[k:], np.repeat(a[-1], min(k, n))])[:n]
-        minus = np.concatenate([np.repeat(a[0], min(k, n)), a[:-k]])[:n]
-        ok &= (a > plus) & (a > minus)
-    return np.nonzero(ok)[0]
+    if order < 1:
+        return np.arange(n)
+    w = min(order, n)
+    padded = np.pad(a, w, mode="edge")
+    wmax = _window_max(padded, w)
+    # window of a[i-w .. i-1] starts at padded[i], of a[i+1 .. i+w] at i+w+1
+    return np.nonzero((a > wmax[:n]) & (a > wmax[w + 1 : w + 1 + n]))[0]
+
+
+def _window_max(x: np.ndarray, w: int) -> np.ndarray:
+    """max(x[s : s + w]) for every start s: per block of w, the running
+    maximum from the left and from the right; a window spans the tail of
+    one block and the head of the next."""
+    m = len(x)
+    blocks = -(-m // w)
+    x = np.pad(x, (0, blocks * w - m), mode="edge").reshape(blocks, w)
+    head = np.maximum.accumulate(x, axis=1).ravel()
+    tail = np.maximum.accumulate(x[:, ::-1], axis=1)[:, ::-1].ravel()
+    return np.maximum(tail[: m - w + 1], head[w - 1 : m])
 
 
 def fourier_test_periodic(
@@ -324,10 +355,112 @@ _ROW_SCHEMA = (
     "measure string, host string, key string, area string, "
     "group string, ts timestamp, val double"
 )
-_VERDICT_SCHEMA = (
-    "measure string, host string, key string, area string, "
-    "group string, verdict string, ts timestamp, val double"
+_VERDICT_SCHEMA = StructType(
+    [StructField(c, StringType()) for c in (*SERIES_COLS, "verdict")]
+    + [StructField("ts", TimestampType()), StructField("val", DoubleType())]
 )
+_VERDICT_ARROW = to_arrow_schema(_VERDICT_SCHEMA)
+
+
+def series_verdicts(
+    batches: Iterator[pa.RecordBatch],
+    sf: SeriesFilter,
+    t0_ms: int,
+    term_s: float,
+    weighted: bool,
+) -> Iterator[pa.RecordBatch]:
+    """The filter chain over one partition of fine-binned series rows
+    (SERIES_COLS, boff, w, mn, mx), sorted by series and ``boff``; at
+    most one verdict batch out per batch in.
+
+    Every series but a batch's last is complete.  The last one's rows
+    carry over to the next batch, so a series that straddles batches is
+    judged whole, and only one series is ever held back."""
+    carry = None
+    for batch in batches:
+        tab = pa.Table.from_batches([batch])
+        if carry is not None:
+            tab = pa.concat_tables([carry, tab])
+        if tab.num_rows == 0:
+            continue
+        starts = _series_starts(tab)
+        out = _verdict_batch(tab, starts[:-1], sf, t0_ms, term_s, weighted)
+        carry = tab.slice(starts[-2])
+        if out is not None:
+            yield out
+    if carry is not None:
+        out = _verdict_batch(
+            carry, [0, carry.num_rows], sf, t0_ms, term_s, weighted
+        )
+        if out is not None:
+            yield out
+
+
+def _series_starts(tab: pa.Table) -> np.ndarray:
+    """Row index where each series of ``tab`` starts (null-aware key
+    change), then ``num_rows``."""
+    n = tab.num_rows
+    new = np.zeros(n + 1, dtype=bool)
+    new[0] = new[n] = True
+    for c in SERIES_COLS:
+        col = tab.column(c)
+        a, b = col.slice(0, n - 1), col.slice(1)
+        differs = pc.or_kleene(
+            pc.not_equal(a, b), pc.xor(pc.is_null(a), pc.is_null(b))
+        )
+        new[1:n] |= pc.fill_null(differs, False).to_numpy(zero_copy_only=False)
+    return np.nonzero(new)[0]
+
+
+def _verdict_batch(
+    tab: pa.Table,
+    bounds: np.ndarray | list[int],
+    sf: SeriesFilter,
+    t0_ms: int,
+    term_s: float,
+    weighted: bool,
+) -> pa.RecordBatch | None:
+    """Verdict rows of the series ``tab[bounds[k]:bounds[k+1]]``: one
+    ``raw`` row (events mode) or the series' ``replace`` rows, stamped at
+    bin starts; None when every series is dropped."""
+    boff_ms = tab.column("boff").to_numpy()
+    w = tab.column("w").to_numpy()
+    mn = tab.column("mn").to_numpy()
+    mx = tab.column("mx").to_numpy()
+    head, verdict, ms, val = [], [], [], []
+    for lo, hi in zip(bounds[:-1], bounds[1:]):
+        boff, wk = boff_ms[lo:hi] / 1000.0, w[lo:hi]
+        verdict_k, repl = sf.apply_binned(
+            boff, wk, float(wk.sum()), float(mx[lo:hi].max() - mn[lo:hi].min())
+        )
+        if verdict_k == "drop":
+            continue
+        if verdict_k == "raw" and not weighted:
+            out_ms, out_val, kind = np.zeros(1, np.int64), np.zeros(1), "raw"
+        elif verdict_k == "raw":
+            keep = (boff >= 0) & (boff < term_s)
+            out_ms, out_val, kind = boff_ms[lo:hi][keep], wk[keep], "replace"
+        else:
+            off, out_val = repl
+            out_ms, kind = np.rint(off * 1000.0).astype(np.int64), "replace"
+        head.append(np.full(len(out_ms), lo))
+        verdict += [kind] * len(out_ms)
+        ms.append(out_ms)
+        val.append(out_val)
+    if not head:
+        return None
+    null = np.array(verdict) == "raw"  # the raw verdict row has no ts, val
+    keys = tab.select(list(SERIES_COLS)).take(pa.array(np.concatenate(head)))
+    return pa.RecordBatch.from_arrays(
+        [keys.column(c).combine_chunks().cast(pa.string()) for c in SERIES_COLS]
+        + [
+            pa.array(verdict, pa.string()),
+            pa.array((t0_ms + np.concatenate(ms)) * 1000,
+                     pa.timestamp("us", tz="UTC"), mask=null),
+            pa.array(np.concatenate(val).astype(float), pa.float64(), mask=null),
+        ],
+        schema=_VERDICT_ARROW,
+    )
 
 
 def _naive(t0: datetime) -> pd.Timestamp:
@@ -406,9 +539,11 @@ def filter_series(
     Scale shape: the raw event stream NEVER crosses into Python.  Events
     are pre-aggregated JVM-side to the fine bin (:func:`fine_bin_ms`, 10 s
     under the default config) with map-side partial aggregation — one
-    shuffle carrying at most |series| x |fine bins| rows — and the grouped
-    kernel sees only those weighted bins plus exact raw (count, span)
-    stats.  Equivalence to the raw-exchange form is exact (see
+    shuffle carrying at most |series| x |fine bins| rows, partitioned by
+    series and sorted by (series, bin offset) — and the ``mapInArrow``
+    kernel (:func:`series_verdicts`, one call per partition) sees only
+    those weighted bins plus exact raw (count, span) stats.  Equivalence
+    to the raw-exchange form is exact (see
     :meth:`SeriesFilter.apply_binned`) and covered by tests against
     :func:`filter_series_rows`.
 
@@ -431,52 +566,11 @@ def filter_series(
         return filter_series_rows(routed, dt_range, cfg, measures)
 
     t0_ms = to_utc_ms(dt_range[0])
-    term_s = term.total_seconds()
-    sf = SeriesFilter(cfg, term)
+    kernel = partial(
+        series_verdicts, sf=SeriesFilter(cfg, term), t0_ms=t0_ms,
+        term_s=term.total_seconds(), weighted=output == "weighted",
+    )
     measures = list(measures)
-    t0_naive = _naive(dt_range[0])
-    weighted = output == "weighted"
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("boff")
-        boff = pdf["boff"].to_numpy(dtype="int64") / 1000.0
-        w = pdf["w"].to_numpy(dtype=float)
-        verdict, repl = sf.apply_binned(
-            boff, w, float(w.sum()), float(pdf["mx"].max() - pdf["mn"].min())
-        )
-        head = pdf.iloc[0]
-        if verdict == "drop":
-            out_off = out_cnt = np.array([])
-        elif verdict == "raw":
-            if not weighted:
-                return pd.DataFrame(
-                    {
-                        "measure": [head["measure"]],
-                        "host": [head["host"]],
-                        "key": [head["key"]],
-                        "area": [head["area"]],
-                        "group": [head["group"]],
-                        "verdict": ["raw"],
-                        "ts": [pd.NaT],
-                        "val": [np.nan],
-                    }
-                )
-            keep = (boff >= 0) & (boff < term_s)
-            out_off, out_cnt = boff[keep], w[keep]
-        else:
-            out_off, out_cnt = repl
-        return pd.DataFrame(
-            {
-                "measure": head["measure"],
-                "host": head["host"],
-                "key": head["key"],
-                "area": head["area"],
-                "group": head["group"],
-                "verdict": "replace",
-                "ts": t0_naive + pd.to_timedelta(out_off, unit="s"),
-                "val": out_cnt,
-            }
-        )
 
     target = routed.where(routed["measure"].isin(measures))
     rest = routed.where(~routed["measure"].isin(measures))
@@ -487,8 +581,12 @@ def filter_series(
         (F.min(off_ms) / 1000.0).alias("mn"),
         (F.max(off_ms) / 1000.0).alias("mx"),
     )
-    out = kernel_groups(pre, *SERIES_COLS).applyInPandas(kernel, _VERDICT_SCHEMA)
-    if weighted:
+    out = (
+        kernel_partitions(pre, *SERIES_COLS)
+        .sortWithinPartitions(*SERIES_COLS, "boff")
+        .mapInArrow(kernel, _VERDICT_SCHEMA)
+    )
+    if output == "weighted":
         return out.drop("verdict").unionByName(rest)
     # the verdict frame is consumed twice (raw keys + replaced rows) —
     # materialize once.  Through the catalog it lands on disk (heap

@@ -86,19 +86,24 @@ def get_spark(
     return spark
 
 
-def kernel_groups(df: DataFrame, *keys: str) -> GroupedData:
-    """``df.groupBy(*keys)`` for a grouped-map Python kernel, its input
-    hash-partitioned on ``keys`` to ``spark.sql.shuffle.partitions``.
+def kernel_partitions(df: DataFrame, *keys: str) -> DataFrame:
+    """``df`` hash-partitioned on ``keys`` to ``spark.sql.shuffle.partitions``
+    for a Python kernel: every key's rows in one partition.
 
     A kernel's input is small by design (pre-aggregated bins, one unit
     matrix), so AQE's byte-based coalescing would fold its exchange into
     one or two partitions and run every group's Python on one core.  AQE
-    never coalesces a repartition-by-number exchange, and that exchange
-    already satisfies the grouping, so the plan gains no extra shuffle.
-    Cogrouped frames pass through here on both sides so they stay
-    co-partitioned."""
+    never coalesces a repartition-by-number exchange."""
     n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    return df.repartition(n, *keys).groupBy(*keys)
+    return df.repartition(n, *keys)
+
+
+def kernel_groups(df: DataFrame, *keys: str) -> GroupedData:
+    """``df.groupBy(*keys)`` for a grouped-map Python kernel, over
+    :func:`kernel_partitions`.  That exchange already satisfies the
+    grouping, so the plan gains no extra shuffle.  Cogrouped frames pass
+    through here on both sides so they stay co-partitioned."""
+    return kernel_partitions(df, *keys).groupBy(*keys)
 
 
 def local_frame(
