@@ -75,11 +75,6 @@ class PipelineConfig:
     # lingam_input.py:28-40): algorithm direct|ica, coefficient floor
     lingam_algorithm: str = "direct"
     lingam_lower_limit: float = 0.05
-    # lingam-corr work distribution: 'unit' (pairs loop in the per-unit
-    # kernel; right for many narrow units) or 'pair' (grouping key is the
-    # pair itself; a single wide unit fans across the cluster at the cost
-    # of ~(p-1)x row duplication through the shuffle)
-    lingam_corr_parallelism: str = "unit"
     skeleton_depth: int = -1
     skeleton_threshold: float = 0.01
     binarize: bool = False

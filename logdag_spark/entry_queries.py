@@ -643,12 +643,18 @@ def _pair_suff_stats(filled: DataFrame):
 
     Replaces ``F.corr``: its Welford-style partials merge in partition
     order, so the 6th rounded decimal could depend on the session's
-    core count (see ``_spread``).  The counts are integer-valued
-    doubles, so n/Σx/Σy/Σxy/Σx²/Σy² are EXACT at any partitioning
-    (≤ 2^53) and the per-pair scalar r is bit-deterministic — and the
-    hash aggregate is also cheaper than the imperative corr buffer."""
-    a = filled.select(F.col("key").alias("type1"), "bin", F.col("cnt").alias("c1"))
-    b = filled.select(F.col("key").alias("type2"), "bin", F.col("cnt").alias("c2"))
+    core count (see ``_spread``).  The counts are integral, so
+    n/Σx/Σy/Σxy/Σx²/Σy² summed as ``decimal(38,0)`` are EXACT at any
+    partitioning and any magnitude a count reaches (a double sum is
+    exact only up to 2^53, which Σxy passes at cells near 2^27).  The
+    centred terms ``n·Σxy − Σx·Σy`` (and the two variances) are computed
+    in decimal too, where the cancellation is exact; only the final
+    square root and division run in double, so the per-pair scalar r is
+    bit-deterministic — and the hash aggregate is also cheaper than the
+    imperative corr buffer."""
+    dec = "decimal(38,0)"
+    a = filled.select(F.col("key").alias("type1"), "bin", F.col("cnt").cast(dec).alias("c1"))
+    b = filled.select(F.col("key").alias("type2"), "bin", F.col("cnt").cast(dec).alias("c2"))
     stats = (
         a.join(b, "bin")
         .where(F.col("type1") < F.col("type2"))
@@ -662,11 +668,14 @@ def _pair_suff_stats(filled: DataFrame):
             F.sum(F.col("c2") * F.col("c2")).alias("_syy"),
         )
     )
-    n = F.col("_n").cast("double")
+    n = F.col("_n").cast(dec)
     v1 = n * F.col("_sxx") - F.col("_sx") * F.col("_sx")
     v2 = n * F.col("_syy") - F.col("_sy") * F.col("_sy")
     cov = n * F.col("_sxy") - F.col("_sx") * F.col("_sy")
-    r = F.when((v1 > 0) & (v2 > 0), cov / F.sqrt(v1 * v2))
+    r = F.when(
+        (v1 > 0) & (v2 > 0),
+        cov.cast("double") / F.sqrt(v1.cast("double") * v2.cast("double")),
+    )
     return stats, r
 
 

@@ -25,7 +25,6 @@ from datetime import datetime, timedelta
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from logdag_spark.config import to_utc_ms
 from logdag_spark.pipeline.pc import EDGE_SCHEMA, NOEDGE_SCHEMA
@@ -421,7 +420,6 @@ def lingam_corr_edges(
     method: str = "sequential",
     bin_diff: timedelta | None = None,
     algorithm: str = "direct",
-    parallelism: str = "unit",
 ) -> DataFrame:
     """``lingam-corr`` — pairwise LiNGAM coefficients per unit
     (/root/reference/logdag/makedag.py:124-130 ->
@@ -436,21 +434,10 @@ def lingam_corr_edges(
     set, lingam_input.py:77-80 — for a no-path constraint on a 2-variable
     fit that is equivalent to not emitting the pair's edge).
 
-    Spark shape, ``parallelism``:
-
-    * ``'unit'`` (default) — same grouped-map fleet as
-      :func:`lingam_edges`; pairs loop inside the kernel (the reference
-      loops ``combinations(data.columns, 2)`` in-process too).  Right
-      when units are many and narrow: one shuffle of |series|×|bins|
-      rows, no duplication.
-    * ``'pair'`` — the grouping key is (unit, eid1, eid2) and each
-      series is joined into every pair it belongs to, so a SINGLE wide
-      unit fans out across the whole cluster instead of funneling its
-      p²/2 fits through one task (p=140 ⇒ 9,730 sequential 2-variable
-      fits in one kernel call under 'unit').  The price is ~(p-1)×
-      duplication of the unit's rows through the shuffle — worth it
-      exactly when units are few and wide; parity with 'unit' is
-      test-pinned.
+    Spark shape: the same grouped-map fleet as :func:`lingam_edges`;
+    pairs loop inside the per-unit kernel (the reference loops
+    ``combinations(data.columns, 2)`` in-process too), so one shuffle
+    of |series|×|bins| rows, no duplication.
     """
     from itertools import combinations
 
@@ -458,73 +445,15 @@ def lingam_corr_edges(
 
     if algorithm not in ("direct", "ica"):
         raise ValueError(f"invalid lingam algorithm {algorithm!r}")
-    if parallelism not in ("unit", "pair"):
-        raise ValueError(f"parallelism must be 'unit' or 'pair', got {parallelism!r}")
     spark = matrix.sparkSession
     step_ms, offset_ms = label_step_ms(bin_size, method, bin_diff)
     meta = {u: (to_utc_ms(t0), nb) for u, (t0, nb) in unit_meta.items()}
     out_cols = ["unit", "src_eid", "dst_eid", "directed", "weight"]
 
-    def fit_sub(unit: str, mdf: pd.DataFrame, a_eid: int, b_eid: int):
-        """Fit one pair from a (unit, eid, bin, cnt)-shaped sub-frame."""
-        t0_ms, nb = meta[unit]
-        mat, eids = assemble_unit_matrix(mdf, t0_ms, nb, step_ms, offset_ms)
-        pos = {int(e): k for k, e in enumerate(eids)}
-        # an all-zero series drops out of the sub-frame entirely; its
-        # column is the zero vector, matching the dense assembly
-        xa = mat[:, pos[a_eid]] if a_eid in pos else np.zeros(mat.shape[0])
-        xb = mat[:, pos[b_eid]] if b_eid in pos else np.zeros(mat.shape[0])
-        fit = fit_pair(xa, xb, algorithm=algorithm, lower_limit=lower_limit)
-        if fit is None:
-            return None
-        direction, coef = fit
-        src, dst = (a_eid, b_eid) if direction == 0 else (b_eid, a_eid)
-        return (unit, src, dst, True, coef)
-
     if noedge is None:
         noedge = local_frame(spark, [], NOEDGE_SCHEMA)
     else:
         noedge = noedge.select("unit", "eid1", "eid2").toDF("unit", "eid1", "eid2")
-
-    if parallelism == "pair":
-        eids_f = matrix.select("unit", "eid").distinct()
-        a_f, b_f = eids_f.alias("a"), eids_f.alias("b")
-        pairs = (
-            a_f.join(b_f, "unit")
-            .where(F.col("a.eid") < F.col("b.eid"))
-            .select("unit", F.col("a.eid").alias("eid1"), F.col("b.eid").alias("eid2"))
-            .join(
-                noedge.unionByName(
-                    noedge.select("unit", F.col("eid2").alias("eid1"),
-                                  F.col("eid1").alias("eid2"))
-                ),
-                ["unit", "eid1", "eid2"], "left_anti",
-            )
-        )
-        # equi-join on (unit, eid) against the pair memberships — an OR
-        # condition (eid == eid1 | eid == eid2) would degrade to a join
-        # on unit alone with a post-filter: |rows| × |pairs-per-unit|
-        # intermediate, quadratic in p on top of the intended fan-out
-        membership = pairs.select(
-            "unit", F.col("eid1").alias("eid"), "eid1", "eid2"
-        ).unionByName(
-            pairs.select("unit", F.col("eid2").alias("eid"), "eid1", "eid2")
-        )
-        fan = matrix.join(membership, ["unit", "eid"]).select(
-            "unit", "eid1", "eid2", "eid", "bin", "cnt"
-        )
-
-        def pair_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-            if len(pdf) == 0:
-                return pd.DataFrame(columns=out_cols)
-            unit = pdf["unit"].iloc[0]
-            e1, e2 = int(pdf["eid1"].iloc[0]), int(pdf["eid2"].iloc[0])
-            row = fit_sub(unit, pdf[["unit", "eid", "bin", "cnt"]], e1, e2)
-            return pd.DataFrame([row] if row else [], columns=out_cols)
-
-        return kernel_groups(fan, "unit", "eid1", "eid2").applyInPandas(
-            pair_kernel, EDGE_SCHEMA
-        )
 
     def kernel(mdf: pd.DataFrame, ndf: pd.DataFrame) -> pd.DataFrame:
         if len(mdf) == 0:

@@ -306,7 +306,6 @@ def run_pipeline(
             lower_limit=cfg.lingam_lower_limit, noedge=noedge,
             method=cfg.ci_bin_method, bin_diff=bin_diff,
             algorithm=cfg.lingam_algorithm,
-            parallelism=cfg.lingam_corr_parallelism,
         )
     elif cfg.cause_algorithm == "pc":
         edges = pc_edges(

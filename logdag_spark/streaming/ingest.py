@@ -10,9 +10,12 @@ table the batch pipeline reads:
     readStream(tokens) -> parse -> enrich -> route
       -> withWatermark(ts) -> window(bin) count
 
-The caller chooses the sink (e.g. ``foreachBatch`` appends into the
-partitioned layout the Catalog uses); the batch correlate/PC stages then
-run unchanged over the accumulating table.
+Parse is the batch pipeline's own ``parse_tokens_arrow``, so batch and
+streaming ingest classify every line by one implementation; a stream
+needs only what the batch pipeline needs, Python workers that can
+import the package.  The caller chooses the sink (e.g. ``foreachBatch``
+appends into the partitioned layout the Catalog uses); the batch
+correlate/PC stages then run unchanged over the accumulating table.
 """
 
 from __future__ import annotations
@@ -23,7 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from logdag_spark.pipeline.enrich import enrich
-from logdag_spark.pipeline.parse import parse_tokens
+from logdag_spark.pipeline.parse import parse_tokens_arrow
 from logdag_spark.pipeline.route import route
 
 
@@ -41,7 +44,9 @@ def streaming_counts(
     range-anchored bins are required, so the two stay consistent at
     bin_size granularity.
     """
-    routed = route(enrich(parse_tokens(token_stream, template_dim), host_meta, template_dim))
+    routed = route(
+        enrich(parse_tokens_arrow(token_stream, template_dim), host_meta, template_dim)
+    )
     interval = f"{int(bin_size.total_seconds())} seconds"
     return (
         routed.where(F.col("measure") != "unparsed")

@@ -27,7 +27,7 @@ from series_filter_reference import argrelmax_loop, filter_series_grouped
 from logdag_spark import fixtures as fx
 from logdag_spark.config import PipelineConfig
 from logdag_spark.fixtures.generator import DEFAULT_T0
-from logdag_spark.pipeline import enrich, parse_tokens, route
+from logdag_spark.pipeline import enrich, parse_tokens_arrow, route
 from logdag_spark.pipeline.pc import (
     ci_fisherz_batch,
     ci_gsq_batch,
@@ -213,7 +213,7 @@ def test_series_verdicts_empty_partition():
 def routed_log(spark):
     tdim, hmeta = fx.template_dim(spark), fx.host_meta(spark)
     df = fx.gen_tokens(spark, scale=0.3)
-    routed = route(enrich(parse_tokens(fx.contract(df), tdim), hmeta, tdim))
+    routed = route(enrich(parse_tokens_arrow(fx.contract(df), tdim), hmeta, tdim))
     return routed.where(F.col("measure") != "unparsed").localCheckpoint(eager=True)
 
 

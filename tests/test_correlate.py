@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 from logdag_spark import fixtures as fx
 from logdag_spark.config import PipelineConfig
 from logdag_spark.fixtures.generator import DEFAULT_T0
-from logdag_spark.pipeline import discretize, enrich, parse_tokens, route
+from logdag_spark.pipeline import discretize, enrich, parse_tokens_arrow, route
 from logdag_spark.pipeline.correlate import (
     assign_units,
     event_dim,
@@ -34,7 +34,7 @@ def slice_outputs(spark):
     cfg = PipelineConfig()
     tdim, hmeta = fx.template_dim(spark), fx.host_meta(spark)
     df = fx.gen_tokens(spark, scale=0.5)
-    routed = route(enrich(parse_tokens(fx.contract(df), tdim), hmeta, tdim))
+    routed = route(enrich(parse_tokens_arrow(fx.contract(df), tdim), hmeta, tdim))
     binned = discretize(
         routed.where(F.col("measure") != "unparsed"), DT_RANGE, timedelta(minutes=5)
     )

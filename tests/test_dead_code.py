@@ -1,7 +1,10 @@
 """Guard against code nothing runs: every top-level function and class in
 ``logdag_spark/`` is referenced somewhere in the repo's Python files, and
 every ``PipelineConfig`` field is read outside ``config.py`` (directly, as
-``.<field>`` or ``<field>=``, or through a config property).
+``.<field>`` or ``<field>=``, or through a config property).  Reference
+oracles under ``tests/`` stay on both sides of their line: each
+``tests/*_reference.py`` is imported by some test, and no program file
+imports anything from ``tests/``.
 
 A reference is an identifier use (a name, an attribute, an import, a
 keyword argument) or a string constant equal to the name (registries
@@ -19,6 +22,8 @@ from pathlib import Path
 ROOT = Path(__file__).resolve().parents[1]
 PACKAGE = ROOT / "logdag_spark"
 CONFIG = PACKAGE / "config.py"
+TESTS = ROOT / "tests"
+PROGRAM = (PACKAGE, ROOT / "perfbench", ROOT / "bench.py", ROOT / "__spark_entry__.py")
 
 
 def _py_files() -> list[Path]:
@@ -124,3 +129,37 @@ def test_every_config_field_is_read():
             )
     unread = [f for f in fields if f not in read]
     assert not unread, f"PipelineConfig fields nothing reads: {unread}"
+
+
+def _imported_modules(tree: ast.Module) -> set[str]:
+    out = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            out.update(a.name for a in node.names)
+        elif isinstance(node, ast.ImportFrom) and node.module and not node.level:
+            out.add(node.module)
+    return out
+
+
+def test_every_reference_oracle_is_imported_by_a_test():
+    imported = set()
+    for path, tree in _trees().items():
+        if path.parent == TESTS and path.name.startswith("test_"):
+            imported |= _imported_modules(tree)
+    oracles = sorted(p.stem for p in TESTS.glob("*_reference.py"))
+    assert oracles
+    unused = [m for m in oracles if m not in imported and f"tests.{m}" not in imported]
+    assert not unused, f"reference oracles no test imports: {unused}"
+
+
+def test_program_imports_nothing_from_tests():
+    test_modules = {p.stem for p in TESTS.glob("*.py")}
+    bad = []
+    for path, tree in _trees().items():
+        if not any(path == top or path.is_relative_to(top) for top in PROGRAM):
+            continue
+        for mod in _imported_modules(tree):
+            top = mod.split(".", 1)[0]
+            if top == "tests" or top in test_modules:
+                bad.append(f"{path.relative_to(ROOT)}: {mod}")
+    assert not bad, "program files importing from tests/:\n" + "\n".join(bad)

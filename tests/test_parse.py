@@ -1,13 +1,22 @@
 """Parse-stage tests: exact gid recovery + token-array pass-through
-(per-row token-array equality is a BASELINE.json parity requirement)."""
+(per-row token-array equality is a BASELINE.json parity requirement).
+The production ``parse_tokens_arrow`` is checked against the Catalyst
+oracle in ``parse_reference.py``, which is itself checked against the
+generator's labels."""
 
 from __future__ import annotations
 
+from collections import Counter
+
+import numpy as np
 import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from logdag_spark import fixtures as fx
-from logdag_spark.pipeline import parse_tokens, parse_tokens_arrow
+from logdag_spark.pipeline import parse_tokens_arrow
+from parse_reference import parse_tokens
 
 
 @pytest.fixture(scope="module")
@@ -52,9 +61,9 @@ def test_large_dictionary_hashed_path(spark):
     """Above ``_DENSE_MAX_PER_LENGTH`` templates per length the Python
     kernel switches from the dense broadcast compare to mask-grouped hash
     lookup (real amulog dictionaries run to thousands of templates —
-    measured 58 ms vs 19.4 s per 64k-row batch at 1200 templates).  Both
-    impls must agree on a dictionary big enough to force the
-    hashed plan, including the all-wildcard fallback (length 7) and
+    measured 58 ms vs 19.4 s per 64k-row batch at 1200 templates).  The
+    kernel must agree with the reference on a dictionary big enough to
+    force the hashed plan, including the all-wildcard fallback (length 7) and
     junk rows that match nothing (length 9 has no wildcard)."""
     from logdag_spark.pipeline.parse import _DENSE_MAX_PER_LENGTH, _build_plan
 
@@ -140,3 +149,84 @@ def test_impls_agree(spark, labeled):
     c = parse_tokens_arrow(corpus, tdim).select("doc_id", "gid")
     assert a.count() == corpus.count()
     assert a.exceptAll(c).count() == 0 and c.exceptAll(a).count() == 0
+
+
+# ------------------------------------------------- batching invariance
+#
+# The kernel rebuilds its offsets from ``n_tok`` once per Arrow batch;
+# its gids must not depend on how rows fall into batches or partitions.
+
+TOKEN_SCHEMA = "doc_id string, tokens array<int>, n_tok int, source string"
+PARSE_PROP = settings(
+    max_examples=4,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture,
+                           HealthCheck.too_slow],
+)
+
+
+@st.composite
+def parse_case(draw):
+    """A template dictionary and token rows over a small vocabulary, so
+    rows often match several templates (smallest gid wins) or share a
+    template's length and match none.  Length 6 holds more templates
+    than ``_DENSE_MAX_PER_LENGTH`` (the hashed plan, with duplicate keys
+    and maybe an all-wildcard template); length 4 stays dense; lengths 3
+    and 7 have no template."""
+    rng = np.random.default_rng(draw(st.integers(0, 2**32 - 1)))
+    n_masks = draw(st.integers(2, 3))
+    per_mask = draw(st.integers(9, 12))
+    vocab = 6
+    pats = []
+    for _ in range(n_masks):
+        mask = np.sort(rng.choice(6, size=int(rng.integers(1, 5)), replace=False))
+        for _ in range(per_mask):
+            p = [-1] * 6
+            for pos in mask:
+                p[pos] = int(rng.integers(vocab))
+            pats.append(p)
+    if draw(st.booleans()):
+        pats.append([-1] * 6)
+    for _ in range(3):
+        pats.append([int(v) if rng.random() > 0.4 else -1
+                     for v in rng.integers(vocab, size=4)])
+    # gids in no relation to mask order, so the tie-break is exercised
+    specs = [(int(g), p) for g, p in zip(rng.permutation(len(pats)), pats)]
+
+    rows = [("u6", [99] * 6, 6, "log"), ("u4", [99] * 4, 4, "log")]
+    for i in range(draw(st.integers(1, 60))):
+        n = int(rng.choice([3, 4, 6, 7]))
+        toks = [int(v) for v in rng.integers(vocab, size=n)]
+        if n in (4, 6) and rng.random() < 0.6:
+            cands = [p for _, p in specs if len(p) == n]
+            tpl = cands[int(rng.integers(len(cands)))]
+            toks = [v if v >= 0 else t for v, t in zip(tpl, toks)]
+        rows.append((f"r{i}", toks, n, "log"))
+    return specs, rows
+
+
+@PARSE_PROP
+@given(parse_case())
+def test_kernel_matches_reference_at_any_batching(spark, case):
+    from logdag_spark.pipeline.parse import _build_plan
+
+    specs, rows = case
+    assert _build_plan(specs)[6][0] == "hashed"
+    corpus = spark.createDataFrame(rows, TOKEN_SCHEMA)
+    want = Counter(
+        tuple(r) for r in parse_tokens(corpus, specs).select("doc_id", "gid").collect()
+    )
+    assert len(want) == len(rows)
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    default = spark.conf.get(key)
+    try:
+        for batch in ("1", "7", "65536"):
+            spark.conf.set(key, batch)
+            for parts in (1, 7):
+                parsed = parse_tokens_arrow(corpus.repartition(parts), specs)
+                got = Counter(
+                    tuple(r) for r in parsed.select("doc_id", "gid").collect()
+                )
+                assert got == want, (batch, parts)
+    finally:
+        spark.conf.set(key, default)

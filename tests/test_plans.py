@@ -1,7 +1,7 @@
 """Physical-plan shape assertions — the operators must not only be
 correct but compile to the plans a 100 TB run needs: broadcast joins for
 dims, predicate pushdown into the parquet scan, whole-stage codegen on the
-hot path, no shuffle on the parse fact side."""
+hot path, no shuffle in parse."""
 
 from __future__ import annotations
 
@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 
 from logdag_spark import fixtures as fx
 from logdag_spark.fixtures.generator import DEFAULT_T0
-from logdag_spark.pipeline import discretize, enrich, parse_tokens, route
+from logdag_spark.pipeline import discretize, enrich, parse_tokens_arrow, route
 
 
 def _plan(df) -> str:
@@ -34,22 +34,20 @@ def _tokens(spark):
     return fx.contract(fx.gen_tokens(spark, scale=0.02)).localCheckpoint(eager=True)
 
 
-def test_parse_is_broadcast_probe_no_fact_shuffle(spark):
-    """Parse is a chain of BROADCAST hash joins on (n_tok, masked
-    tokens): the fact side never shuffles, per-row cost is O(masks per
-    length) hash probes independent of dictionary size, and every join
-    is a small JIT-compiled method (a one-expression CASE chain blows
-    the 8KB JIT limit at real dictionary sizes)."""
-    parsed = parse_tokens(_tokens(spark), fx.template_dim(spark))
+def test_parse_is_one_arrow_eval_no_shuffle(spark):
+    """Parse is map-only: the production parser adds exactly one
+    ``ArrowEvalPython`` (the scalar Arrow kernel over the token list
+    column) and no exchange, so the fact side never shuffles."""
+    parsed = parse_tokens_arrow(_tokens(spark), fx.template_dim(spark))
     plan = _plan(parsed)
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan and "NestedLoop" not in plan
+    assert plan.count("ArrowEvalPython") == 1
+    assert "Join" not in plan
     assert _n_shuffles(plan) == 0
 
 
 def test_enrich_joins_are_broadcast(spark):
     tdim = fx.template_dim(spark)
-    enriched = enrich(parse_tokens(_tokens(spark), tdim), fx.host_meta(spark), tdim)
+    enriched = enrich(parse_tokens_arrow(_tokens(spark), tdim), fx.host_meta(spark), tdim)
     plan = _plan(enriched)
     assert plan.count("BroadcastHashJoin") >= 2  # host_meta + template group
     assert "SortMergeJoin" not in plan
@@ -70,7 +68,7 @@ def test_events_scan_pushes_filters(spark, sf01_dir):
 def test_discretize_is_single_hash_aggregate(spark):
     routed = route(
         enrich(
-            parse_tokens(_tokens(spark), fx.template_dim(spark)),
+            parse_tokens_arrow(_tokens(spark), fx.template_dim(spark)),
             fx.host_meta(spark),
             fx.template_dim(spark),
         )
@@ -175,29 +173,6 @@ def test_pack_sequences_window_partitions_on_shard(spark):
     spec = plan.lower()
     assert "windowspecdefinition(source" in spec
     assert "pack_shard" in spec.split("windowspecdefinition(source", 1)[1][:80]
-
-
-def test_lingam_corr_pair_fanout_is_equi_join(spark):
-    """The pair fan-out must be an equi-join on (unit, eid) — an
-    OR-condition membership join degrades to a unit-keyed join with a
-    post-filter: |rows| × |pairs-per-unit| intermediate."""
-    from datetime import datetime, timezone
-
-    from logdag_spark.pipeline.lingam import lingam_corr_edges
-
-    t0 = datetime(2024, 1, 1, tzinfo=timezone.utc)
-    rows = [
-        ("u1", e, t0 + timedelta(minutes=b), float(1 + (b * (e + 1)) % 5))
-        for e in range(3) for b in range(30)
-    ]
-    mdf = spark.createDataFrame(
-        rows, "unit string, eid long, bin timestamp, cnt double"
-    )
-    edges = lingam_corr_edges(
-        mdf, {"u1": (t0, 30)}, timedelta(minutes=1), parallelism="pair"
-    )
-    plan = _plan(edges)
-    assert "NestedLoop" not in plan and "CartesianProduct" not in plan
 
 
 def test_decontaminate_broadcasts_benchmark_grams(spark, sf001_dir):

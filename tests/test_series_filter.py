@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 from logdag_spark import fixtures as fx
 from logdag_spark.config import PipelineConfig
 from logdag_spark.fixtures.generator import DEFAULT_T0, LINEAR_GID, PERIODIC_GIDS
-from logdag_spark.pipeline import enrich, parse_tokens, route
+from logdag_spark.pipeline import enrich, parse_tokens_arrow, route
 from logdag_spark.pipeline.series_filter import (
     SeriesFilter,
     argrelmax,
@@ -120,7 +120,7 @@ def test_filter_periodic_remainder_keeps_burst():
 def test_pipeline_filters_injected_series(spark):
     tdim, hmeta = fx.template_dim(spark), fx.host_meta(spark)
     df = fx.gen_tokens(spark, scale=0.5)
-    routed = route(enrich(parse_tokens(fx.contract(df), tdim), hmeta, tdim))
+    routed = route(enrich(parse_tokens_arrow(fx.contract(df), tdim), hmeta, tdim))
     dt_range = (DEFAULT_T0, DEFAULT_T0 + TERM)
     cfg = PipelineConfig()  # default chain: sizetest, filter_periodic, remove_linear
     out = filter_series(
@@ -150,7 +150,7 @@ def test_pipeline_filters_injected_series(spark):
 def routed_log(spark):
     tdim, hmeta = fx.template_dim(spark), fx.host_meta(spark)
     df = fx.gen_tokens(spark, scale=0.3)
-    routed = route(enrich(parse_tokens(fx.contract(df), tdim), hmeta, tdim))
+    routed = route(enrich(parse_tokens_arrow(fx.contract(df), tdim), hmeta, tdim))
     return routed.where(F.col("measure") != "unparsed").localCheckpoint(eager=True)
 
 

@@ -14,6 +14,9 @@ from logdag_spark.streaming.ingest import streaming_counts
 
 @pytest.mark.slow
 def test_streaming_counts_match_batch(spark, tmp_path):
+    """The stream parses with the production ``parse_tokens_arrow``; the
+    batch side parses with the Catalyst oracle, so the check also covers
+    the Arrow kernel under Structured Streaming."""
     labeled = fx.gen_tokens(spark, scale=0.05)
     src = str(tmp_path / "tokens")
     fx.contract(labeled).write.parquet(src)
@@ -34,9 +37,10 @@ def test_streaming_counts_match_batch(spark, tmp_path):
     q.awaitTermination(300)
 
     # batch equivalent over the same 5m epoch-anchored windows
-    from logdag_spark.pipeline import enrich as _e, parse_tokens as _p, route as _r
+    from logdag_spark.pipeline import enrich as _e, route as _r
+    from parse_reference import parse_tokens
     routed = _r(
-        _e(_p(spark.read.parquet(src), fx.template_dim(spark)),
+        _e(parse_tokens(spark.read.parquet(src), fx.template_dim(spark)),
            fx.host_meta(spark), fx.template_dim(spark))
     ).where(F.col("measure") != "unparsed")
     batch = (
