@@ -91,6 +91,19 @@ class PipelineConfig:
     # sinks
     warehouse: str = "/tmp/logdag_spark_warehouse"
 
+    def __post_init__(self) -> None:
+        # reject at construction: an unknown value would otherwise plan
+        # lazily and fail only inside a Python worker
+        for name, allowed in (
+            ("ci_bin_method", ("sequential", "slide", "radius")),
+            ("cause_algorithm", ("pc", "pc-corr", "lingam", "lingam-corr")),
+            ("ci_func", ("fisherz", "gsq")),
+        ):
+            if getattr(self, name) not in allowed:
+                raise ValueError(
+                    f"{name} must be one of {allowed}, got {getattr(self, name)!r}"
+                )
+
     @property
     def bin_size(self) -> timedelta:
         return str2dur(self.ci_bin_size)

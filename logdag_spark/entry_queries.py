@@ -29,6 +29,8 @@ from logdag_spark.operators.text import (
     token_count,
 )
 from logdag_spark.pipeline.aggregate import binarize, discretize, fill_bins, rebin
+from logdag_spark.pipeline.correlate import fisherz_edges, pairwise_corr
+from logdag_spark.session import local_frame
 
 T0 = datetime(2024, 1, 1, tzinfo=timezone.utc)
 T_END = datetime(2024, 1, 31, tzinfo=timezone.utc)
@@ -64,7 +66,11 @@ def _spread(spark: SparkSession, df: DataFrame, path: str) -> DataFrame:
     (min(row groups, byte splits)) is below the cluster width.  A
     properly laid-out corpus at scale has splits >> cores and is
     returned untouched; a compact under-split table costs one shuffle of
-    itself — cents against the serialized alternative.
+    itself — cents against the serialized alternative.  So it turns
+    itself off on a well-laid-out corpus (row groups no larger than
+    ``spark.sql.files.maxPartitionBytes``, which the scan splits on its
+    own), and any table over 2 MB per core skips it on size alone: it
+    is not load-bearing at scale.
 
     Opt-in PER QUERY (``_load(..., spread=True)``), never blanket:
     repartitioning changes which rows aggregate together, so any
@@ -740,48 +746,27 @@ FROM zz WHERE abs(z) > {Z99!r}
 
 
 def _daily_edges(spark, sf_dir) -> DataFrame:
-    """Per-day units: hourly-binned event_type series, Fisher-z edges."""
+    """Per-day units: hourly-binned event_type series, Fisher-z edges
+    (the pipeline's sparse ``pairwise_corr`` + ``fisherz_edges``, 24
+    zero-filled bins per day)."""
     ev = _events_routed(spark, sf_dir)
     b = discretize(ev, RANGE, timedelta(hours=1), keys=("key",))
     day = F.date_format("bin", "yyyyMMdd").alias("unit")
     # persisted: three consumers (stats + both cross-term sides) would
     # otherwise each re-scan and re-bin the raw events table
-    hourly = b.select(day, "key", "bin", "cnt").persist(
+    hourly = b.select(day, F.col("key").alias("eid"), "bin", "cnt").persist(
         StorageLevel.MEMORY_AND_DISK
     )
-    # zero-filled per (unit, key): 24 bins/day; sparse sufficient stats
-    stats = hourly.groupBy("unit", "key").agg(
-        F.sum("cnt").alias("sx"), F.sum(F.col("cnt") * F.col("cnt")).alias("sxx")
-    )
-    a = hourly.select("unit", F.col("key").alias("k1"), "bin", F.col("cnt").alias("c1"))
-    bb = hourly.select("unit", F.col("key").alias("k2"), "bin", F.col("cnt").alias("c2"))
-    cross = (
-        a.join(bb, ["unit", "bin"])
-        .where(F.col("k1") < F.col("k2"))
-        .groupBy("unit", "k1", "k2")
-        .agg(F.sum(F.col("c1") * F.col("c2")).alias("sxy"))
-    )
-    s1 = stats.select("unit", F.col("key").alias("k1"), F.col("sx").alias("sx1"), F.col("sxx").alias("sxx1"))
-    s2 = stats.select("unit", F.col("key").alias("k2"), F.col("sx").alias("sx2"), F.col("sxx").alias("sxx2"))
-    n = F.lit(24.0)
-    pairs = (
-        s1.join(s2, "unit")
-        .where(F.col("k1") < F.col("k2"))
-        .join(cross, ["unit", "k1", "k2"], "left")
-        .withColumn("sxy", F.coalesce("sxy", F.lit(0.0)))
-    )
-    cov = n * F.col("sxy") - F.col("sx1") * F.col("sx2")
-    v1 = n * F.col("sxx1") - F.col("sx1") * F.col("sx1")
-    v2 = n * F.col("sxx2") - F.col("sx2") * F.col("sx2")
-    r = F.when((v1 > 0) & (v2 > 0), cov / F.sqrt(v1 * v2))
-    rc = F.least(F.greatest(r, F.lit(-1 + 1e-12)), F.lit(1 - 1e-12))
-    z = 0.5 * F.log((1 + rc) / (1 - rc)) * F.sqrt(F.lit(21.0))
-    return (
-        pairs.withColumn("_r", r)
-        .where(F.col("_r").isNotNull())
-        .withColumn("_z", z)
-        .where(F.abs(F.col("_z")) > Z99)
-        .select("unit", "k1", "k2", F.round("_r", 6).alias("r"))
+    days = [
+        ((T0 + timedelta(days=d)).strftime("%Y%m%d"), 24)
+        for d in range((T_END - T0).days)
+    ]
+    nb = local_frame(spark, days, "unit string, n long")
+    return fisherz_edges(pairwise_corr(hourly, nb), alpha=0.01).select(
+        "unit",
+        F.col("src_eid").alias("k1"),
+        F.col("dst_eid").alias("k2"),
+        F.round("weight", 6).alias("r"),
     )
 
 
@@ -3214,7 +3199,7 @@ def q_gsq_edges_1h(spark, sf_dir):
         "bin",
         F.lit(1.0).alias("cnt"),
     )
-    nb = spark.createDataFrame([("all", TERM_S // 3600)], "unit string, n long")
+    nb = local_frame(spark, [("all", TERM_S // 3600)], "unit string, n long")
     e = gsq_edges(mat, nb, alpha=0.01, emit_all=True)
     return e.select(
         F.col("eid1").alias("type1"),

@@ -76,23 +76,27 @@ def lang_id(col: str = "text") -> Column:
     """Tiny n-gram/stopword language heuristic (en/de/fr/unknown).
 
     A real model would be a broadcast n-gram table + the same expression
-    shape; the scoring plumbing is what matters at scale.
+    shape; the scoring plumbing is what matters at scale.  The word array
+    is let-bound (single-element transform, as in :func:`fingerprint`) so
+    the lowercase + split runs once per row, not once per language.
     """
-    low = F.lower(F.col(col))
 
-    def hits(words: list[str]) -> Column:
-        toks = F.split(low, r"[^a-zà-ÿä-ü]+")
-        return F.size(F.filter(toks, lambda t: t.isin(*[F.lit(w) for w in words])))
+    def label(toks: Column) -> Column:
+        def hits(words: list[str]) -> Column:
+            return F.size(F.filter(toks, lambda t: t.isin(*[F.lit(w) for w in words])))
 
-    en = hits(["the", "and", "of", "is", "to", "in"])
-    de = hits(["der", "die", "das", "und", "ist", "nicht"])
-    fr = hits(["le", "la", "les", "et", "est", "dans"])
-    return (
-        F.when((en >= de) & (en >= fr) & (en > 0), "en")
-        .when((de >= fr) & (de > 0), "de")
-        .when(fr > 0, "fr")
-        .otherwise("unknown")
-    )
+        en = hits(["the", "and", "of", "is", "to", "in"])
+        de = hits(["der", "die", "das", "und", "ist", "nicht"])
+        fr = hits(["le", "la", "les", "et", "est", "dans"])
+        return (
+            F.when((en >= de) & (en >= fr) & (en > 0), "en")
+            .when((de >= fr) & (de > 0), "de")
+            .when(fr > 0, "fr")
+            .otherwise("unknown")
+        )
+
+    toks = F.split(F.lower(F.col(col)), r"[^a-zà-ÿä-ü]+")
+    return F.transform(F.array(toks), label)[0]
 
 
 def fingerprint(col: str = "text", window: int = 8) -> Column:

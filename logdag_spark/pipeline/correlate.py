@@ -13,18 +13,23 @@ Spark-first design:
   ``{area}_{yyyymmdd}`` :90-100) — broadcast-joined onto the binned fact
   table.  The reference's multiprocessing.Pool over units becomes plain
   partition parallelism.
-* Pearson correlation over zero-filled bins is computed from SPARSE
-  sufficient statistics: with N = total bins per unit fixed, absent bins
-  are zeros and contribute nothing to sum(x), sum(x^2) or sum(x*y), so
-      r = (N*Sxy - Sx*Sy) / sqrt((N*Sxx - Sx^2) * (N*Syy - Sy^2))
-  needs only per-event aggregates plus an inner self-join on (unit, bin)
-  for the cross term.  The dense spine (|events| x |bins| rows) is never
-  materialized — at 10^12 input rows this is the difference between a
-  shuffle of co-occurring rows only and an explosion of mostly-zero rows.
-* Fisher-z test (/root/reference/logdag/pc_input.py:23-25): edge survives
-  iff |atanh(r)| * sqrt(N - 3) > Phi^-1(1 - alpha/2) — the critical value
-  is a driver-side constant (stdlib NormalDist), the test itself is pure
-  column math inside whole-stage codegen.
+* Both depth-0 CI tests are functions of one set of SPARSE per-pair
+  sufficient statistics (n, Sx, Sxx, Sy, Syy, Sxy), built by ONE plan
+  (:func:`_pair_stats`): with N = total bins per unit fixed, absent bins
+  are zeros and contribute nothing to any sum, so the per-event
+  aggregates plus an inner self-join on (unit, bin) for the cross term
+  are all either test needs.  The dense spine (|events| x |bins| rows)
+  is never materialized — at 10^12 input rows this is the difference
+  between a shuffle of co-occurring rows only and an explosion of
+  mostly-zero rows.
+* Fisher-z test (/root/reference/logdag/pc_input.py:23-25) on
+      r = (N*Sxy - Sx*Sy) / sqrt((N*Sxx - Sx^2) * (N*Syy - Sy^2)):
+  an edge survives iff |atanh(r)| * sqrt(N - 3) > Phi^-1(1 - alpha/2) —
+  the critical value is a driver-side constant (stdlib NormalDist), the
+  test itself is pure column math inside whole-stage codegen.
+* G-square test on a 0/1 matrix: Sx is an event's presence count and Sxy
+  the pair's co-presence count, which fill the 2x2 contingency table;
+  its edge weight is the same r (the phi coefficient).
 """
 
 from __future__ import annotations
@@ -178,14 +183,16 @@ def _apply_host_filter(cross_pairs: DataFrame, ok: DataFrame | None) -> DataFram
     )
 
 
-def pairwise_corr(
+def _pair_stats(
     matrix: DataFrame,
     unit_nbins: DataFrame,
     noedge: DataFrame | None = None,
     ev_hosts: DataFrame | None = None,
     allowed_hosts: DataFrame | None = None,
 ) -> DataFrame:
-    """All-pairs Pearson r per unit from sparse sufficient statistics.
+    """Per-pair sparse sufficient statistics of ``matrix(unit, eid, bin,
+    cnt)``: ``(unit, eid1, eid2, n, sx1, sxx1, sx2, sxx2, sxy)`` for every
+    pair eid1 < eid2 of a unit's events.
 
     ``unit_nbins(unit, n)`` supplies the zero-filled length N per unit.
     Plan: one hash-agg for per-event moments, one shuffle self-join on
@@ -235,18 +242,36 @@ def pairwise_corr(
     if noedge is not None:
         ne = noedge.select("unit", "eid1", "eid2")
         pairs = pairs.join(ne, ["unit", "eid1", "eid2"], "left_anti")
-    pairs = (
+    return (
         pairs.join(cross, ["unit", "eid1", "eid2"], "left")
         .join(F.broadcast(unit_nbins), "unit")
         .withColumn("sxy", F.coalesce("sxy", F.lit(0.0)))
     )
+
+
+def _pearson_r() -> F.Column:
+    """Pearson r of a :func:`_pair_stats` row, 0 where a series is
+    constant, clamped to [-1, 1]."""
     n = F.col("n")
     cov = n * F.col("sxy") - F.col("sx1") * F.col("sx2")
     v1 = n * F.col("sxx1") - F.col("sx1") * F.col("sx1")
     v2 = n * F.col("sxx2") - F.col("sx2") * F.col("sx2")
     r = F.when((v1 > 0) & (v2 > 0), cov / F.sqrt(v1 * v2)).otherwise(F.lit(0.0))
-    return pairs.select(
-        "unit", "eid1", "eid2", "n", F.least(F.greatest(r, F.lit(-1.0)), F.lit(1.0)).alias("r")
+    return F.least(F.greatest(r, F.lit(-1.0)), F.lit(1.0))
+
+
+def pairwise_corr(
+    matrix: DataFrame,
+    unit_nbins: DataFrame,
+    noedge: DataFrame | None = None,
+    ev_hosts: DataFrame | None = None,
+    allowed_hosts: DataFrame | None = None,
+) -> DataFrame:
+    """All-pairs Pearson r per unit, ``(unit, eid1, eid2, n, r)``, from
+    the sparse sufficient statistics of :func:`_pair_stats` (same
+    arguments)."""
+    return _pair_stats(matrix, unit_nbins, noedge, ev_hosts, allowed_hosts).select(
+        "unit", "eid1", "eid2", "n", _pearson_r().alias("r")
     )
 
 
@@ -302,53 +327,35 @@ def gsq_edges(
     pc_input.py:19-22): the scale path counterpart of the grouped-map
     kernel's marginal test (pc.ci_test_gsq, |S|=0).
 
-    Sparse sufficient statistics over presence rows (cnt=1 only): with N
-    bins per unit, the 2x2 contingency table per pair is
-        n11 = |co-occurring bins| (self-join on (unit, bin)),
+    The 2x2 contingency table per pair comes from the :func:`_pair_stats`
+    plan over presence indicators (cnt > 0 -> 1): with N bins per unit,
+        n1_i = Sx_i (bins where i is present),  n11 = Sxy (co-presence),
         n10 = n1_i - n11,  n01 = n1_j - n11,  n00 = N - n1_i - n1_j + n11,
     so the dense bins x events matrix is never materialized and the test
     itself (G² = 2 Σ o·ln(o/e), dof=1) is whole-stage-codegen column
     math.  The reference's small-sample rule (n < 10·dof keeps the edge,
     pc.ci_test_gsq) is preserved.
 
-    Input: ``matrix_bin(unit, eid, bin, cnt)`` with cnt in {0,1} sparse
-    (zero rows absent; explicit cnt=0 rows — e.g. binarize of normalized
-    0<cnt<1 features — are allowed and count toward the pair universe).
-    Output: ``(unit, eid1, eid2, n, n11, g2)`` for dependent pairs.
+    Input: ``matrix_bin(unit, eid, bin, cnt)``, sparse (zero rows absent;
+    explicit cnt=0 rows — e.g. binarize of normalized 0<cnt<1 features —
+    are allowed and count toward the pair universe).
+    Output: ``(unit, eid1, eid2, n, n11, g2, r)`` for dependent pairs
+    (all pairs plus a ``dep`` flag with ``emit_all``); ``r`` is the phi
+    coefficient.
 
-    Prior-knowledge pushdown mirrors :func:`pairwise_corr`: ``noedge``
+    Prior-knowledge pushdown is :func:`_pair_stats`'s: ``noedge``
     anti-joins the pair universe before contingency stats attach, and
     host-level rules filter the (unit, bin) self-join via
     ``ev_hosts``/``allowed_hosts``.
     """
     crit = chi2_crit_1dof(alpha)
-    ones = matrix_bin.where(F.col("cnt") > 0)
-    # pair universe over ALL events in the matrix, not just those with a
-    # presence row: an all-zero binarized series still participates (the
-    # dense kernel includes such eids, and under the n<10*dof small-sample
-    # rule keeps their edges)
-    n1 = matrix_bin.groupBy("unit", "eid").agg(
-        F.count(F.when(F.col("cnt") > 0, True)).alias("n1")
-    )
-    a = ones.select("unit", F.col("eid").alias("eid1"), "bin")
-    b = ones.select("unit", F.col("eid").alias("eid2"), "bin")
-    a, b, host_ok = _host_pruned_sides(a, b, ev_hosts, allowed_hosts)
-    co = _apply_host_filter(
-        a.join(b, ["unit", "bin"]).where(F.col("eid1") < F.col("eid2")), host_ok
-    ).groupBy("unit", "eid1", "eid2").agg(F.count("*").alias("n11"))
-    s1 = n1.select("unit", F.col("eid").alias("eid1"), F.col("n1").alias("na"))
-    s2 = n1.select("unit", F.col("eid").alias("eid2"), F.col("n1").alias("nb"))
-    pairs = s1.join(s2, "unit").where(F.col("eid1") < F.col("eid2"))
-    if noedge is not None:
-        ne = noedge.select("unit", "eid1", "eid2")
-        pairs = pairs.join(ne, ["unit", "eid1", "eid2"], "left_anti")
-    pairs = (
-        pairs.join(co, ["unit", "eid1", "eid2"], "left")
-        .join(F.broadcast(unit_nbins), "unit")
-        .withColumn("n11", F.coalesce(F.col("n11"), F.lit(0)).cast("double"))
-    )
+    # presence indicators over ALL events in the matrix: an all-zero
+    # binarized series still participates (the dense kernel includes such
+    # eids, and under the n<10*dof small-sample rule keeps their edges)
+    ind = matrix_bin.withColumn("cnt", (F.col("cnt") > 0).cast("double"))
+    pairs = _pair_stats(ind, unit_nbins, noedge, ev_hosts, allowed_hosts)
     n = F.col("n").cast("double")
-    na, nb, n11 = F.col("na").cast("double"), F.col("nb").cast("double"), F.col("n11")
+    na, nb, n11 = F.col("sx1"), F.col("sx2"), F.col("sxy")
     n10 = na - n11
     n01 = nb - n11
     n00 = n - na - nb + n11
@@ -363,28 +370,19 @@ def gsq_edges(
         + term(n01, n - na, nb)
         + term(n00, n - na, n - nb)
     )
-    # phi coefficient = Pearson r of the two binary indicators — the
-    # same quantity np.corrcoef gives on binarized columns, i.e. the
-    # dense kernel's edge weight (pc._pc_one_unit), from the same
-    # sufficient statistics
-    denom = na * (n - na) * nb * (n - nb)
-    phi = F.when(denom > 0, (n * n11 - na * nb) / F.sqrt(denom)).otherwise(
-        F.lit(0.0)
-    )
     # dependent iff p < alpha (g2 > crit); n < 10·dof is unreliable ->
     # conservatively dependent (reference heuristic)
     dep = (F.col("n") < 10) | (F.col("g2") > crit)
-    out = pairs.withColumn("g2", g2).withColumn("r", phi)
+    # phi coefficient = Pearson r of the two binary indicators — the
+    # same quantity np.corrcoef gives on binarized columns, i.e. the
+    # dense kernel's edge weight (pc.estimate_dag_matrix).  Every product
+    # in it is an exact small integer, so it equals the 2x2-table form
+    # (n*n11 - na*nb) / sqrt(na*(n-na)*nb*(n-nb)) bit for bit
+    out = pairs.withColumn("g2", g2).withColumn("r", _pearson_r())
+    cols = ["unit", "eid1", "eid2", "n", n11.cast("bigint").alias("n11"), "g2", "r"]
     if emit_all:
-        return out.select(
-            "unit", "eid1", "eid2", "n",
-            F.col("n11").cast("bigint").alias("n11"), "g2", "r",
-            dep.alias("dep"),
-        )
-    return out.where(dep).select(
-        "unit", "eid1", "eid2", "n",
-        F.col("n11").cast("bigint").alias("n11"), "g2", "r",
-    )
+        return out.select(*cols, dep.alias("dep"))
+    return out.where(dep).select(*cols)
 
 
 def unit_nbins_rows(

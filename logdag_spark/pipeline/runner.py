@@ -1,7 +1,9 @@
 """End-to-end pipeline orchestration.
 
 parse -> enrich -> route -> [filter_series] -> aggregate -> units ->
-correlate (pc-corr) | PC kernel (pc) -> dag_edges + event_dim.
+correlate (pc-corr: one sparse pair-statistics plan, Fisher-z or G-square
+skeleton, depth-0 orientation) | PC kernel (pc) | LiNGAM kernels
+(lingam, lingam-corr) -> dag_edges + event_dim.
 
 Mirrors the reference's two entry points in one lazy plan chain:
 ``make-evdb-log-all`` (/root/reference/logdag/source/__main__.py:27-43)
@@ -26,6 +28,7 @@ from logdag_spark.pipeline.correlate import (
     assign_units,
     event_dim,
     fisherz_edges,
+    gsq_edges,
     merge_syncevents,
     pairwise_corr,
     unit_matrix,
@@ -233,63 +236,40 @@ def run_pipeline(
 
     if cfg.cause_algorithm == "pc-corr":
         # reference pc-corr = full PC at depth 0 with the configured
-        # ci_func + CPDAG orientation (makedag.py:116-122).  For fisherz
-        # on raw counts the depth-0 CI test is exactly the pairwise
-        # Fisher-z threshold, so the sparse sufficient-statistics plan
-        # (no dense matrices, one shuffle) discovers the skeleton and a
-        # tiny per-unit kernel adds orientation.  gsq/binarized input
-        # needs the contingency-table test -> PC kernel at depth 0.
-        if cfg.ci_func == "fisherz" and not cfg.binarize:
-            # fresh attribute ids: the noedge frame derives from evdim too
-            ne = (
-                noedge.select("unit", "eid1", "eid2").toDF("unit", "eid1", "eid2")
-                if noedge is not None
-                else None
-            )
-            pairs_r = pairwise_corr(
-                mat, nb, noedge=ne, ev_hosts=ev_hosts,
-                allowed_hosts=allowed_hosts,
-            )
-            edges = orient_depth0_edges(
-                fisherz_edges(pairs_r, cfg.skeleton_threshold)
-            )
-        elif cfg.ci_func == "gsq":
-            # sparse scale path for the reference's binarized gsq pc-corr:
-            # contingency counts from presence rows (correlate.gsq_edges,
-            # parity with the dense kernel's marginal test proven in
-            # tests), phi-coefficient weights (= np.corrcoef on the
-            # binarized matrix), the same depth-0 CPDAG orientation
-            # kernel as the fisherz path
-            from logdag_spark.pipeline.correlate import gsq_edges
-
-            mat_bin = mat.withColumn(
-                "cnt", (F.col("cnt") >= 1).cast("double")
-            )
-            ne = (
-                noedge.select("unit", "eid1", "eid2").toDF("unit", "eid1", "eid2")
-                if noedge is not None
-                else None
-            )
+        # ci_func + CPDAG orientation (makedag.py:116-122).  At depth 0
+        # both CI tests are functions of the per-pair sufficient
+        # statistics, so one sparse plan (no dense matrices, one shuffle)
+        # discovers the skeleton — Fisher-z on r, or G-square on the
+        # contingency counts of the binarized series, weighted by phi
+        # (= np.corrcoef on the binarized matrix) — and a tiny per-unit
+        # kernel adds orientation.  Binarization is the dense kernel's
+        # rule (cnt >= 1), on by default for gsq (pc_input.py:19-27).
+        if cfg.binarize or cfg.ci_func == "gsq":
+            mat_in = mat.withColumn("cnt", (F.col("cnt") >= 1).cast("double"))
+        else:
+            mat_in = mat
+        # fresh attribute ids: the noedge frame derives from evdim too
+        ne = (
+            noedge.select("unit", "eid1", "eid2").toDF("unit", "eid1", "eid2")
+            if noedge is not None
+            else None
+        )
+        pk = dict(noedge=ne, ev_hosts=ev_hosts, allowed_hosts=allowed_hosts)
+        if cfg.ci_func == "gsq":
             skel = gsq_edges(
-                mat_bin, nb, alpha=cfg.skeleton_threshold, noedge=ne,
-                ev_hosts=ev_hosts, allowed_hosts=allowed_hosts,
-            )
-            edges = orient_depth0_edges(
-                skel.select(
-                    "unit",
-                    F.col("eid1").alias("src_eid"),
-                    F.col("eid2").alias("dst_eid"),
-                    F.lit(False).alias("directed"),
-                    F.col("r").alias("weight"),
-                )
+                mat_in, nb, alpha=cfg.skeleton_threshold, **pk
+            ).select(
+                "unit",
+                F.col("eid1").alias("src_eid"),
+                F.col("eid2").alias("dst_eid"),
+                F.lit(False).alias("directed"),
+                F.col("r").alias("weight"),
             )
         else:
-            edges = pc_edges(
-                mat, _unit_meta(), cfg.bin_size,
-                ci_func=cfg.ci_func, alpha=cfg.skeleton_threshold,
-                max_depth=0, binarize=cfg.binarize or None, noedge=noedge,
-                method=cfg.ci_bin_method, bin_diff=bin_diff,
+            skel = fisherz_edges(
+                pairwise_corr(mat_in, nb, **pk), cfg.skeleton_threshold
             )
+        edges = orient_depth0_edges(skel)
     elif cfg.cause_algorithm == "lingam":
         from logdag_spark.pipeline.lingam import lingam_edges
 
@@ -307,14 +287,12 @@ def run_pipeline(
             method=cfg.ci_bin_method, bin_diff=bin_diff,
             algorithm=cfg.lingam_algorithm,
         )
-    elif cfg.cause_algorithm == "pc":
+    else:  # "pc"
         edges = pc_edges(
             mat, _unit_meta(), cfg.bin_size,
             ci_func=cfg.ci_func, alpha=cfg.skeleton_threshold,
             max_depth=cfg.skeleton_depth, binarize=cfg.binarize or None,
             noedge=noedge, method=cfg.ci_bin_method, bin_diff=bin_diff,
         )
-    else:
-        raise ValueError(f"unknown cause_algorithm {cfg.cause_algorithm!r}")
     edges = ck(edges, "dag_edges")
     return PipelineResult(routed=routed, binned=binned, evdim=evdim, matrix=mat, edges=edges)

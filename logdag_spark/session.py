@@ -16,6 +16,8 @@ from pyspark.sql import DataFrame, GroupedData, SparkSession
 from pyspark.sql.types import DataType, StructType
 
 MAX_DRIVER_MEM_MB = 48 * 1024
+# the directory that holds the ``logdag_spark`` package
+PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
@@ -44,6 +46,12 @@ def get_spark(
     core count: on local mode 200 default partitions just adds task-launch
     overhead; on a real cluster you would size this to ~2-3x total cores
     and let AQE coalesce.
+
+    The Python workers get the package's parent directory on their
+    ``PYTHONPATH``, so every Python stage imports ``logdag_spark`` however
+    the driver found it.  A directory, not a zip (``addPyFile``): each
+    worker task calls ``importlib.invalidate_caches()``, which re-reads
+    the archive of every zip importer on the path.
     """
     master = f"local[{cores}]" if cores else "local[*]"
     n_shuffle = shuffle_partitions or cores or (os.cpu_count() or 8)
@@ -56,6 +64,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config("spark.executorEnv.PYTHONPATH", PACKAGE_PARENT)
         # 64k-row Arrow batches: the parse kernel pays a fixed
         # serialize/GIL/Series-construction cost per batch (~3100 batches
         # per bench run at the old 10k), and the widest UDF rows here

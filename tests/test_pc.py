@@ -175,13 +175,19 @@ def test_pc_edges_distributed(spark):
         assert (u, 0, 2) not in got
 
 
-def test_sparse_gsq_pc_corr_matches_dense_kernel(spark):
-    """The sparse pc-corr gsq path (gsq_edges skeleton + phi weights +
-    depth-0 orientation) must produce the same edges, directions and
-    weights as pc_edges(max_depth=0, ci_func='gsq') on identical data."""
+@pytest.mark.parametrize("ci_func", ["gsq", "fisherz"])
+def test_sparse_pc_corr_matches_dense_kernel(spark, ci_func):
+    """The sparse pc-corr path on binarized counts (gsq_edges or
+    fisherz_edges(pairwise_corr) skeleton + depth-0 orientation, as
+    run_pipeline builds it) must produce the same edges, directions and
+    weights as pc_edges(max_depth=0, binarize=True) on identical data."""
     from pyspark.sql import functions as F
 
-    from logdag_spark.pipeline.correlate import gsq_edges
+    from logdag_spark.pipeline.correlate import (
+        fisherz_edges,
+        gsq_edges,
+        pairwise_corr,
+    )
     from logdag_spark.pipeline.pc import orient_depth0_edges
 
     t0 = datetime(2024, 1, 1, tzinfo=timezone.utc)
@@ -193,27 +199,31 @@ def test_sparse_gsq_pc_corr_matches_dense_kernel(spark):
     z = np.where(r.random(nb) < 0.8, y, (r.random(nb) < 0.4).astype(int))
     w = (r.random(nb) < 0.3).astype(int)  # independent
     for eid, series in [(0, x), (1, y), (2, z), (3, w)]:
+        # counts, not indicators: binarization must decide presence
+        counts = series * r.integers(1, 4, nb)
         for b in range(nb):
-            if series[b] > 0:
-                rows.append(("u", eid, t0 + timedelta(minutes=b), float(series[b])))
+            if counts[b] > 0:
+                rows.append(("u", eid, t0 + timedelta(minutes=b), float(counts[b])))
     mdf = spark.createDataFrame(
         rows, "unit string, eid long, bin timestamp, cnt double"
     )
     dense = pc_edges(
-        mdf, {"u": (t0, nb)}, timedelta(minutes=1), ci_func="gsq", alpha=0.01,
-        max_depth=0,
+        mdf, {"u": (t0, nb)}, timedelta(minutes=1), ci_func=ci_func, alpha=0.01,
+        max_depth=0, binarize=True,
     )
     nbdf = spark.createDataFrame([("u", nb)], "unit string, n long")
-    skel = gsq_edges(mdf, nbdf, alpha=0.01)
-    sparse = orient_depth0_edges(
-        skel.select(
+    mat_bin = mdf.withColumn("cnt", (F.col("cnt") >= 1).cast("double"))
+    if ci_func == "gsq":
+        skel = gsq_edges(mat_bin, nbdf, alpha=0.01).select(
             "unit",
             F.col("eid1").alias("src_eid"),
             F.col("eid2").alias("dst_eid"),
             F.lit(False).alias("directed"),
             F.col("r").alias("weight"),
         )
-    )
+    else:
+        skel = fisherz_edges(pairwise_corr(mat_bin, nbdf), alpha=0.01)
+    sparse = orient_depth0_edges(skel)
     d = {(r["src_eid"], r["dst_eid"], r["directed"]): r["weight"] for r in dense.collect()}
     s = {(r["src_eid"], r["dst_eid"], r["directed"]): r["weight"] for r in sparse.collect()}
     assert set(d) == set(s) and len(d) > 0

@@ -254,13 +254,10 @@ def pc_units(draw):
     return units, noedge
 
 
-@PROP_KERNEL
-@given(pc_units())
-def test_pc_edges_rows_independent_of_partition_count(spark, case):
-    from logdag_spark.pipeline.pc import pc_edges
-
+def _unit_frames(spark, case, nb):
+    """A :func:`pc_units` case as (matrix, noedge) frames over ``nb``
+    one-minute bins per unit."""
     units, noedge_idx = case
-    nb = 300
     rows = []
     for u, (p, seed) in enumerate(units):
         r = np.random.default_rng(seed)
@@ -274,9 +271,43 @@ def test_pc_edges_rows_independent_of_partition_count(spark, case):
         [(f"u{u}", a, b) for u, a, b in noedge_idx if a != b],
         "unit string, eid1 long, eid2 long",
     )
-    meta = {f"u{u}": (T0, nb) for u in range(len(units))}
+    return mdf, noedge
+
+
+@PROP_KERNEL
+@given(pc_units())
+def test_pc_edges_rows_independent_of_partition_count(spark, case):
+    from logdag_spark.pipeline.pc import pc_edges
+
+    nb = 300
+    mdf, noedge = _unit_frames(spark, case, nb)
+    meta = {f"u{u}": (T0, nb) for u in range(len(case[0]))}
     for ne in (None, noedge):
         one, default, seven = _rows_at_partitions(
             spark, lambda: pc_edges(mdf, meta, timedelta(minutes=1), noedge=ne)
         )
         assert one == default == seven
+
+
+@PROP_KERNEL
+@given(pc_units())
+def test_pair_statistics_rows_independent_of_partition_count(spark, case):
+    """Both consumers of the sparse pair-statistics plan: Pearson r and
+    the G-square contingency test on the binarized series."""
+    from logdag_spark.pipeline.correlate import gsq_edges, pairwise_corr
+    from logdag_spark.session import local_frame
+
+    nb = 300
+    mdf, noedge = _unit_frames(spark, case, nb)
+    nbins = local_frame(
+        spark, [(f"u{u}", nb) for u in range(len(case[0]))], "unit string, n long"
+    )
+    mat_bin = mdf.withColumn("cnt", (F.col("cnt") >= 1).cast("double"))
+    for ne in (None, noedge):
+        for build in (
+            lambda: pairwise_corr(mdf, nbins, noedge=ne),
+            lambda: gsq_edges(mat_bin, nbins, emit_all=True, noedge=ne),
+        ):
+            one, default, seven = _rows_at_partitions(spark, build)
+            assert one == default == seven
+            assert one or ne is not None

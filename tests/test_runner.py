@@ -103,6 +103,60 @@ def test_pc_gsq_e2e(spark, inputs):
     assert res.edges.count() > 0
 
 
+def test_pc_corr_fisherz_binarized_e2e(spark, inputs):
+    """pc-corr with fisherz on binarized series runs the sparse
+    pair-statistics path.  Against the dense depth-0 PC kernel on the
+    pipeline's own unit matrix its skeleton and weights agree on every
+    pair of varying series.  A series constant after binarization
+    (present in every bin) has r = 0, so the sparse test finds it
+    independent of everything; the dense kernel's Fisher-z test instead
+    keeps all its pairs as weight-0 edges (zero variance -> p = 0)."""
+    from logdag_spark.pipeline.correlate import unit_nbins_rows, unit_specs
+    from logdag_spark.pipeline.pc import pc_edges
+
+    labeled, hmeta, tdim = inputs
+    cfg = PipelineConfig(
+        cause_algorithm="pc-corr", ci_func="fisherz", ci_bin_size="5m",
+        binarize=True,
+    )
+    res = run_pipeline(
+        spark, fx.contract(labeled), hmeta, tdim, DT_RANGE, cfg, apply_filters=False
+    )
+    specs = unit_specs(DT_RANGE, cfg, fx.host_rows())
+    nmap = dict(unit_nbins_rows(specs, cfg.bin_size))
+    meta = {u: (dts, nmap[u]) for u, _h, _a, dts, _dte in specs}
+    dense = pc_edges(
+        res.matrix, meta, cfg.bin_size, ci_func="fisherz",
+        alpha=cfg.skeleton_threshold, max_depth=0, binarize=True,
+    )
+    present = {
+        (r["unit"], r["eid"]): r["n1"]
+        for r in res.matrix.groupBy("unit", "eid")
+        .agg(F.sum((F.col("cnt") >= 1).cast("int")).alias("n1"))
+        .collect()
+    }
+
+    def constant(unit, eid):
+        return present[(unit, eid)] in (0, nmap[unit])
+
+    def skeleton(df):
+        return {
+            (r["unit"], min(r["src_eid"], r["dst_eid"]),
+             max(r["src_eid"], r["dst_eid"])): r["weight"]
+            for r in df.collect()
+        }
+
+    got, want = skeleton(res.edges), skeleton(dense)
+    varying = {
+        k: w for k, w in want.items()
+        if not (constant(k[0], k[1]) or constant(k[0], k[2]))
+    }
+    assert set(got) == set(varying) and len(got) > 0
+    for k in varying:
+        assert abs(got[k] - varying[k]) < 1e-9, k
+    assert all(want[k] == 0.0 for k in set(want) - set(varying))
+
+
 def test_lingam_corr_e2e(spark, inputs):
     """lingam-corr mode (reference makedag.py:124-130): pairwise LiNGAM
     edges come out directed with OLS-slope weights."""
@@ -169,6 +223,16 @@ def test_unknown_pk_rule_raises(spark, inputs):
     with pytest.raises(ValueError, match="unknown prior-knowledge rule"):
         run_pipeline(spark, fx.contract(labeled), hmeta, tdim, DT_RANGE, cfg,
                      apply_filters=False)
+
+
+@pytest.mark.parametrize(
+    "field", ["cause_algorithm", "ci_func", "ci_bin_method"]
+)
+def test_config_rejects_unknown_choice(field):
+    """An out-of-set choice fails when the config is built, not inside a
+    Python worker once the lazy plan runs."""
+    with pytest.raises(ValueError, match=field):
+        PipelineConfig(**{field: "bogus"})
 
 
 def test_checkpoint_resume(spark, inputs, tmp_path):

@@ -1,9 +1,13 @@
 """Session helpers: the host-derived driver heap, Arrow-backed local
-frames and the partitioning of grouped-map kernel inputs."""
+frames, the partitioning of grouped-map kernel inputs and the package's
+reach into the Python workers."""
 
 from __future__ import annotations
 
 import os
+import subprocess
+import sys
+import textwrap
 from datetime import datetime, timezone
 
 import pandas as pd
@@ -74,3 +78,28 @@ def test_kernel_groups_runs_one_task_per_shuffle_partition(spark):
         assert "REPARTITION_BY_NUM" in plan and "ENSURE_REQUIREMENTS" not in plan, plan
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)
+
+
+def test_python_workers_import_the_package_from_anywhere(tmp_path):
+    """A driver started outside the checkout, with the package on its own
+    ``sys.path`` only and no ``PYTHONPATH``, runs a Python stage whose
+    function lives in the package: the workers must find it too."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = textwrap.dedent(f"""
+        import sys
+        sys.path.insert(0, {root!r})
+        from logdag_spark.config import str2dur
+        from logdag_spark.session import get_spark
+        spark = get_spark(cores=1)
+        print(spark.sparkContext.parallelize(["90s"], 1).map(str2dur)
+              .map(lambda d: d.total_seconds()).collect())
+        spark.stop()
+    """)
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_GRAFT_DRIVER_MEM"] = "1g"
+    out = subprocess.run(
+        [sys.executable, "-c", script], cwd=tmp_path, env=env,
+        capture_output=True, text=True, timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    assert out.stdout.strip().splitlines()[-1] == "[90.0]"
