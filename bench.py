@@ -1,58 +1,65 @@
 #!/usr/bin/env python
-"""Benchmark harness.
+"""Benchmark harness for the headline numbers.
 
-Measures (1) the flagship tokens->DAG pipeline end-to-end (sequences/sec),
-(2) headline operator queries at $SPARK_GRAFT_SF_DIR, and (3) the
-two-parallelism scaling criterion (same job, same input, N vs 4N cores —
-BENCH/BASELINE.md protocol).  Each parallelism level runs in a FRESH
-subprocess (own JVM) with one untimed warm-up run, then the MINIMUM of
-timed steady-state runs — JIT/codegen warm-up would otherwise contaminate
-whichever level runs second, and the hypervisor intermittently steals
-large CPU slices (min-of-N filters those spikes).
+Measures (1) the flagship tokens->DAG pipeline end to end (sequences/sec)
+on the scale-``SPARK_GRAFT_BENCH_SCALE`` token table, (2) the headline
+operator queries at ``$SPARK_GRAFT_SF_DIR``, and (3) N -> 4N scaling
+efficiency on the same job and input, with N = CPUs // 4 taken from this
+process's CPU affinity, as ``perfbench/report.py --scaling`` does (no
+pair below 4 CPUs: ``scaling`` is null).
+
+Built on the benchmark's modules: ``perfbench/host.py`` pins the CPUs,
+sizes the driver heap and starts and stops every session,
+``perfbench/workloads.run_pass`` is the pipeline pass (workload
+``pipeline_fisherz``), and ``perfbench/report.quartiles`` the quartiles.
+Each parallelism level runs in a fresh subprocess (own JVM): one untimed
+warm-up pass, then TRIALS timed passes.  Every timing is reported as the
+median of its trials; stderr gives the quartiles and n beside each median.
+Each query's row count is checked against the value recorded for its sf
+in ``QUERY_ROWS``: a mismatch fails the query, and the run exits 1.
 
 Prints ONE JSON line:
-  {"metric": ..., "value": <total sec>, "unit": "sec",
-   "queries": {name: sec, ...}, "sf": ...,
-   "pipeline": {rows, seq_per_sec, edges, cores},
+  {"metric": ..., "value": <sum of medians, sec>, "unit": "sec",
+   "queries": {name: median sec, ...}, "sf": ...,
+   "pipeline": {rows, seq_per_sec, edges, cores, walls},
    "scaling": {cores_low, cores_high, rate_low, rate_high, efficiency}}
 
 Env knobs: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-SPARK_GRAFT_CPUS (default 32), SPARK_GRAFT_BENCH_SCALE (default 2000),
+SPARK_GRAFT_CPUS (default: the CPUs this process may run on; refused
+above them), SPARK_GRAFT_BENCH_SCALE (default 2000),
 SPARK_GRAFT_SCALING (default 1), SPARK_GRAFT_BENCH_TRIALS (default 4).
 """
 
 from __future__ import annotations
 
+import dataclasses
 import json
 import os
-import statistics
+import shutil
 import subprocess
 import sys
+import tempfile
 import time
-from datetime import timedelta
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+ROOT = os.path.dirname(os.path.abspath(__file__))
+sys.path[:0] = [ROOT, os.path.join(ROOT, "perfbench")]
+
+import host  # noqa: E402
+import report  # noqa: E402
+import workloads  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", host.usable_cpus()))
 # scale 2000 = 31.4M sequences: sized so the parallel work dominates the
-# per-run fixed cost (~6 s of driver scheduling, commit protocol and
-# small result-side jobs, measured by the Amdahl fit in
-# BENCH/BASELINE.md) at the high parallelism level.  Larger is NOT
-# better: the generator scales series count with rows, and the pairwise
-# co-occurrence cross term grows quadratically in surviving series, so
-# scale 3000 runs ~6x longer per trial (measured) — past the point of
-# diminishing fixed-cost amortization.
+# per-run fixed cost (driver scheduling, commit protocol, small
+# result-side jobs).  Larger is NOT better: the generator scales series
+# count with rows, and the pairwise co-occurrence cross term grows
+# quadratically in surviving series (scale 3000 ran ~6x longer a pass).
 BENCH_SCALE = float(os.environ.get("SPARK_GRAFT_BENCH_SCALE", "2000"))
 RUN_SCALING = os.environ.get("SPARK_GRAFT_SCALING", "1") == "1"
 TRIALS = int(os.environ.get("SPARK_GRAFT_BENCH_TRIALS", "4"))
-# N -> 4N scaling pair.  This VM advertises 32 vCPUs but delivers ~16
-# physical cores (SMT): a raw numpy multiprocessing probe scales ~1.0 from
-# 1->8 workers and only ~0.53 from 8->32.  The honest 4x pair that stays
-# within physical capacity is 2 -> 8 cores (BENCH/BASELINE.md).
-SCALE_LOW = int(os.environ.get("SPARK_GRAFT_SCALE_LOW", "2"))
-SCALE_HIGH = 4 * SCALE_LOW
 TOKENS_PATH = f"/tmp/logdag_bench_tokens_{BENCH_SCALE}"
+WORKLOAD = workloads.WORKLOADS["pipeline_fisherz"]
 
 HEADLINE = [
     "tumbling_count_1m",
@@ -70,23 +77,18 @@ HEADLINE = [
     "gsq_edges_1h",
 ]
 
+# row count of each headline query, in HEADLINE order, per testdata scale factor
+QUERY_ROWS: dict[float, dict[str, int]] = {
+    0.001: dict(zip(HEADLINE, (1000, 1950, 10, 7, 6, 25, 75, 500, 35, 990, 100, 100, 10))),
+    0.01: dict(zip(HEADLINE, (9788, 16040, 10, 6, 6, 25, 75, 500, 33, 964, 100, 100, 10))),
+    0.1: dict(zip(HEADLINE, (80020, 42758, 10, 2, 6, 25, 75, 5000, 1251, 91845, 100, 100, 10))),
+}
 
-def _spark(cores: int):
-    from logdag_spark.session import get_spark
 
-    return get_spark(
-        app_name=f"logdag_bench_{cores}", cores=cores,
-        shuffle_partitions=cores,
-        extra_conf={
-            # many small input splits so task waves are even at every
-            # parallelism level (default 128MB gives local[8] a handful
-            # of splits -> the last partial wave idles ~25% of the
-            # cores; 8MB ~= 100 splits makes the quantization loss <5%
-            # at both levels, modelling a real cluster where splits >>
-            # cores)
-            "spark.sql.files.maxPartitionBytes": "8388608",
-        },
-    )
+def scaling_pair(cpus: int) -> tuple[int, int] | None:
+    """(N, 4N) with N = cpus // 4, or None when 4 CPUs are not there."""
+    low = cpus // 4
+    return (low, 4 * low) if low >= 1 else None
 
 
 def materialize_tokens(spark) -> int:
@@ -101,229 +103,138 @@ def materialize_tokens(spark) -> int:
     return spark.read.parquet(TOKENS_PATH).count()
 
 
-_TOKEN_SCHEMA = None
+def pipeline_worker(cores: int, rows: int) -> None:
+    """Subprocess entry: on ``cores`` pinned CPUs, one warm-up pass and
+    TRIALS timed passes of ``pipeline_fisherz``; JSON to stdout."""
+    scratch = tempfile.mkdtemp(prefix="logdag_bench_")
+    try:
+        host.configure(cores, ROOT, scratch)
+        spark = host.start_spark(cores)
+        try:
+            inp = dataclasses.replace(
+                workloads.register_inputs(spark, TOKENS_PATH), rows=rows)
+            wh = os.path.join(scratch, "warehouse")
+            walls = []
+            # the first pass warms up the JIT, codegen and Python workers
+            for trial in range(TRIALS + 1):
+                wall, edges = workloads.run_pass(spark, inp, WORKLOAD, wh)
+                n_edges = edges.count()
+                spark.catalog.clearCache()
+                if trial:
+                    walls.append(round(wall, 3))
+        finally:
+            host.stop_spark(spark)
+    finally:
+        shutil.rmtree(scratch, ignore_errors=True)
+    print(json.dumps({"cores": cores, "walls": walls, "rows": rows, "edges": n_edges}))
 
 
-def run_pipeline_once(spark) -> tuple[float, int, int]:
-    import shutil
-
-    from logdag_spark import fixtures as fx
-    from logdag_spark.config import PipelineConfig
-    from logdag_spark.fixtures.generator import DEFAULT_T0
-    from logdag_spark.io.catalog import Catalog
-    from logdag_spark.pipeline.runner import run_pipeline
-
-    # infer the token schema once per process: per-trial footer
-    # inference is serial overhead repeated TRIALS times
-    global _TOKEN_SCHEMA
-    if _TOKEN_SCHEMA is None:
-        _TOKEN_SCHEMA = spark.read.parquet(TOKENS_PATH).schema
-    tokens = spark.read.schema(_TOKEN_SCHEMA).parquet(TOKENS_PATH)
-    cfg = PipelineConfig(cause_algorithm="pc-corr", ci_bin_size="1m")
-    # disk-backed stage checkpoints (the production flow): heap-based
-    # localCheckpoint accumulates blocks across trials and triggers GC
-    # storms that destroy timing stability
-    wh = f"/tmp/logdag_bench_wh_{os.getpid()}"
-    shutil.rmtree(wh, ignore_errors=True)
-    # lz4 checkpoints: on local NVMe the events_ts write is CPU-bound and
-    # lz4 beats the zstd default by ~3 s at this scale (see Catalog
-    # docstring; zstd stays the default for object-store deployments)
-    cat = Catalog(spark, wh, codec="lz4")
-    t0 = time.monotonic()
-    res = run_pipeline(
-        spark, tokens, fx.host_meta(spark), fx.template_dim(spark),
-        (DEFAULT_T0, DEFAULT_T0 + timedelta(hours=24)), cfg,
-        catalog=cat, apply_filters=True,
-        # dimension metadata is driver-resident configuration (the
-        # reference loads area defs + the template dictionary at startup);
-        # passing it skips two pure-serial collect jobs per trial that
-        # would otherwise sit directly on the Amdahl floor the scaling
-        # rule measures
-        hosts=fx.host_rows(),
-        template_specs=[(s["gid"], s["pattern"]) for s in fx.template_specs()],
-        # checkpoint the ingest barrier and the result; the tiny
-        # intermediate tables are cached instead (3 extra serial writes
-        # would otherwise dominate the scaling measurement's fixed cost)
-        checkpoint_stages=("events_ts", "dag_edges"),
-    )
-    # edge count = the observed row count of the dag_edges checkpoint
-    # write (rides the write job); a count() on the re-read checkpoint
-    # would be one more pure-serial job inside the timed window
-    n_edges = cat.rows_written["dag_edges"]
-    wall = time.monotonic() - t0
-    n_rows = tokens.count()
-    spark.catalog.clearCache()
-    return wall, n_rows, n_edges
-
-
-def pipeline_worker(cores: int) -> None:
-    """Subprocess entry: warm-up + TRIALS timed runs, JSON to stdout.
-
-    The process is pinned to exactly ``cores`` CPUs — without affinity a
-    local[2] JVM still spreads GC/JIT/shuffle-IO/python-worker threads
-    over every core, which inflates the low-parallelism rate and corrupts
-    the N-vs-4N efficiency measurement (a real 2-executor allocation has
-    2 cores, full stop).
-    """
-    os.sched_setaffinity(0, set(range(cores)))
-    probe = _host_probe()
-    spark = _spark(cores)
-    materialize_tokens(spark)
-    run_pipeline_once(spark)  # warm-up (JIT, codegen cache, python workers)
-    walls, rows, edges = [], 0, 0
-    for _ in range(TRIALS):
-        w, rows, edges = run_pipeline_once(spark)
-        walls.append(w)
-    spark.stop()
-    # min-of-trials: the hypervisor intermittently steals large CPU slices
-    # (measured 4-15x outliers on identical work); the minimum is the
-    # closest estimate of true machine capability
-    print(json.dumps({
-        "cores": cores,
-        "wall": min(walls),
-        "walls": [round(w, 2) for w in walls],
-        "rows": rows,
-        "edges": edges,
-        "probe_s": probe,
-    }))
-
-
-def _host_probe() -> float:
-    """Single-thread raw-CPU probe (fixed numpy matmul), min of 3.
-
-    Spark-free evidence of host state at the moment a phase ran: the
-    hypervisor's steal windows inflate this the same way they inflate
-    the pipeline walls, so a phase whose probe is 1.2x another phase's
-    probe was measured on a 1.2x-slower machine — the scaling-efficiency
-    comparison between those phases is confounded by host drift, not
-    code.  Recorded per phase in the bench JSON."""
-    # single BLAS thread so the probe measures the same thing at every
-    # affinity level (must be set before numpy first loads its BLAS;
-    # the probe runs before any pipeline import in the worker process)
-    for var in ("OMP_NUM_THREADS", "OPENBLAS_NUM_THREADS", "MKL_NUM_THREADS"):
-        os.environ.setdefault(var, "1")
-    import numpy as np
-
-    a = np.random.default_rng(0).standard_normal((384, 384))
-    best = float("inf")
-    for _ in range(3):
-        t0 = time.monotonic()
-        b = a
-        for _ in range(24):
-            b = (a @ b) / 384.0
-        best = min(best, time.monotonic() - t0)
-    return round(best, 4)
-
-
-def _run_worker(cores: int) -> dict:
+def _run_worker(cores: int, rows: int) -> dict:
     out = subprocess.run(
-        [sys.executable, os.path.abspath(__file__), "--pipeline-worker", str(cores)],
-        capture_output=True, text=True, check=True,
-        env={**os.environ, "SPARK_GRAFT_BENCH_SCALE": str(BENCH_SCALE)},
+        [sys.executable, os.path.abspath(__file__), "--pipeline-worker",
+         str(cores), str(rows)],
+        stdout=subprocess.PIPE, text=True, check=True,
     )
-    return json.loads(out.stdout.strip().splitlines()[-1])
+    res = json.loads(out.stdout.strip().splitlines()[-1])
+    return {**res, **_stats(f"pipeline local[{cores}]", res["walls"])}
 
 
-def main() -> None:
-    if len(sys.argv) >= 3 and sys.argv[1] == "--pipeline-worker":
-        pipeline_worker(int(sys.argv[2]))
-        return
+def _stats(name: str, walls: list[float], note: str = "") -> dict:
+    """Median, quartiles and n of ``walls``, also printed to stderr."""
+    q1, med, q3 = report.quartiles(walls)
+    print(f"[bench] {name:28s} median {med:9.3f} s  q1 {q1:9.3f}  q3 {q3:9.3f}"
+          f"  n {len(walls)}{note}", file=sys.stderr, flush=True)
+    return {"median": med, "q1": q1, "q3": q3, "n": len(walls)}
 
+
+def time_queries(spark, sf_dir: str, names: list[str], trials: int,
+                 rows: dict[str, int]) -> dict[str, dict]:
+    """Each query timed ``trials`` times, cache cleared between trials.
+    A query fails when the row count of a trial (its timed ``.count()``)
+    differs from ``rows[name]``, or across trials where none is recorded."""
     from logdag_spark.entry_queries import QUERIES
 
-    # materialize the token input once (untimed) before workers run
-    spark = _spark(CPUS)
-    materialize_tokens(spark)
-    spark.stop()
-
-    high = _run_worker(SCALE_HIGH)
-    scaling = None
-    if RUN_SCALING:
-        low = _run_worker(SCALE_LOW)
-        # second high-parallelism phase AFTER the low one, keep the better:
-        # the two phases of a sequential protocol sit ~10 min apart and the
-        # hypervisor's steal windows operate on that timescale — a measured
-        # run recorded efficiency 0.765 with the 8-core phase in a steal
-        # window and 0.822 without, while a raw-CPU probe scaled 0.959
-        # either way.  min-of-TRIALS handles within-phase spikes; the
-        # repeat phase handles between-phase drift.
-        high2 = _run_worker(SCALE_HIGH)
-        if high2["wall"] < high["wall"]:
-            high = high2
-
-        def _eff() -> float:
-            return ((high["rows"] / high["wall"]) / (low["rows"] / low["wall"])) / (
-                SCALE_HIGH / SCALE_LOW
-            )
-
-        # symmetric repeat, adaptively: steal windows only ever SLOW a
-        # phase down, so min-wall per phase converges to true machine
-        # capability at that parallelism — but a slowed LOW phase
-        # inflates efficiency while a slowed HIGH phase deflates it.
-        # When the first pass looks implausibly unbalanced in either
-        # direction (outside [0.78, 0.92] — a clean host measures
-        # 0.80-0.88 on this code), re-measure the LOW phase too and keep
-        # its better run, so both sides of the ratio are min-wall
-        # estimates.  One run recorded 0.753 with the 8-core phases in a
-        # visible steal window (walls 35.4 -> 27.0 trending down) and
-        # the per-phase raw-CPU probe confirms which phase was slowed.
-        if not (0.78 <= _eff() <= 0.92):
-            low2 = _run_worker(SCALE_LOW)
-            if low2["wall"] < low["wall"]:
-                low = low2
-            high3 = _run_worker(SCALE_HIGH)
-            if high3["wall"] < high["wall"]:
-                high = high3
-        scaling = {
-            "cores_low": SCALE_LOW,
-            "cores_high": SCALE_HIGH,
-            "rate_low": round(low["rows"] / low["wall"], 1),
-            "rate_high": round(high["rows"] / high["wall"], 1),
-            "efficiency": round(_eff(), 3),
-            "probe_low_s": low.get("probe_s"),
-            "probe_high_s": high.get("probe_s"),
-        }
-    pipeline = {
-        "rows": high["rows"],
-        "seq_per_sec": round(high["rows"] / high["wall"], 1),
-        "edges": high["edges"],
-        "cores": SCALE_HIGH,
-        "walls": high["walls"],
-    }
-    q_times: dict[str, float] = {"pipeline_e2e": round(high["wall"], 3)}
-
-    spark = _spark(CPUS)
-    for name in HEADLINE:
+    out = {}
+    for name in names:
         fn, _ = QUERIES[name]
-        # min-of-3: a single cold run mixes JIT/codegen warm-up and
-        # hypervisor steal spikes into operator latency (observed 8x
-        # swings on identical queries), and for queries with large
-        # generated classes (simhash's packed-lane aggregate) HotSpot is
-        # still compiling during the SECOND run (measured 11.5 / 6.7 /
-        # 3.1 s on identical input) — the min of three is the steady-state
-        trials = []
-        for _ in range(3):
+        walls, counts = [], set()
+        for _ in range(trials):
             t0 = time.monotonic()
-            fn(spark, SF_DIR).count()
-            trials.append(time.monotonic() - t0)
-            # operators that persist a self-join input (dedup LSH frames,
-            # binned-series frames) must re-COMPUTE it each trial — a
-            # cross-trial cache hit would time only the downstream join
+            counts.add(fn(spark, sf_dir).count())
+            walls.append(round(time.monotonic() - t0, 3))
+            # operators that persist a self-join input must re-compute it
+            # each trial: a cross-trial cache hit would time only the join
             spark.catalog.clearCache()
-        q_times[name] = round(min(trials), 3)
-    spark.stop()
+        want = {rows[name]} if name in rows else counts
+        ok = len(counts) == 1 and counts == want
+        note = f"  rows {sorted(counts)}" + ("" if ok else f" FAILED, recorded {sorted(want)}")
+        out[name] = {**_stats(name, walls, note), "rows": sorted(counts), "ok": ok}
+    return out
 
-    out = {
+
+def main() -> int:
+    if len(sys.argv) >= 4 and sys.argv[1] == "--pipeline-worker":
+        pipeline_worker(int(sys.argv[2]), int(sys.argv[3]))
+        return 0
+    if CPUS > host.usable_cpus():
+        print(f"bench: {host.usable_cpus()} CPUs usable, SPARK_GRAFT_CPUS={CPUS}: "
+              "refusing to run", file=sys.stderr)
+        return 2
+    sf = float(SF_DIR.rstrip("/").rsplit("sf", 1)[-1])
+    scratch = tempfile.mkdtemp(prefix="logdag_bench_")
+    try:
+        host.configure(CPUS, ROOT, scratch)
+        # materialize the token input once (untimed) before workers run
+        spark = host.start_spark(CPUS)
+        try:
+            rows = materialize_tokens(spark)
+        finally:
+            host.stop_spark(spark)
+
+        pair = scaling_pair(len(os.sched_getaffinity(0)))
+        high = _run_worker(pair[1] if pair else CPUS, rows)
+        scaling = None
+        if RUN_SCALING and pair:
+            low = _run_worker(pair[0], rows)
+            rate_low, rate_high = rows / low["median"], rows / high["median"]
+            scaling = {
+                "cores_low": pair[0],
+                "cores_high": pair[1],
+                "rate_low": round(rate_low, 1),
+                "rate_high": round(rate_high, 1),
+                "efficiency": round(rate_high / rate_low / 4, 3),
+            }
+
+        spark = host.start_spark(CPUS)
+        try:
+            stats = time_queries(spark, SF_DIR, HEADLINE, TRIALS, QUERY_ROWS.get(sf, {}))
+        finally:
+            host.stop_spark(spark)
+    finally:
+        shutil.rmtree(scratch, ignore_errors=True)
+
+    q_times = {"pipeline_e2e": round(high["median"], 3)}
+    q_times.update({name: round(s["median"], 3) for name, s in stats.items()})
+    print(json.dumps({
         "metric": "tokens_to_dag_e2e_plus_headline_queries",
         "value": round(sum(q_times.values()), 3),
         "unit": "sec",
         "queries": q_times,
-        "sf": float(SF_DIR.rstrip("/").rsplit("sf", 1)[-1]),
-        "pipeline": pipeline,
+        "sf": sf,
+        "pipeline": {
+            "rows": rows,
+            "seq_per_sec": round(rows / high["median"], 1),
+            "edges": high["edges"],
+            "cores": high["cores"],
+            "walls": high["walls"],
+        },
         "scaling": scaling,
-    }
-    print(json.dumps(out))
+    }), flush=True)
+    failed = [name for name, s in stats.items() if not s["ok"]]
+    if failed:
+        print(f"bench: wrong row count from {', '.join(failed)}", file=sys.stderr)
+    return 1 if failed else 0
 
 
 if __name__ == "__main__":
-    main()
+    sys.exit(main())

@@ -150,8 +150,9 @@ def _host_pruned_sides(
     ev_hosts: DataFrame | None,
     allowed_hosts: DataFrame | None,
 ):
-    """Tag the co-occurrence join sides with their event's host (broadcast
-    join on the tiny per-unit event dim) and return the pair predicate for
+    """Tag the two sides of a pair join, ``a(unit, eid1, ...)`` and
+    ``b(unit, eid2, ...)``, with their event's host (broadcast join on the
+    tiny per-unit event dim) and return the pair predicate for
     host-level prior-knowledge rules: a cross-host pair survives only if
     its (host1, host2) is in ``allowed_hosts`` (symmetric, both orders);
     same-host pairs always survive (every host-level reference rule allows
@@ -206,13 +207,9 @@ def _pair_stats(
     anti-joins the pair frame before the cross terms are attached, and
     host-level rules push an ``allowed_hosts(host1, host2)`` filter (with
     ``ev_hosts(unit, eid, host)``) into the co-occurrence self-join itself
-    — at 100x scale that join is where the quadratic bill lands.
-
-    Invariant: every pair cut by the host filter must also be in
-    ``noedge`` (i.e. ``allowed_hosts`` over-approximates the rules that
-    produced ``noedge`` — :func:`pknowledge.host_allow_pairs` guarantees
-    it); a host-pruned pair still in the pair universe would surface with
-    a silently zeroed cross term.
+    — at 100x scale that join is where the quadratic bill lands — and
+    into the pair frame, so a host-pruned pair is absent from the output
+    rather than present without its cross term.
     """
     stats = (
         matrix.groupBy("unit", "eid")
@@ -238,7 +235,10 @@ def _pair_stats(
         F.col("sx").alias("sx2"),
         F.col("sxx").alias("sxx2"),
     )
-    pairs = s1.join(s2, "unit").where(F.col("eid1") < F.col("eid2"))
+    s1, s2, _ = _host_pruned_sides(s1, s2, ev_hosts, allowed_hosts)
+    pairs = _apply_host_filter(
+        s1.join(s2, "unit").where(F.col("eid1") < F.col("eid2")), host_ok
+    )
     if noedge is not None:
         ne = noedge.select("unit", "eid1", "eid2")
         pairs = pairs.join(ne, ["unit", "eid1", "eid2"], "left_anti")
@@ -345,8 +345,8 @@ def gsq_edges(
 
     Prior-knowledge pushdown is :func:`_pair_stats`'s: ``noedge``
     anti-joins the pair universe before contingency stats attach, and
-    host-level rules filter the (unit, bin) self-join via
-    ``ev_hosts``/``allowed_hosts``.
+    host-level rules (``ev_hosts``/``allowed_hosts``) filter both the
+    (unit, bin) self-join and the pair universe.
     """
     crit = chi2_crit_1dof(alpha)
     # presence indicators over ALL events in the matrix: an all-zero

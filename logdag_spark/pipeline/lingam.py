@@ -21,14 +21,13 @@ from __future__ import annotations
 
 import math
 from datetime import datetime, timedelta
+from itertools import combinations
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
-from logdag_spark.config import to_utc_ms
-from logdag_spark.pipeline.pc import EDGE_SCHEMA, NOEDGE_SCHEMA
-from logdag_spark.session import kernel_groups, local_frame
+from logdag_spark.pipeline.pc import EDGE_COLUMNS, _per_unit_edges
 
 _K1, _K2, _GAMMA = 79.047, 7.4129, 0.37457
 
@@ -330,9 +329,7 @@ def lingam_matrix_to_edges(unit: str, B: np.ndarray, eids: np.ndarray) -> pd.Dat
         for j in range(B.shape[1])
         if B[i, j] != 0
     ]
-    return pd.DataFrame(
-        rows, columns=["unit", "src_eid", "dst_eid", "directed", "weight"]
-    )
+    return pd.DataFrame(rows, columns=EDGE_COLUMNS)
 
 
 def lingam_edges(
@@ -365,50 +362,21 @@ def lingam_edges(
     ``method``/``bin_diff`` must match the discretize stage (bin labels
     step by bin_diff for slide/radius).
     """
-    from logdag_spark.pipeline.pc import assemble_unit_matrix, label_step_ms
-
     if algorithm not in ("direct", "ica"):
         raise ValueError(f"invalid lingam algorithm {algorithm!r}")
-    spark = matrix.sparkSession
-    step_ms, offset_ms = label_step_ms(bin_size, method, bin_diff)
-    meta = {u: (to_utc_ms(t0), nb) for u, (t0, nb) in unit_meta.items()}
 
-    def kernel(mdf: pd.DataFrame, ndf: pd.DataFrame) -> pd.DataFrame:
-        if len(mdf) == 0:
-            return pd.DataFrame(
-                columns=["unit", "src_eid", "dst_eid", "directed", "weight"]
-            )
-        unit = mdf["unit"].iloc[0]
-        t0_ms, nb = meta[unit]
-        mat, eids = assemble_unit_matrix(mdf, t0_ms, nb, step_ms, offset_ms)
-        pos = {e: k for k, e in enumerate(eids)}
-        pk = None
-        if len(ndf):
-            pk = np.full((len(eids), len(eids)), -1, dtype=np.int64)
-            for _, r in ndf.iterrows():
-                a, b = pos.get(r["eid1"]), pos.get(r["eid2"])
-                if a is not None and b is not None:
-                    pk[a, b] = pk[b, a] = 0
+    def fit(unit, mat, eids, banned):
+        pk = np.where(banned, 0, -1) if banned.any() else None
         if algorithm == "direct":
             order = causal_order(mat, pk=pk)
             B = fit_coefficients(mat, order, th, pk=pk)
         else:
             order = ica_causal_order(mat, max_iter=ica_max_iter)
             B = fit_coefficients(mat, order, th)
-            if pk is not None:
-                B[pk == 0] = 0.0
+            B[banned] = 0.0
         return lingam_matrix_to_edges(unit, B, eids)
 
-    if noedge is None:
-        noedge = local_frame(spark, [], NOEDGE_SCHEMA)
-    else:
-        # fresh attribute ids (see pc_edges: cogroup self-join ambiguity)
-        noedge = noedge.select("unit", "eid1", "eid2").toDF("unit", "eid1", "eid2")
-    return (
-        kernel_groups(matrix, "unit")
-        .cogroup(kernel_groups(noedge, "unit"))
-        .applyInPandas(kernel, EDGE_SCHEMA)
-    )
+    return _per_unit_edges(matrix, unit_meta, bin_size, noedge, method, bin_diff, fit)
 
 
 def lingam_corr_edges(
@@ -439,48 +407,23 @@ def lingam_corr_edges(
     ``combinations(data.columns, 2)`` in-process too), so one shuffle
     of |series|×|bins| rows, no duplication.
     """
-    from itertools import combinations
-
-    from logdag_spark.pipeline.pc import assemble_unit_matrix, label_step_ms
-
     if algorithm not in ("direct", "ica"):
         raise ValueError(f"invalid lingam algorithm {algorithm!r}")
-    spark = matrix.sparkSession
-    step_ms, offset_ms = label_step_ms(bin_size, method, bin_diff)
-    meta = {u: (to_utc_ms(t0), nb) for u, (t0, nb) in unit_meta.items()}
-    out_cols = ["unit", "src_eid", "dst_eid", "directed", "weight"]
 
-    if noedge is None:
-        noedge = local_frame(spark, [], NOEDGE_SCHEMA)
-    else:
-        noedge = noedge.select("unit", "eid1", "eid2").toDF("unit", "eid1", "eid2")
-
-    def kernel(mdf: pd.DataFrame, ndf: pd.DataFrame) -> pd.DataFrame:
-        if len(mdf) == 0:
-            return pd.DataFrame(columns=out_cols)
-        unit = mdf["unit"].iloc[0]
-        t0_ms, nb = meta[unit]
-        mat, eids = assemble_unit_matrix(mdf, t0_ms, nb, step_ms, offset_ms)
-        banned = {
-            frozenset((r["eid1"], r["eid2"])) for _, r in ndf.iterrows()
-        }
+    def fit(unit, mat, eids, banned):
         rows = []
         for a, b in combinations(range(len(eids)), 2):
-            if frozenset((int(eids[a]), int(eids[b]))) in banned:
+            if banned[a, b]:
                 continue
-            fit = fit_pair(
+            res = fit_pair(
                 mat[:, a], mat[:, b], algorithm=algorithm,
                 lower_limit=lower_limit,
             )
-            if fit is None:
+            if res is None:
                 continue
-            direction, coef = fit
+            direction, coef = res
             src, dst = (a, b) if direction == 0 else (b, a)
             rows.append((unit, int(eids[src]), int(eids[dst]), True, coef))
-        return pd.DataFrame(rows, columns=out_cols)
+        return pd.DataFrame(rows, columns=EDGE_COLUMNS)
 
-    return (
-        kernel_groups(matrix, "unit")
-        .cogroup(kernel_groups(noedge, "unit"))
-        .applyInPandas(kernel, EDGE_SCHEMA)
-    )
+    return _per_unit_edges(matrix, unit_meta, bin_size, noedge, method, bin_diff, fit)

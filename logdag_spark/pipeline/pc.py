@@ -44,6 +44,7 @@ from logdag_spark.session import kernel_groups, local_frame
 EDGE_SCHEMA = (
     "unit string, src_eid long, dst_eid long, directed boolean, weight double"
 )
+EDGE_COLUMNS = ["unit", "src_eid", "dst_eid", "directed", "weight"]
 NOEDGE_SCHEMA = "unit string, eid1 long, eid2 long"
 
 
@@ -351,7 +352,10 @@ def estimate_dag_matrix(
     data = (mat >= 1).astype(np.int8) if binarize else mat
     with np.errstate(invalid="ignore"):
         corr = np.corrcoef(data.astype(float), rowvar=False)
+    # a constant series has no correlation (NaN row); its diagonal is
+    # still 1, so the Fisher-z test finds it independent of every series
     corr = np.nan_to_num(corr)
+    np.fill_diagonal(corr, 1.0)
     if ci_func == "fisherz":
         ci = partial(ci_fisherz_batch, corr, n)
     elif ci_func == "gsq":
@@ -382,9 +386,7 @@ def graph_to_edges(unit: str, g: np.ndarray, corr: np.ndarray, eids: np.ndarray)
                     rows.append((unit, int(eids[i]), int(eids[j]), False, float(corr[i, j])))
             else:
                 rows.append((unit, int(eids[i]), int(eids[j]), True, float(corr[i, j])))
-    return pd.DataFrame(
-        rows, columns=["unit", "src_eid", "dst_eid", "directed", "weight"]
-    )
+    return pd.DataFrame(rows, columns=EDGE_COLUMNS)
 
 
 def label_step_ms(
@@ -421,25 +423,26 @@ def assemble_unit_matrix(
     return mat, eids
 
 
-def pc_edges(
+def _per_unit_edges(
     matrix: DataFrame,
     unit_meta: dict[str, tuple[datetime, int]],
     bin_size: timedelta,
-    ci_func: str = "fisherz",
-    alpha: float = 0.01,
-    max_depth: int = -1,
-    binarize: bool | None = None,
-    noedge: DataFrame | None = None,
-    method: str = "sequential",
-    bin_diff: timedelta | None = None,
+    noedge: DataFrame | None,
+    method: str,
+    bin_diff: timedelta | None,
+    fit,
 ) -> DataFrame:
-    """Distributed PC over all units.
+    """Grouped-map scaffold of the per-unit kernels (PC, LiNGAM).
 
-    ``matrix`` is the long-form (unit, eid, bin, cnt); ``unit_meta`` maps
-    unit -> (range start, n_bins) (tiny, closure-captured).  ``noedge`` is
-    an optional (unit, eid1, eid2) prior-knowledge frame cogrouped in.
-    ``method``/``bin_diff`` must match the discretize stage so bin labels
-    map back to the right matrix row for slide/radius binning.
+    ``matrix`` is the long-form (unit, eid, bin, cnt), cogrouped by unit
+    with the optional prior-knowledge ``noedge`` (unit, eid1, eid2).
+    Each unit's rows become its dense (bins x events) matrix, and
+    ``fit(unit, mat, eids, banned)`` returns the unit's edge rows;
+    ``banned`` is the symmetric (events x events) mask of its noedge
+    pairs.  ``unit_meta`` maps unit -> (range start, n_bins) (tiny,
+    closure-captured).  ``method``/``bin_diff`` must match the discretize
+    stage so bin labels map back to the right matrix row for slide/radius
+    binning.
     """
     spark = matrix.sparkSession
     step_ms, offset_ms = label_step_ms(bin_size, method, bin_diff)
@@ -447,22 +450,17 @@ def pc_edges(
 
     def kernel(mdf: pd.DataFrame, ndf: pd.DataFrame) -> pd.DataFrame:
         if len(mdf) == 0:
-            return pd.DataFrame(
-                columns=["unit", "src_eid", "dst_eid", "directed", "weight"]
-            )
+            return pd.DataFrame(columns=EDGE_COLUMNS)
         unit = mdf["unit"].iloc[0]
         t0_ms, nb = meta[unit]
         mat, eids = assemble_unit_matrix(mdf, t0_ms, nb, step_ms, offset_ms)
-        pos = {e: k for k, e in enumerate(eids)}
-        init = np.ones((len(eids), len(eids)), dtype=bool)
+        banned = np.zeros((len(eids), len(eids)), dtype=bool)
         if len(ndf):
-            a = ndf["eid1"].map(pos).to_numpy()
-            b = ndf["eid2"].map(pos).to_numpy()
-            ok = ~(pd.isna(a) | pd.isna(b))
-            ai, bi = a[ok].astype(int), b[ok].astype(int)
-            init[ai, bi] = init[bi, ai] = False
-        g, corr = estimate_dag_matrix(mat, ci_func, alpha, max_depth, init, binarize)
-        return graph_to_edges(unit, g, corr, eids)
+            pos = pd.Index(eids)
+            a, b = pos.get_indexer(ndf["eid1"]), pos.get_indexer(ndf["eid2"])
+            ok = (a >= 0) & (b >= 0)
+            banned[a[ok], b[ok]] = banned[b[ok], a[ok]] = True
+        return fit(unit, mat, eids, banned)
 
     if noedge is None:
         noedge = local_frame(spark, [], NOEDGE_SCHEMA)
@@ -476,6 +474,30 @@ def pc_edges(
         .cogroup(kernel_groups(noedge, "unit"))
         .applyInPandas(kernel, EDGE_SCHEMA)
     )
+
+
+def pc_edges(
+    matrix: DataFrame,
+    unit_meta: dict[str, tuple[datetime, int]],
+    bin_size: timedelta,
+    ci_func: str = "fisherz",
+    alpha: float = 0.01,
+    max_depth: int = -1,
+    binarize: bool | None = None,
+    noedge: DataFrame | None = None,
+    method: str = "sequential",
+    bin_diff: timedelta | None = None,
+) -> DataFrame:
+    """Distributed PC over all units: :func:`estimate_dag_matrix` per unit
+    in the :func:`_per_unit_edges` scaffold (same ``matrix``,
+    ``unit_meta``, ``noedge``, ``method``/``bin_diff``); a unit's noedge
+    pairs start out non-adjacent."""
+
+    def fit(unit, mat, eids, banned):
+        g, corr = estimate_dag_matrix(mat, ci_func, alpha, max_depth, ~banned, binarize)
+        return graph_to_edges(unit, g, corr, eids)
+
+    return _per_unit_edges(matrix, unit_meta, bin_size, noedge, method, bin_diff, fit)
 
 
 def orient_depth0_edges(edges: DataFrame) -> DataFrame:
@@ -497,9 +519,7 @@ def orient_depth0_edges(edges: DataFrame) -> DataFrame:
 def orient_depth0_unit(edf: pd.DataFrame) -> pd.DataFrame:
     """:func:`orient_depth0_edges` on one unit's skeleton rows."""
     if len(edf) == 0:
-        return pd.DataFrame(
-            columns=["unit", "src_eid", "dst_eid", "directed", "weight"]
-        )
+        return pd.DataFrame(columns=EDGE_COLUMNS)
     unit = edf["unit"].iloc[0]
     src, dst = edf["src_eid"].to_numpy(), edf["dst_eid"].to_numpy()
     nodes = np.unique(np.concatenate([src, dst]))

@@ -159,3 +159,36 @@ def test_gsq_edges_matches_dense_kernel(spark):
             # decision parity with the grouped-map kernel's CI test
             p_dense = ci_test_gsq(dense, i, j, ())
             assert (got[key] > crit) == (p_dense < 0.01), (i, j)
+
+
+def test_gsq_edges_host_rules_prune_the_pair_universe(spark, slice_outputs):
+    """With a noedge pair and a one-host-pair allow set, gsq_edges returns
+    exactly the unpruned rows minus the noedge pair and the cross-host
+    pairs the allow set cuts (a cut pair is absent, not tested without
+    its co-occurrences)."""
+    from logdag_spark.pipeline.correlate import gsq_edges
+
+    ed, mat, nb, _ = slice_outputs
+    host = {(r["unit"], r["eid"]): r["host"] for r in ed.collect()}
+    allowed = {("host00", "host01"), ("host01", "host00")}
+    unit = next(iter(host))[0]
+    a = min(e for (u, e), h in host.items() if h == "host00")
+    b = min(e for (u, e), h in host.items() if h == "host01")
+    noedge = spark.createDataFrame([(unit, a, b)], "unit string, eid1 long, eid2 long")
+
+    def rows(df):
+        return {
+            (r["unit"], r["eid1"], r["eid2"]): (r["n"], r["n11"], r["g2"], r["r"], r["dep"])
+            for r in df.collect()
+        }
+
+    got = rows(gsq_edges(
+        mat, nb, emit_all=True, noedge=noedge, ev_hosts=ed.select("unit", "eid", "host"),
+        allowed_hosts=spark.createDataFrame(sorted(allowed), "host1 string, host2 string"),
+    ))
+    want = {
+        k: v for k, v in rows(gsq_edges(mat, nb, emit_all=True)).items()
+        if k != (unit, a, b)
+        and (host[k[:2]] == host[(k[0], k[2])] or (host[k[:2]], host[(k[0], k[2])]) in allowed)
+    }
+    assert got == want and any(host[k[:2]] != host[(k[0], k[2])] for k in got)

@@ -229,3 +229,24 @@ def test_sparse_pc_corr_matches_dense_kernel(spark, ci_func):
     assert set(d) == set(s) and len(d) > 0
     for k in d:
         assert abs(d[k] - s[k]) < 1e-9, k
+
+
+def test_pc_edges_fisherz_constant_series_is_independent(spark):
+    """A series with the same count in every bin has no correlation with
+    anything: Fisher-z PC gives it no edge, whatever else the unit holds."""
+    t0 = datetime(2024, 1, 1, tzinfo=timezone.utc)
+    nb = 500
+    r = np.random.default_rng(5)
+    x = r.poisson(2, nb)
+    y = x + r.poisson(1, nb)
+    z = y + r.poisson(1, nb)
+    rows = [
+        ("u", eid, t0 + timedelta(minutes=b), float(series[b]))
+        for eid, series in [(0, x), (1, y), (2, z), (3, np.ones(nb))]
+        for b in range(nb)
+        if series[b] > 0
+    ]
+    mdf = spark.createDataFrame(rows, "unit string, eid long, bin timestamp, cnt double")
+    edges = pc_edges(mdf, {"u": (t0, nb)}, timedelta(minutes=1), ci_func="fisherz", alpha=0.01)
+    got = {(r["src_eid"], r["dst_eid"]) for r in edges.collect()}
+    assert got and not any(3 in e for e in got), got

@@ -151,11 +151,15 @@ def test_host_rules_prune_below_cooccurrence_aggregate(spark):
     got = {(r["eid1"], r["eid2"]) for r in out.collect()}
     assert got == {(0, 1)}
     # plan shape: the host filter is a descendant of the Sxy aggregate
-    # (printed deeper), and the noedge anti-join is present
+    # (printed deeper), it also filters the pair frame the aggregate joins
+    # (printed above it), and the noedge anti-join is present
     plan = out._jdf.queryExecution().optimizedPlan().toString()
     assert "LeftAnti" in plan
-    assert plan.index("_host_ok") > plan.index("AS sxy"), (
+    assert plan.rindex("_host_ok") > plan.index("AS sxy"), (
         "host allow filter must be pushed below the cross-term aggregate"
+    )
+    assert plan.index("_host_ok") < plan.index("AS sxy"), (
+        "host allow filter must prune the pair frame too"
     )
 
 

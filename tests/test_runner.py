@@ -106,11 +106,9 @@ def test_pc_gsq_e2e(spark, inputs):
 def test_pc_corr_fisherz_binarized_e2e(spark, inputs):
     """pc-corr with fisherz on binarized series runs the sparse
     pair-statistics path.  Against the dense depth-0 PC kernel on the
-    pipeline's own unit matrix its skeleton and weights agree on every
-    pair of varying series.  A series constant after binarization
-    (present in every bin) has r = 0, so the sparse test finds it
-    independent of everything; the dense kernel's Fisher-z test instead
-    keeps all its pairs as weight-0 edges (zero variance -> p = 0)."""
+    pipeline's own unit matrix its skeleton and weights are the same,
+    series constant after binarization (independent of everything on both
+    paths) included."""
     from logdag_spark.pipeline.correlate import unit_nbins_rows, unit_specs
     from logdag_spark.pipeline.pc import pc_edges
 
@@ -129,15 +127,6 @@ def test_pc_corr_fisherz_binarized_e2e(spark, inputs):
         res.matrix, meta, cfg.bin_size, ci_func="fisherz",
         alpha=cfg.skeleton_threshold, max_depth=0, binarize=True,
     )
-    present = {
-        (r["unit"], r["eid"]): r["n1"]
-        for r in res.matrix.groupBy("unit", "eid")
-        .agg(F.sum((F.col("cnt") >= 1).cast("int")).alias("n1"))
-        .collect()
-    }
-
-    def constant(unit, eid):
-        return present[(unit, eid)] in (0, nmap[unit])
 
     def skeleton(df):
         return {
@@ -147,14 +136,9 @@ def test_pc_corr_fisherz_binarized_e2e(spark, inputs):
         }
 
     got, want = skeleton(res.edges), skeleton(dense)
-    varying = {
-        k: w for k, w in want.items()
-        if not (constant(k[0], k[1]) or constant(k[0], k[2]))
-    }
-    assert set(got) == set(varying) and len(got) > 0
-    for k in varying:
-        assert abs(got[k] - varying[k]) < 1e-9, k
-    assert all(want[k] == 0.0 for k in set(want) - set(varying))
+    assert set(got) == set(want) and len(got) > 0
+    for k in want:
+        assert abs(got[k] - want[k]) < 1e-9, k
 
 
 def test_lingam_corr_e2e(spark, inputs):
