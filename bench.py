@@ -149,19 +149,21 @@ def _stats(name: str, walls: list[float], note: str = "") -> dict:
 
 def time_queries(spark, sf_dir: str, names: list[str], trials: int,
                  rows: dict[str, int]) -> dict[str, dict]:
-    """Each query timed ``trials`` times, cache cleared between trials.
-    A query fails when the row count of a trial (its timed ``.count()``)
-    differs from ``rows[name]``, or across trials where none is recorded."""
+    """Each query run once untimed (JIT and codegen warm-up), then timed
+    ``trials`` times, cache cleared after every run.  A query fails when
+    the row count of a run (its ``.count()``) differs from ``rows[name]``,
+    or across runs where none is recorded."""
     from logdag_spark.entry_queries import QUERIES
 
     out = {}
     for name in names:
         fn, _ = QUERIES[name]
         walls, counts = [], set()
-        for _ in range(trials):
+        for trial in range(trials + 1):
             t0 = time.monotonic()
             counts.add(fn(spark, sf_dir).count())
-            walls.append(round(time.monotonic() - t0, 3))
+            if trial:
+                walls.append(round(time.monotonic() - t0, 3))
             # operators that persist a self-join input must re-compute it
             # each trial: a cross-trial cache hit would time only the join
             spark.catalog.clearCache()

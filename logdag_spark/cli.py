@@ -1056,7 +1056,10 @@ def main(argv: list[str] | None = None) -> int:
         if method == "split":
             out = sampling.hash_split(docs)
         else:
-            out = sampling.hash_sample(docs, args.rate)
+            try:
+                out = sampling.hash_sample(docs, args.rate)
+            except ValueError as e:
+                ap.error(f"sample-docs --rate: {e}")
         out.groupBy(*(["split"] if "split" in out.columns else [])).count().show()
         if args.out:
             out.write.mode("overwrite").parquet(args.out)

@@ -29,7 +29,15 @@ from logdag_spark.operators.text import (
     token_count,
 )
 from logdag_spark.pipeline.aggregate import binarize, discretize, fill_bins, rebin
-from logdag_spark.pipeline.correlate import fisherz_edges, pairwise_corr
+from logdag_spark.pipeline.correlate import (
+    _both_vary,
+    _pair_stats,
+    _pearson_r,
+    fisherz_edges,
+    fisherz_stat,
+    gsq_edges,
+    pairwise_corr,
+)
 from logdag_spark.session import local_frame
 
 T0 = datetime(2024, 1, 1, tzinfo=timezone.utc)
@@ -629,69 +637,41 @@ def _hourly_filled_sql() -> str:
   )"""
 
 
-def _hourly_filled(spark, sf_dir) -> DataFrame:
+def _hourly_keys(spark, sf_dir, unit: F.Column) -> DataFrame:
+    """Sparse hourly event_type counts over the term as a long-form
+    matrix ``(unit, eid, bin, cnt)``: ``eid`` is the event type, ``cnt``
+    its double count, and ``unit`` the given expression (over ``bin``)."""
     b = discretize(
         _events_routed(spark, sf_dir), RANGE,
         timedelta(hours=1), keys=("key",),
     )
-    # persisted: consumed on both sides of the pairwise self-join, and
-    # Catalyst plans the aliases as independent full scans of the raw
-    # events table (no exchange reuse, verified on the executed plan).
-    # One cached row per (key, bin) — the production pipeline gets the
-    # same effect from the events_ts checkpoint.
-    return fill_bins(b, RANGE, timedelta(hours=1), keys=("key",)).persist(
-        StorageLevel.MEMORY_AND_DISK
+    return b.select(unit.alias("unit"), F.col("key").alias("eid"), "bin", "cnt")
+
+
+def _hourly_pairs(spark, sf_dir) -> DataFrame:
+    """Exact Pearson r per (type1 < type2) pair over the term's zero-filled
+    hourly series: the pipeline's sparse pair statistics on ``decimal(38,0)``
+    counts, so every sum and centred term is exact and only the final
+    square root and division run in double — r is bit-deterministic at
+    any partitioning.  A pair with a constant series has no r and is
+    dropped, as ``corr`` gives NULL there."""
+    m = _hourly_keys(spark, sf_dir, F.lit("all")).withColumn(
+        "cnt", F.col("cnt").cast("decimal(38,0)")
     )
-
-
-def _pair_suff_stats(filled: DataFrame):
-    """Exact Pearson sufficient statistics per (type1 < type2) pair.
-
-    Replaces ``F.corr``: its Welford-style partials merge in partition
-    order, so the 6th rounded decimal could depend on the session's
-    core count (see ``_spread``).  The counts are integral, so
-    n/Σx/Σy/Σxy/Σx²/Σy² summed as ``decimal(38,0)`` are EXACT at any
-    partitioning and any magnitude a count reaches (a double sum is
-    exact only up to 2^53, which Σxy passes at cells near 2^27).  The
-    centred terms ``n·Σxy − Σx·Σy`` (and the two variances) are computed
-    in decimal too, where the cancellation is exact; only the final
-    square root and division run in double, so the per-pair scalar r is
-    bit-deterministic — and the hash aggregate is also cheaper than the
-    imperative corr buffer."""
-    dec = "decimal(38,0)"
-    a = filled.select(F.col("key").alias("type1"), "bin", F.col("cnt").cast(dec).alias("c1"))
-    b = filled.select(F.col("key").alias("type2"), "bin", F.col("cnt").cast(dec).alias("c2"))
-    stats = (
-        a.join(b, "bin")
-        .where(F.col("type1") < F.col("type2"))
-        .groupBy("type1", "type2")
-        .agg(
-            F.count("*").alias("_n"),
-            F.sum("c1").alias("_sx"),
-            F.sum("c2").alias("_sy"),
-            F.sum(F.col("c1") * F.col("c2")).alias("_sxy"),
-            F.sum(F.col("c1") * F.col("c1")).alias("_sxx"),
-            F.sum(F.col("c2") * F.col("c2")).alias("_syy"),
+    nb = local_frame(spark, [("all", TERM_S // 3600)], "unit string, n long")
+    return (
+        _pair_stats(m, nb)
+        .where(_both_vary())
+        .select(
+            F.col("eid1").alias("type1"), F.col("eid2").alias("type2"), "n",
+            _pearson_r().alias("r"),
         )
     )
-    n = F.col("_n").cast(dec)
-    v1 = n * F.col("_sxx") - F.col("_sx") * F.col("_sx")
-    v2 = n * F.col("_syy") - F.col("_sy") * F.col("_sy")
-    cov = n * F.col("_sxy") - F.col("_sx") * F.col("_sy")
-    r = F.when(
-        (v1 > 0) & (v2 > 0),
-        cov.cast("double") / F.sqrt(v1.cast("double") * v2.cast("double")),
-    )
-    return stats, r
 
 
 def q_pairwise_corr_1h(spark, sf_dir):
-    filled = _hourly_filled(spark, sf_dir)
-    stats, r = _pair_suff_stats(filled)
-    return (
-        stats.withColumn("r", F.round(r, 6))
-        .where(F.col("r").isNotNull())
-        .select("type1", "type2", "r")
+    return _hourly_pairs(spark, sf_dir).select(
+        "type1", "type2", F.round("r", 6).alias("r")
     )
 
 
@@ -707,16 +687,11 @@ GROUP BY 1, 2 HAVING corr(a.cnt, b.cnt) IS NOT NULL
 
 
 def q_fisherz_edges_1h(spark, sf_dir):
-    filled = _hourly_filled(spark, sf_dir)
-    n = TERM_S // 3600
-    stats, r = _pair_suff_stats(filled)
-    pairs = stats.withColumn("_r", r).where(F.col("_r").isNotNull())
-    rc = F.least(F.greatest(F.col("_r"), F.lit(-1 + 1e-12)), F.lit(1 - 1e-12))
-    z = 0.5 * F.log((1 + rc) / (1 - rc)) * F.sqrt(F.lit(float(n - 3)))
     return (
-        pairs.withColumn("_z", z)
-        .where(F.abs(F.col("_z")) > Z99)
-        .select("type1", "type2", F.round("_r", 6).alias("r"), F.round("_z", 6).alias("z"))
+        _hourly_pairs(spark, sf_dir)
+        .withColumn("z", fisherz_stat(F.col("r"), F.col("n")))
+        .where(F.abs(F.col("z")) > Z99)
+        .select("type1", "type2", F.round("r", 6).alias("r"), F.round("z", 6).alias("z"))
     )
 
 
@@ -749,12 +724,9 @@ def _daily_edges(spark, sf_dir) -> DataFrame:
     """Per-day units: hourly-binned event_type series, Fisher-z edges
     (the pipeline's sparse ``pairwise_corr`` + ``fisherz_edges``, 24
     zero-filled bins per day)."""
-    ev = _events_routed(spark, sf_dir)
-    b = discretize(ev, RANGE, timedelta(hours=1), keys=("key",))
-    day = F.date_format("bin", "yyyyMMdd").alias("unit")
     # persisted: three consumers (stats + both cross-term sides) would
     # otherwise each re-scan and re-bin the raw events table
-    hourly = b.select(day, F.col("key").alias("eid"), "bin", "cnt").persist(
+    hourly = _hourly_keys(spark, sf_dir, F.date_format("bin", "yyyyMMdd")).persist(
         StorageLevel.MEMORY_AND_DISK
     )
     days = [
@@ -1889,43 +1861,43 @@ GROUP BY 1, 2, 3, 4, 5
 """
 
 
+def _daily_type_matrix(spark, sf_dir) -> tuple[DataFrame, dict]:
+    """The grouped-map kernels' per-day input: hourly event_type series
+    ``(unit, eid, bin, cnt)`` whose eid is the type's rank in sorted
+    order (a driver-side literal map), and their unit meta, every day of
+    the term at 24 bins."""
+    m = _hourly_keys(spark, sf_dir, F.date_format("bin", "yyyyMMdd"))
+    types = sorted(r["eid"] for r in m.select("eid").distinct().collect())
+    mapping = F.create_map(
+        *[x for i, t in enumerate(types) for x in (F.lit(t), F.lit(i))]
+    )
+    meta = {
+        (T0 + timedelta(days=d)).strftime("%Y%m%d"): (T0 + timedelta(days=d), 24)
+        for d in range((T_END - T0).days)
+    }
+    return m.withColumn("eid", mapping[F.col("eid")].cast("long")), meta
+
+
 def q_lingam_daily(spark, sf_dir):
     """G5: DirectLiNGAM weighted directed edges per day-unit over the
     hourly event-type series (non-SQL-expressible: iterative entropy
     estimation)."""
-    from datetime import datetime as _dt
-    from datetime import timezone as _tz
-
     from logdag_spark.pipeline.lingam import lingam_edges
 
-    ev = _events_routed(spark, sf_dir)
-    b = discretize(ev, RANGE, timedelta(hours=1), keys=("key",))
-    day = F.date_format("bin", "yyyyMMdd").alias("unit")
-    types = [r["key"] for r in b.select("key").distinct().collect()]
-    eid_map = {t: i for i, t in enumerate(sorted(types))}
-    mapping = F.create_map(*[x for t, i in eid_map.items() for x in (F.lit(t), F.lit(i))])
-    mat = b.select(day, mapping[F.col("key")].cast("long").alias("eid"), "bin", "cnt")
-    units = [r["unit"] for r in mat.select("unit").distinct().collect()]
-    meta = {
-        u: (_dt.strptime(u, "%Y%m%d").replace(tzinfo=_tz.utc), 24) for u in units
-    }
-    return lingam_edges(mat, meta, timedelta(hours=1))
+    return lingam_edges(*_daily_type_matrix(spark, sf_dir), timedelta(hours=1))
 
 
-def q_lingam_2var_daily(spark, sf_dir):
-    """G5 DirectLiNGAM, oracle-checkable 2-variable form
-    (/root/reference/logdag/lingam_input.py:25-95): per day-unit, x is the
-    parity of the 10-minute 'error' event count (strongly non-Gaussian at
-    any event rate) and y = 2x + u with a deterministic arithmetic-hash
-    uniform noise.  The kernel must (a) identify x as exogenous from the
-    entropy measure and (b) fit the triangular coefficient by least
-    squares — for one parent with intercept that equals the population
-    regression slope, which DuckDB computes as ``regr_slope(y, x)``.  So
-    BOTH the causal-order decision and the coefficient are oracle-checked,
-    closing the last pipeline-path operator without a driver oracle."""
-    from logdag_spark.pipeline.lingam import lingam_edges
+_PARITY_STEP = timedelta(minutes=10)
 
-    nb, days, step_s = 144, 30, 600
+
+def _error_parity(spark, sf_dir):
+    """The LiNGAM queries' shared input over the term's first 30 days of
+    10-minute bins ``h`` (144 per day-unit): ``x``, the sparse eid-0
+    series of the parity of each bin's 'error' event count; ``spine``,
+    every bin ``h`` with that parity as ``xv`` (0 where no event);
+    ``series(frame, eid, value)``, the ``(unit, eid, bin, cnt)`` rows of
+    ``value`` over a frame with an ``h`` column; and the unit meta."""
+    nb, days, step_s = 144, 30, int(_PARITY_STEP.total_seconds())
     ev = _load(spark, sf_dir, "events").where(
         (F.col("ts") >= F.lit(T0))
         & (F.col("ts") < F.lit(T0 + timedelta(days=days)))
@@ -1937,24 +1909,42 @@ def q_lingam_2var_daily(spark, sf_dir):
         F.timestamp_seconds(F.lit(T0_S) + F.floor(F.col("h") / nb) * 86400), "yyyyMMdd"
     ).alias("unit")
     bin_of = F.timestamp_seconds(F.lit(T0_S) + F.col("h") * step_s).alias("bin")
-    x = cnts.select(
-        unit_of, F.lit(0).cast("long").alias("eid"), bin_of,
-        (F.col("c") % 2).cast("double").alias("cnt"),
-    )
-    spine = spark.range(days * nb).withColumnRenamed("id", "h")
-    noise = (((F.col("h") * 2654435761) % 97) / 97.0 - 0.5)
-    y = (
-        spine.join(cnts, "h", "left")
-        .select(
-            unit_of, F.lit(1).cast("long").alias("eid"), bin_of,
-            (2 * F.coalesce(F.col("c") % 2, F.lit(0)).cast("double") + noise).alias("cnt"),
+
+    def series(frame: DataFrame, eid: int, value: F.Column) -> DataFrame:
+        return frame.select(
+            unit_of, F.lit(eid).cast("long").alias("eid"), bin_of, value.alias("cnt")
         )
+
+    x = series(cnts, 0, (F.col("c") % 2).cast("double"))
+    spine = (
+        spark.range(days * nb).withColumnRenamed("id", "h")
+        .join(cnts, "h", "left")
+        .withColumn("xv", F.coalesce(F.col("c") % 2, F.lit(0)).cast("double"))
     )
     meta = {
         (T0 + timedelta(days=d)).strftime("%Y%m%d"): (T0 + timedelta(days=d), nb)
         for d in range(days)
     }
-    edges = lingam_edges(x.unionByName(y), meta, timedelta(seconds=step_s))
+    return x, spine, series, meta
+
+
+def q_lingam_2var_daily(spark, sf_dir):
+    """G5 DirectLiNGAM, oracle-checkable 2-variable form
+    (the reference's logdag/lingam_input.py:25-95): per day-unit, x is the
+    parity of the 10-minute 'error' event count (strongly non-Gaussian at
+    any event rate) and y = 2x + u with a deterministic arithmetic-hash
+    uniform noise.  The kernel must (a) identify x as exogenous from the
+    entropy measure and (b) fit the triangular coefficient by least
+    squares — for one parent with intercept that equals the population
+    regression slope, which DuckDB computes as ``regr_slope(y, x)``.  So
+    BOTH the causal-order decision and the coefficient are oracle-checked,
+    closing the last pipeline-path operator without a driver oracle."""
+    from logdag_spark.pipeline.lingam import lingam_edges
+
+    x, spine, series, meta = _error_parity(spark, sf_dir)
+    noise = (((F.col("h") * 2654435761) % 97) / 97.0 - 0.5)
+    y = series(spine, 1, 2 * F.col("xv") + noise)
+    edges = lingam_edges(x.unionByName(y), meta, _PARITY_STEP)
     return edges.select(
         "unit", "src_eid", "dst_eid", "directed", F.round("weight", 6).alias("weight")
     ).orderBy("unit")
@@ -1999,42 +1989,12 @@ def q_lingam_corr_daily(spark, sf_dir):
     oracle-checked."""
     from logdag_spark.pipeline.lingam import lingam_corr_edges
 
-    nb, days, step_s = 144, 30, 600
-    ev = _load(spark, sf_dir, "events").where(
-        (F.col("ts") >= F.lit(T0))
-        & (F.col("ts") < F.lit(T0 + timedelta(days=days)))
-        & (F.col("event_type") == "error")
-    )
-    h = F.floor(((F.unix_millis("ts") / 1000).cast("bigint") - F.lit(T0_S)) / step_s)
-    cnts = ev.groupBy(h.alias("h")).agg(F.count("*").alias("c"))
-    unit_of = F.date_format(
-        F.timestamp_seconds(F.lit(T0_S) + F.floor(F.col("h") / nb) * 86400), "yyyyMMdd"
-    ).alias("unit")
-    bin_of = F.timestamp_seconds(F.lit(T0_S) + F.col("h") * step_s).alias("bin")
-    x = cnts.select(
-        unit_of, F.lit(0).cast("long").alias("eid"), bin_of,
-        (F.col("c") % 2).cast("double").alias("cnt"),
-    )
-    spine = spark.range(days * nb).withColumnRenamed("id", "h")
+    x, spine, series, meta = _error_parity(spark, sf_dir)
     u1 = (((F.col("h") * 2654435761) % 97) / 97.0 - 0.5)
     u2 = (((F.col("h") * 1779033703) % 89) / 89.0 - 0.5)
-    xv = F.coalesce(F.col("c") % 2, F.lit(0)).cast("double")
-    joined = spine.join(cnts, "h", "left")
-    y = joined.select(
-        unit_of, F.lit(1).cast("long").alias("eid"), bin_of,
-        (2 * xv + u1).alias("cnt"),
-    )
-    z = joined.select(
-        unit_of, F.lit(2).cast("long").alias("eid"), bin_of,
-        (0.5 * (2 * xv + u1) + u2).alias("cnt"),
-    )
-    meta = {
-        (T0 + timedelta(days=d)).strftime("%Y%m%d"): (T0 + timedelta(days=d), nb)
-        for d in range(days)
-    }
-    edges = lingam_corr_edges(
-        x.unionByName(y).unionByName(z), meta, timedelta(seconds=step_s)
-    )
+    y = series(spine, 1, 2 * F.col("xv") + u1)
+    z = series(spine, 2, 0.5 * (2 * F.col("xv") + u1) + u2)
+    edges = lingam_corr_edges(x.unionByName(y).unionByName(z), meta, _PARITY_STEP)
     return edges.select(
         "unit", "src_eid", "dst_eid", "directed", F.round("weight", 6).alias("weight")
     ).orderBy("unit", "src_eid", "dst_eid")
@@ -2083,19 +2043,7 @@ def q_pc_depth2_daily(spark, sf_dir):
     driver round, not just in pytest."""
     from logdag_spark.pipeline.pc import pc_edges
 
-    ev = _events_routed(spark, sf_dir)
-    b = discretize(ev, RANGE, timedelta(hours=1), keys=("key",))
-    day = F.date_format("bin", "yyyyMMdd").alias("unit")
-    types = sorted(r["key"] for r in b.select("key").distinct().collect())
-    mapping = F.create_map(
-        *[x for i, t in enumerate(types) for x in (F.lit(t), F.lit(i))]
-    )
-    mat = b.select(day, mapping[F.col("key")].cast("long").alias("eid"), "bin", "cnt")
-    ndays = (T_END - T0).days
-    meta = {
-        (T0 + timedelta(days=d)).strftime("%Y%m%d"): (T0 + timedelta(days=d), 24)
-        for d in range(ndays)
-    }
+    mat, meta = _daily_type_matrix(spark, sf_dir)
     edges = pc_edges(mat, meta, timedelta(hours=1), ci_func="fisherz", max_depth=2)
     w6 = F.round("weight", 6)
     return edges.select(
@@ -3187,18 +3135,7 @@ def q_gsq_edges_1h(spark, sf_dir):
     makedag.py:116-122 + pc_input.py:19-22) over binarized hourly
     event_type presence, one term-wide unit — the sparse scale path
     (correlate.gsq_edges) rather than the grouped-map kernel."""
-    from logdag_spark.pipeline.correlate import gsq_edges
-
-    b = discretize(
-        _events_routed(spark, sf_dir), RANGE,
-        timedelta(hours=1), keys=("key",),
-    )
-    mat = b.select(
-        F.lit("all").alias("unit"),
-        F.col("key").alias("eid"),
-        "bin",
-        F.lit(1.0).alias("cnt"),
-    )
+    mat = _hourly_keys(spark, sf_dir, F.lit("all")).withColumn("cnt", F.lit(1.0))
     nb = local_frame(spark, [("all", TERM_S // 3600)], "unit string, n long")
     e = gsq_edges(mat, nb, alpha=0.01, emit_all=True)
     return e.select(

@@ -23,6 +23,8 @@ is part of the LLM-pipeline extension alongside dedup/similarity.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -101,7 +103,9 @@ def hash_sample(
     df: DataFrame, rate: float, id_col: str = "doc_id", salt: int = SALT_SAMPLE
 ) -> DataFrame:
     """Keep a deterministic ~``rate`` fraction of rows (same rows at any
-    parallelism, any run)."""
+    parallelism, any run); ``rate`` must lie in [0, 1]."""
+    if not 0.0 <= rate <= 1.0:
+        raise ValueError(f"rate must be in [0, 1], got {rate!r}")
     return df.where(bucket_for(df, id_col, salt) < int(rate * P))
 
 
@@ -111,11 +115,17 @@ def hash_split(
     id_col: str = "doc_id",
     salt: int = SALT_SPLIT,
 ) -> DataFrame:
-    """Label every row with a deterministic split name; weights must sum
-    to <= 1 (any remainder falls into the last split).  Default
-    90/5/5 train/val/test."""
+    """Label every row with a deterministic split name; weights must be
+    >= 0 and sum to <= 1 (any remainder falls into the last split).
+    Default 90/5/5 train/val/test."""
     if weights is None:
         weights = {"train": 0.90, "val": 0.05, "test": 0.05}
+    if not weights or not all(w >= 0.0 for w in weights.values()):
+        raise ValueError(
+            f"weights must be a non-empty {{split: w >= 0}} dict, got {weights!r}"
+        )
+    if math.fsum(weights.values()) > 1.0:
+        raise ValueError(f"weights must sum to <= 1, got {weights!r}")
     b = bucket_for(df, id_col, salt)
     expr = None
     acc = 0.0
@@ -140,10 +150,15 @@ def stratified_sample(
     dim broadcast onto the corpus; a row survives iff its bucket falls
     under its stratum's rate.  This is the data-mixing primitive (e.g.
     upweight curated sources, downsample crawl) — one narrow broadcast
-    join + filter, no shuffle of the corpus."""
-    r = rates.select(
-        F.col("key").alias(key_col), (F.col("rate") * P).cast("long").alias("_th")
-    )
+    join + filter, no shuffle of the corpus.  A rate outside [0, 1]
+    fails the job at execution time; a NULL rate keeps no row."""
+    rate = F.col("rate")
+    bad = F.raise_error(F.concat(
+        F.lit("stratified_sample: rate must be in [0, 1], got "),
+        rate.cast("string"), F.lit(" for key "), F.col("key"),
+    ))
+    th = F.when(rate.isNull() | rate.between(0.0, 1.0), (rate * P).cast("long"))
+    r = rates.select(F.col("key").alias(key_col), th.otherwise(bad).alias("_th"))
     return (
         df.join(F.broadcast(r), key_col, "left")
         .where(bucket_for(df, id_col, salt) < F.coalesce("_th", F.lit(0)))

@@ -22,11 +22,18 @@ Spark-first design:
   is never materialized — at 10^12 input rows this is the difference
   between a shuffle of co-occurring rows only and an explosion of
   mostly-zero rows.
+* The sums are exact in the caller's number type: every sum, and the
+  centred terms N*Sxy - Sx*Sy, N*Sxx - Sx^2 and N*Syy - Sy^2, stay in
+  the type of ``cnt``; each centred term is cast to double on its own
+  only for the square root and the division.  The pipeline passes
+  double counts, exact while each sum stays <= 2^53; the query surface
+  passes ``decimal(38,0)`` counts, exact at any count a bin reaches.
 * Fisher-z test (/root/reference/logdag/pc_input.py:23-25) on
       r = (N*Sxy - Sx*Sy) / sqrt((N*Sxx - Sx^2) * (N*Syy - Sy^2)):
   an edge survives iff |atanh(r)| * sqrt(N - 3) > Phi^-1(1 - alpha/2) —
   the critical value is a driver-side constant (stdlib NormalDist), the
-  test itself is pure column math inside whole-stage codegen.
+  statistic (:func:`fisherz_stat`) is pure column math inside
+  whole-stage codegen.
 * G-square test on a 0/1 matrix: Sx is an event's presence count and Sxy
   the pair's co-presence count, which fill the 2x2 contingency table;
   its edge weight is the same r (the phi coefficient).
@@ -199,7 +206,8 @@ def _pair_stats(
     Plan: one hash-agg for per-event moments, one shuffle self-join on
     (unit, bin) for co-occurrence cross terms (J7's pair space), one
     hash-agg, then a broadcast-joined pair frame.  Pairs that never
-    co-occur get Sxy = 0 via the left join + coalesce.
+    co-occur get Sxy = 0 via the left join + coalesce.  The sums keep
+    the type of ``cnt`` (double or decimal alike).
 
     Prior-knowledge pushdown (G7): the reference prunes BEFORE the CI
     tests to shrink the test space (pknowledge.py:82-91), so pruning here
@@ -245,18 +253,35 @@ def _pair_stats(
     return (
         pairs.join(cross, ["unit", "eid1", "eid2"], "left")
         .join(F.broadcast(unit_nbins), "unit")
-        .withColumn("sxy", F.coalesce("sxy", F.lit(0.0)))
+        # an integer literal: 0.0 would turn decimal sums into doubles
+        .withColumn("sxy", F.coalesce("sxy", F.lit(0)))
     )
+
+
+def _centred() -> tuple[F.Column, F.Column, F.Column]:
+    """``(n·Sxy − Sx1·Sx2, n·Sxx1 − Sx1², n·Sxx2 − Sx2²)`` of a
+    :func:`_pair_stats` row, in the type of its sums."""
+    n = F.col("n")
+    return (
+        n * F.col("sxy") - F.col("sx1") * F.col("sx2"),
+        n * F.col("sxx1") - F.col("sx1") * F.col("sx1"),
+        n * F.col("sxx2") - F.col("sx2") * F.col("sx2"),
+    )
+
+
+def _both_vary() -> F.Column:
+    """True where neither series of a :func:`_pair_stats` row is
+    constant."""
+    _, v1, v2 = _centred()
+    return (v1 > 0) & (v2 > 0)
 
 
 def _pearson_r() -> F.Column:
     """Pearson r of a :func:`_pair_stats` row, 0 where a series is
-    constant, clamped to [-1, 1]."""
-    n = F.col("n")
-    cov = n * F.col("sxy") - F.col("sx1") * F.col("sx2")
-    v1 = n * F.col("sxx1") - F.col("sx1") * F.col("sx1")
-    v2 = n * F.col("sxx2") - F.col("sx2") * F.col("sx2")
-    r = F.when((v1 > 0) & (v2 > 0), cov / F.sqrt(v1 * v2)).otherwise(F.lit(0.0))
+    constant, clamped to [-1, 1].  Each centred term is cast to double
+    on its own: their product can overflow ``decimal(38,0)``."""
+    cov, v1, v2 = (c.cast("double") for c in _centred())
+    r = F.when(_both_vary(), cov / F.sqrt(v1 * v2)).otherwise(F.lit(0.0))
     return F.least(F.greatest(r, F.lit(-1.0)), F.lit(1.0))
 
 
@@ -275,17 +300,21 @@ def pairwise_corr(
     )
 
 
-def fisherz_edges(pair_corr: DataFrame, alpha: float = 0.01) -> DataFrame:
-    """Depth-0 Fisher-z dependence edges (``pc-corr`` semantics,
-    /root/reference/logdag/makedag.py:116-122; test form
-    /root/reference/logdag/pc_input.py:106-126)."""
-    z_crit = NormalDist().inv_cdf(1 - alpha / 2)
+def fisherz_stat(r: F.Column, n: F.Column) -> F.Column:
+    """Fisher-z statistic atanh(r)·sqrt(n − 3) of a correlation ``r``
+    over ``n`` samples (the reference's logdag/pc_input.py:106-126)."""
     # clamp away from ±1: atanh diverges there (perfectly correlated
     # series, e.g. duplicated events) and ANSI mode rejects the /0
-    r = F.least(F.greatest(F.col("r"), F.lit(-1 + 1e-12)), F.lit(1 - 1e-12))
-    z = 0.5 * F.log((1 + r) / (1 - r)) * F.sqrt(F.col("n") - 3)
+    r = F.least(F.greatest(r, F.lit(-1 + 1e-12)), F.lit(1 - 1e-12))
+    return 0.5 * F.log((1 + r) / (1 - r)) * F.sqrt(n - 3)
+
+
+def fisherz_edges(pair_corr: DataFrame, alpha: float = 0.01) -> DataFrame:
+    """Depth-0 Fisher-z dependence edges (``pc-corr`` semantics, the
+    reference's logdag/makedag.py:116-122) on :func:`fisherz_stat`."""
+    z_crit = NormalDist().inv_cdf(1 - alpha / 2)
     return (
-        pair_corr.withColumn("z", z)
+        pair_corr.withColumn("z", fisherz_stat(F.col("r"), F.col("n")))
         .where(F.abs(F.col("z")) > z_crit)
         .select(
             "unit",

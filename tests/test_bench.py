@@ -40,3 +40,25 @@ def test_time_queries_flags_a_wrong_row_count(spark, sf001_dir):
     assert stats[QUERIES[0]]["rows"] == [recorded[QUERIES[0]]]
     # no recorded count: the query passes while its trials agree
     assert stats[QUERIES[1]]["ok"]
+
+
+def test_time_queries_runs_one_untimed_warm_up(spark, monkeypatch):
+    """The first run of a query pays JIT and codegen warm-up: it is run
+    but not timed, so a slow first run stays out of every statistic."""
+    import time
+
+    from logdag_spark import entry_queries
+
+    calls = []
+
+    def stub(spark, sf_dir):
+        calls.append(sf_dir)
+        if len(calls) == 1:
+            time.sleep(1.0)
+        return spark.range(3)
+
+    monkeypatch.setitem(entry_queries.QUERIES, "stub", (stub, None))
+    stats = bench.time_queries(spark, "sf", ["stub"], 2, {"stub": 3})
+    assert len(calls) == 3
+    assert stats["stub"]["ok"] and stats["stub"]["n"] == 2
+    assert stats["stub"]["median"] < 0.5

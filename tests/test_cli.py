@@ -548,6 +548,14 @@ def test_mix_docs_command(cli_run, spark, sf001_dir, tmp_path):
                 "--weights", "oops")
 
 
+def test_sample_docs_rejects_a_rate_outside_0_1(cli_run, sf001_dir):
+    docs = f"{sf001_dir}/documents.parquet"
+    assert cli_run("sample-docs", "--input", docs, "--method", "sample",
+                   "--rate", "0.5") == 0
+    with pytest.raises(SystemExit):
+        cli_run("sample-docs", "--input", docs, "--method", "sample", "--rate", "5")
+
+
 def test_chunk_and_budget_docs_commands(cli_run, spark, sf001_dir, tmp_path):
     docs = f"{sf001_dir}/documents.parquet"
     out = str(tmp_path / "chunks.parquet")

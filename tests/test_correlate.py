@@ -192,3 +192,53 @@ def test_gsq_edges_host_rules_prune_the_pair_universe(spark, slice_outputs):
         and (host[k[:2]] == host[(k[0], k[2])] or (host[k[:2]], host[(k[0], k[2])]) in allowed)
     }
     assert got == want and any(host[k[:2]] != host[(k[0], k[2])] for k in got)
+
+
+def test_pair_stats_exact_beyond_2_53(spark):
+    """Cells near 2^27 put Σxy near n·2^54, past the last exactly
+    representable double integer; the centred covariance is then a
+    cancellation of two such sums.  On ``decimal(38,0)`` counts r must
+    still equal the exact integer computation."""
+    from fractions import Fraction
+
+    from logdag_spark.pipeline.correlate import _pair_stats, _pearson_r
+
+    base = 2**27
+    xs = [base + d for d in (0, 3, 1, 7, 2, 5)]
+    ys = [base + d for d in (1, 2, 1, 6, 4, 5)]
+    mat = spark.createDataFrame(
+        [("u", 0, i, x) for i, x in enumerate(xs)]
+        + [("u", 1, i, y) for i, y in enumerate(ys)],
+        "unit string, eid long, bin long, cnt long",
+    ).withColumn("cnt", F.col("cnt").cast("decimal(38,0)"))
+    nb = local_frame(spark, [("u", len(xs))], "unit string, n long")
+    got = _pair_stats(mat, nb).select(_pearson_r().alias("r")).collect()
+    assert len(got) == 1 and got[0]["r"] is not None
+
+    n = len(xs)
+    cov = n * sum(x * y for x, y in zip(xs, ys)) - sum(xs) * sum(ys)
+    v1 = n * sum(x * x for x in xs) - sum(xs) ** 2
+    v2 = n * sum(y * y for y in ys) - sum(ys) ** 2
+    want = float(Fraction(cov) / Fraction(v1 * v2) ** 0.5)
+    assert got[0]["r"] == pytest.approx(want, abs=1e-12)
+    assert got[0]["r"] == pytest.approx(float(np.corrcoef(xs, ys)[0, 1]), abs=1e-9)
+
+
+@pytest.mark.parametrize("cnt_type", ["double", "decimal(38,0)"])
+def test_pair_stats_sums_keep_the_input_type(spark, cnt_type):
+    """Every sum, the cross term of a pair that never co-occurs included,
+    stays in the type of ``cnt``: a double literal in the coalesce would
+    turn decimal sums into doubles and lose their exactness."""
+    from logdag_spark.pipeline.correlate import _pair_stats
+
+    mat = spark.createDataFrame(
+        [("u", 0, 0, 2), ("u", 1, 1, 3), ("u", 2, 1, 1)],
+        "unit string, eid long, bin long, cnt long",
+    ).withColumn("cnt", F.col("cnt").cast(cnt_type))
+    nb = local_frame(spark, [("u", 4)], "unit string, n long")
+    stats = _pair_stats(mat, nb)
+    types = dict(stats.dtypes)
+    for c in ("sx1", "sxx1", "sx2", "sxx2", "sxy"):
+        assert types[c] == cnt_type, (c, types[c])
+    sxy = {(r["eid1"], r["eid2"]): r["sxy"] for r in stats.collect()}
+    assert sxy == {(0, 1): 0, (0, 2): 0, (1, 2): 3}

@@ -101,32 +101,3 @@ def test_spread_accepts_spark_byte_strings(spark, tmp_path):
     assert _size_bytes(spark, "1g") == 1 << 30
     assert _size_bytes(spark, "134217728") == 134217728
 
-
-def test_pair_suff_stats_exact_beyond_2_53(spark):
-    """Cells near 2^27 put Σxy near n·2^54, past the last exactly
-    representable double integer; the centred covariance is then a
-    cancellation of two such sums.  r must still equal the exact
-    integer computation."""
-    from fractions import Fraction
-
-    from logdag_spark.entry_queries import _pair_suff_stats
-
-    base = 2**27
-    xs = [base + d for d in (0, 3, 1, 7, 2, 5)]
-    ys = [base + d for d in (1, 2, 1, 6, 4, 5)]
-    filled = spark.createDataFrame(
-        [("a", i, float(x)) for i, x in enumerate(xs)]
-        + [("b", i, float(y)) for i, y in enumerate(ys)],
-        "key string, bin long, cnt double",
-    )
-    stats, r = _pair_suff_stats(filled)
-    got = stats.select(r.alias("r")).collect()
-    assert len(got) == 1 and got[0]["r"] is not None
-
-    n = len(xs)
-    cov = n * sum(x * y for x, y in zip(xs, ys)) - sum(xs) * sum(ys)
-    v1 = n * sum(x * x for x in xs) - sum(xs) ** 2
-    v2 = n * sum(y * y for y in ys) - sum(ys) ** 2
-    want = float(Fraction(cov) / Fraction(v1 * v2) ** 0.5)
-    assert got[0]["r"] == pytest.approx(want, abs=1e-12)
-    assert got[0]["r"] == pytest.approx(float(np.corrcoef(xs, ys)[0, 1]), abs=1e-9)

@@ -628,6 +628,55 @@ def test_hash_sampling_deterministic_and_rated(spark):
     assert sum(counts.values()) == 2000
 
 
+@pytest.mark.parametrize("rate", [5.0, 1.0 + 1e-9, -0.1, float("nan")])
+def test_hash_sample_rejects_a_rate_outside_0_1(spark, rate):
+    """Above 1 every row was kept, below 0 none, and NaN failed deep in
+    the threshold arithmetic."""
+    from logdag_spark.operators import sampling
+
+    ids = spark.range(10).withColumnRenamed("id", "doc_id")
+    with pytest.raises(ValueError, match="rate"):
+        sampling.hash_sample(ids, rate)
+
+
+@pytest.mark.parametrize("rate", [5.0, -0.1, float("nan")])
+def test_stratified_sample_rejects_a_rate_outside_0_1(spark, rate):
+    """A rate above 1 kept every row of its stratum, a negative one none,
+    and NaN failed with a cast overflow."""
+    from logdag_spark.operators import sampling
+
+    df = spark.createDataFrame([(i, "a") for i in range(10)], "doc_id long, source string")
+    rates = spark.createDataFrame([("a", rate)], "key string, rate double")
+    with pytest.raises(Exception, match="rate must be in"):
+        sampling.stratified_sample(df, rates).count()
+
+
+@pytest.mark.parametrize("weights", [
+    {"train": 0.9, "val": 0.2, "test": 0.1},
+    {"train": 1.2, "test": -0.2},
+    {"train": float("nan"), "test": 0.1},
+    {},
+])
+def test_hash_split_rejects_bad_weights(spark, weights):
+    """Weights summing above 1 silently starved the later splits, and a
+    negative weight made a split unreachable."""
+    from logdag_spark.operators import sampling
+
+    ids = spark.range(10).withColumnRenamed("id", "doc_id")
+    with pytest.raises(ValueError, match="weights"):
+        sampling.hash_split(ids, weights)
+
+
+def test_hash_split_accepts_weights_that_sum_to_1(spark):
+    """0.33 + 0.56 + 0.11 is 1.0000000000000002 in float addition: the
+    limit is checked on the correctly rounded sum."""
+    from logdag_spark.operators import sampling
+
+    ids = spark.range(200).withColumnRenamed("id", "doc_id")
+    got = sampling.hash_split(ids, {"a": 0.33, "b": 0.56, "c": 0.11})
+    assert {r["split"] for r in got.collect()} == {"a", "b", "c"}
+
+
 def test_stratified_sample_rates(spark):
     from logdag_spark.operators import sampling
 

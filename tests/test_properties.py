@@ -292,8 +292,9 @@ def test_pc_edges_rows_independent_of_partition_count(spark, case):
 @PROP_KERNEL
 @given(pc_units())
 def test_pair_statistics_rows_independent_of_partition_count(spark, case):
-    """Both consumers of the sparse pair-statistics plan: Pearson r and
-    the G-square contingency test on the binarized series."""
+    """Both consumers of the sparse pair-statistics plan: Pearson r on
+    double and on ``decimal(38,0)`` counts, and the G-square contingency
+    test on the binarized series."""
     from logdag_spark.pipeline.correlate import gsq_edges, pairwise_corr
     from logdag_spark.session import local_frame
 
@@ -303,11 +304,51 @@ def test_pair_statistics_rows_independent_of_partition_count(spark, case):
         spark, [(f"u{u}", nb) for u in range(len(case[0]))], "unit string, n long"
     )
     mat_bin = mdf.withColumn("cnt", (F.col("cnt") >= 1).cast("double"))
+    mat_dec = mdf.withColumn("cnt", F.col("cnt").cast("decimal(38,0)"))
     for ne in (None, noedge):
         for build in (
             lambda: pairwise_corr(mdf, nbins, noedge=ne),
+            lambda: pairwise_corr(mat_dec, nbins, noedge=ne),
             lambda: gsq_edges(mat_bin, nbins, emit_all=True, noedge=ne),
         ):
             one, default, seven = _rows_at_partitions(spark, build)
             assert one == default == seven
             assert one or ne is not None
+
+
+@st.composite
+def sampled_docs(draw):
+    """Integral or string doc ids with a source each, and a rate."""
+    ids = draw(st.lists(st.integers(0, 2**40), min_size=1, max_size=60, unique=True))
+    as_str = draw(st.booleans())
+    rows = [(str(i) if as_str else i, f"s{i % 3}") for i in ids]
+    return rows, as_str, draw(st.floats(0, 1))
+
+
+def _shuffled(spark, df):
+    """``df`` round-robin spread over the session's shuffle partitions."""
+    return df.repartition(int(spark.conf.get("spark.sql.shuffle.partitions")))
+
+
+@PROP_KERNEL
+@given(sampled_docs())
+def test_sampling_rows_independent_of_partition_count(spark, case):
+    """hash_sample, hash_split and stratified_sample keep and label the
+    same rows at any parallelism, as their docstrings claim."""
+    from logdag_spark.operators.sampling import hash_sample, hash_split, stratified_sample
+
+    rows, as_str, rate = case
+    docs = spark.createDataFrame(
+        rows, f"doc_id {'string' if as_str else 'long'}, source string"
+    ).cache()
+    rates = spark.createDataFrame(
+        [("s0", rate), ("s1", 1 - rate)], "key string, rate double"
+    )
+    for build in (
+        lambda: hash_sample(_shuffled(spark, docs), rate),
+        lambda: hash_split(_shuffled(spark, docs), {"a": rate / 2, "b": rate / 2, "c": 0.0}),
+        lambda: stratified_sample(_shuffled(spark, docs), rates),
+    ):
+        one, default, seven = _rows_at_partitions(spark, build)
+        assert one == default == seven
+    docs.unpersist()
