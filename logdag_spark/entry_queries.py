@@ -11,6 +11,9 @@ Conventions for exact value-hash parity with the oracle:
 from __future__ import annotations
 
 import os
+import shutil
+import tempfile
+import uuid
 from datetime import datetime, timedelta, timezone
 from statistics import NormalDist
 
@@ -1144,23 +1147,20 @@ FROM feats
 
 
 def q_exact_dup_groups(spark, sf_dir):
-    """Exact dedup groups (hash-agg on content).
+    """Exact dedup groups (dedup.exact_dup_groups: hash-agg on the
+    sha2-256 content hash).
 
     sf0.01 documents are all content-distinct, so the raw group-by is
     empty — a vacuous hash match.  Plant deterministic exact duplicates by
     unioning a re-keyed 1/16 slice of the table on BOTH sides; keep_id =
     min(doc_id) still selects the original row of each planted group."""
+    from logdag_spark.operators.dedup import exact_dup_groups
+
     d = _load(spark, sf_dir, "documents")
     planted = d.where(F.col("doc_id") % 16 == 0).withColumn(
         "doc_id", F.col("doc_id") + F.lit(1000000)
     )
-    return (
-        d.unionByName(planted)
-        .groupBy("text")
-        .agg(F.count("*").alias("n_dups"), F.min("doc_id").alias("keep_id"))
-        .where(F.col("n_dups") > 1)
-        .select("keep_id", "n_dups")
-    )
+    return exact_dup_groups(d.unionByName(planted)).select("keep_id", "n_dups")
 
 
 SQL_EXACT_DUP = """
@@ -2052,6 +2052,50 @@ def q_pc_depth2_daily(spark, sf_dir):
     ).orderBy("unit", "src_eid", "dst_eid")
 
 
+def _availablenow_rows(spark, sf_dir, name, build, project):
+    """The events table as a bounded availableNow file stream (``ts``
+    cast to TIMESTAMP) through ``build(stream)`` into a memory sink;
+    returns ``project(sink table)``'s rows, collected.  The rows are
+    materialized locally so the memory-sink view and the temp dirs can
+    be dropped: a long-lived driver session runs these entries every
+    round, and leaking one pinned result set + /tmp dir per round adds
+    up."""
+    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    name = f"{name}_{uuid.uuid4().hex[:8]}"
+    tmp = tempfile.mkdtemp(prefix=f"{name}_")
+    try:
+        # the file stream source demands a directory; symlink the
+        # driver's single-file table into a fresh one (no copy)
+        src_dir = os.path.join(tmp, "src")
+        os.mkdir(src_dir)
+        os.symlink(
+            os.path.abspath(f"{sf_dir}/events.parquet"),
+            os.path.join(src_dir, "events.parquet"),
+        )
+        # duckdb-written parquet surfaces TIMESTAMP_NTZ; watermarks
+        # demand TIMESTAMP (session TZ is UTC, so the cast preserves the
+        # instant)
+        stream = spark.readStream.schema(schema).parquet(src_dir).withColumn(
+            "ts", F.col("ts").cast("timestamp")
+        )
+        q = (
+            build(stream).writeStream.outputMode("append")
+            .format("memory").queryName(name)
+            .option("checkpointLocation", os.path.join(tmp, "ck"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        if not q.awaitTermination(300):
+            # a partial memory table would surface as a confusing oracle
+            # mismatch; fail loudly instead
+            q.stop()
+            raise TimeoutError("availableNow stream did not finish in 300s")
+        return project(spark.table(name)).collect()
+    finally:
+        spark.catalog.dropTempView(name)
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
 def q_stream_event_counts(spark, sf_dir):
     """§2.10 streaming ingest, driver-exercised AND oracle-checked: the
     events table as a bounded availableNow file stream -> watermarked
@@ -2061,61 +2105,18 @@ def q_stream_event_counts(spark, sf_dir):
     ``window.end <= max(ts) - 10min`` — which plain SQL models (batch
     parity across the watermark horizon is additionally pytest-asserted
     in tests/test_streaming.py)."""
-    import tempfile
-    import uuid
-
-    import os
-
-    name = f"stream_counts_{uuid.uuid4().hex[:8]}"
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    # the file stream source demands a directory; symlink the driver's
-    # single-file table into a fresh one (no copy)
-    src_dir = tempfile.mkdtemp(prefix="stream_src_")
-    os.symlink(
-        os.path.abspath(f"{sf_dir}/events.parquet"),
-        os.path.join(src_dir, "events.parquet"),
+    rows = _availablenow_rows(
+        spark, sf_dir, "stream_counts",
+        lambda stream: (
+            stream.withWatermark("ts", "10 minutes")
+            .groupBy("event_type", F.window("ts", "3600 seconds").alias("w"))
+            .agg(F.count("*").alias("cnt"))
+            .select("event_type", F.col("w.start").alias("bin"), "cnt")
+        ),
+        lambda out: out.select(
+            "event_type", _bin_s(), F.col("cnt").cast("bigint").alias("cnt")
+        ),
     )
-    stream = spark.readStream.schema(schema).parquet(src_dir)
-    # duckdb-written parquet surfaces TIMESTAMP_NTZ; watermarks demand
-    # TIMESTAMP (session TZ is UTC, so the cast preserves the instant)
-    stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    counts = (
-        stream.withWatermark("ts", "10 minutes")
-        .groupBy("event_type", F.window("ts", "3600 seconds").alias("w"))
-        .agg(F.count("*").alias("cnt"))
-        .select("event_type", F.col("w.start").alias("bin"), "cnt")
-    )
-    ck_dir = tempfile.mkdtemp(prefix="ck_")
-    q = (
-        counts.writeStream.outputMode("append")
-        .format("memory").queryName(name)
-        .option("checkpointLocation", ck_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        if not q.awaitTermination(300):
-            # a partial memory table would surface as a confusing oracle
-            # mismatch; fail loudly instead
-            q.stop()
-            raise TimeoutError("availableNow stream did not finish in 300s")
-        # materialize locally so the memory-sink view and the temp dirs
-        # can be dropped (a long-lived driver session runs this every
-        # round; leaking one pinned result set + /tmp dir per round adds
-        # up)
-        rows = (
-            spark.table(name)
-            .select(
-                "event_type", _bin_s(), F.col("cnt").cast("bigint").alias("cnt")
-            )
-            .collect()
-        )
-    finally:
-        import shutil
-
-        spark.catalog.dropTempView(name)
-        shutil.rmtree(ck_dir, ignore_errors=True)
-        shutil.rmtree(src_dir, ignore_errors=True)
     return spark.createDataFrame(
         rows, "event_type string, bin_s bigint, cnt bigint"
     ).orderBy("event_type", "bin_s")
@@ -2142,52 +2143,21 @@ def q_stream_sessions(spark, sf_dir):
     static single-file input the append-mode emission set is exactly the
     sessions the final watermark has closed — gaps-and-islands SQL with
     the same watermark cut models it."""
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
     from logdag_spark.operators.temporal import sessionize
 
-    name = f"stream_sessions_{uuid.uuid4().hex[:8]}"
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    src_dir = tempfile.mkdtemp(prefix="stream_sess_src_")
-    os.symlink(
-        os.path.abspath(f"{sf_dir}/events.parquet"),
-        os.path.join(src_dir, "events.parquet"),
+    rows = _availablenow_rows(
+        spark, sf_dir, "stream_sessions",
+        lambda stream: sessionize(
+            stream.withWatermark("ts", "10 minutes"),
+            gap="6 hours", key_cols=("user_id",),
+        ),
+        lambda out: out.select(
+            "user_id",
+            F.unix_micros("session_start").alias("start_us"),
+            F.unix_micros("session_end").alias("end_us"),
+            F.col("n_events").cast("bigint").alias("n_events"),
+        ),
     )
-    stream = spark.readStream.schema(schema).parquet(src_dir)
-    stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    sessions = sessionize(
-        stream.withWatermark("ts", "10 minutes"),
-        gap="6 hours", key_cols=("user_id",),
-    )
-    ck_dir = tempfile.mkdtemp(prefix="ck_sess_")
-    q = (
-        sessions.writeStream.outputMode("append")
-        .format("memory").queryName(name)
-        .option("checkpointLocation", ck_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("availableNow stream did not finish in 300s")
-        rows = (
-            spark.table(name)
-            .select(
-                "user_id",
-                F.unix_micros("session_start").alias("start_us"),
-                F.unix_micros("session_end").alias("end_us"),
-                F.col("n_events").cast("bigint").alias("n_events"),
-            )
-            .collect()
-        )
-    finally:
-        spark.catalog.dropTempView(name)
-        shutil.rmtree(ck_dir, ignore_errors=True)
-        shutil.rmtree(src_dir, ignore_errors=True)
     return spark.createDataFrame(
         rows, "user_id bigint, start_us bigint, end_us bigint, n_events bigint"
     ).orderBy("user_id", "start_us")
@@ -2231,60 +2201,28 @@ def q_stream_burst_monitor(spark, sf_dir):
     stateful kernel's whole visible contract (which bins emit, the
     running mean each saw, the alert decision) is DuckDB-checked, not
     just pytest-asserted."""
-    import os
-    import tempfile
-    import uuid
-
     from logdag_spark.streaming.ingest import stateful_series_monitor
 
-    name = f"stream_burst_{uuid.uuid4().hex[:8]}"
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    src_dir = tempfile.mkdtemp(prefix="stream_burst_src_")
-    os.symlink(
-        os.path.abspath(f"{sf_dir}/events.parquet"),
-        os.path.join(src_dir, "events.parquet"),
+    rows = _availablenow_rows(
+        spark, sf_dir, "stream_burst",
+        lambda stream: stateful_series_monitor(
+            stream.select(
+                F.col("event_type").alias("measure"),
+                F.lit("h").alias("host"),
+                F.col("event_type").alias("key"),
+                "ts",
+                F.lit(1.0).alias("val"),
+            ),
+            threshold=2.0,
+        ),
+        lambda out: out.select(
+            "key",
+            (F.unix_millis("bin") / 1000).cast("bigint").alias("bin_s"),
+            F.col("cnt").cast("bigint").alias("cnt"),
+            F.round("mean_before", 6).alias("mean_before"),
+            "alert",
+        ),
     )
-    stream = (
-        spark.readStream.schema(schema).parquet(src_dir)
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-        .select(
-            F.col("event_type").alias("measure"),
-            F.lit("h").alias("host"),
-            F.col("event_type").alias("key"),
-            "ts",
-            F.lit(1.0).alias("val"),
-        )
-    )
-    alerts = stateful_series_monitor(stream, threshold=2.0)
-    ck_dir = tempfile.mkdtemp(prefix="ck_burst_")
-    q = (
-        alerts.writeStream.outputMode("append")
-        .format("memory").queryName(name)
-        .option("checkpointLocation", ck_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("availableNow stream did not finish in 300s")
-        rows = (
-            spark.table(name)
-            .select(
-                "key",
-                (F.unix_millis("bin") / 1000).cast("bigint").alias("bin_s"),
-                F.col("cnt").cast("bigint").alias("cnt"),
-                F.round("mean_before", 6).alias("mean_before"),
-                "alert",
-            )
-            .collect()
-        )
-    finally:
-        import shutil
-
-        spark.catalog.dropTempView(name)
-        shutil.rmtree(ck_dir, ignore_errors=True)
-        shutil.rmtree(src_dir, ignore_errors=True)
     return spark.createDataFrame(
         rows, "key string, bin_s bigint, cnt bigint, mean_before double, alert boolean"
     ).orderBy("key", "bin_s")
@@ -2298,45 +2236,16 @@ def q_stream_content_dedup(spark, sf_dir):
     content; WHICH physical row represents a content group is a batch
     scheduling artifact, so the entry projects the content columns
     themselves and the oracle is a plain SELECT DISTINCT."""
-    import os
-    import tempfile
-    import uuid
-
     from logdag_spark.streaming.ingest import streaming_content_dedup
 
-    name = f"stream_dedup_{uuid.uuid4().hex[:8]}"
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    src_dir = tempfile.mkdtemp(prefix="stream_dedup_src_")
-    os.symlink(
-        os.path.abspath(f"{sf_dir}/events.parquet"),
-        os.path.join(src_dir, "events.parquet"),
+    rows = _availablenow_rows(
+        spark, sf_dir, "stream_dedup",
+        lambda stream: streaming_content_dedup(
+            stream.withColumn("content", F.concat_ws("|", "event_type", "props")),
+            text_col="content",
+        ).select("event_type", "props"),
+        lambda out: out,
     )
-    stream = (
-        spark.readStream.schema(schema).parquet(src_dir)
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-        .withColumn("content", F.concat_ws("|", "event_type", "props"))
-    )
-    deduped = streaming_content_dedup(stream, text_col="content")
-    ck_dir = tempfile.mkdtemp(prefix="ck_dedup_")
-    q = (
-        deduped.select("event_type", "props")
-        .writeStream.outputMode("append")
-        .format("memory").queryName(name)
-        .option("checkpointLocation", ck_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("availableNow stream did not finish in 300s")
-        rows = spark.table(name).collect()
-    finally:
-        import shutil
-
-        spark.catalog.dropTempView(name)
-        shutil.rmtree(ck_dir, ignore_errors=True)
-        shutil.rmtree(src_dir, ignore_errors=True)
     return spark.createDataFrame(
         rows, "event_type string, props string"
     ).orderBy("event_type", "props")
@@ -4070,12 +3979,12 @@ SQL_SIMHASH_MD5 = _simhash_md5_sql()
 
 def q_doc_fingerprint_md5(spark, sf_dir):
     """Winnowing-style document fingerprint on the SQL-portable md5
-    variant (text.fingerprint_portable) — the exact-oracle twin of the
-    rows-only xxhash64 `doc_fingerprint` entry."""
-    from logdag_spark.operators.text import fingerprint_portable
+    hash (text.fingerprint with hash_fn='md5') — the exact-oracle twin
+    of the rows-only xxhash64 `doc_fingerprint` entry."""
+    from logdag_spark.operators.text import fingerprint
 
     d = _load(spark, sf_dir, "documents")
-    return d.select("doc_id", fingerprint_portable("text").alias("fp"))
+    return d.select("doc_id", fingerprint("text", hash_fn="md5").alias("fp"))
 
 
 SQL_DOC_FP_MD5 = _SQL_DOC_TOKS + """

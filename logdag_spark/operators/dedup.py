@@ -3,16 +3,20 @@
 Exact, MinHash+LSH, SimHash, n-gram Jaccard, and embedding-cosine
 near-dup — each designed around its shuffle profile:
 
-* exact: one hash-groupBy (partial agg collapses dupes map-side);
+* exact: one hash-groupBy on the sha2-256 content hash (partial agg
+  collapses dupes map-side);
 * MinHash/LSH: shingles -> K minhashes -> B bands; the only shuffle is the
   groupBy on (band, band-signature) buckets, candidate pairs verified
   within buckets — never an all-pairs join;
-* SimHash: 64-bit signature; bucket on rotated prefixes;
+* SimHash: 64-bit signature; pigeonhole slices joined against their
+  bit-flip variants;
 * n-gram Jaccard: exact verification join for candidate pairs (testable
   at small scale; at 100 TB it runs only on LSH candidates);
+* group closure: connected components by large-star/small-star
+  contraction (:func:`near_dup_groups`, also the DAG component kernel);
 * embedding cosine: see operators/similarity.py (shared kernel).
 
-All hashing is xxhash64/crc32-based and fully deterministic — the same
+All hashing is sha2/xxhash64/md5-based and fully deterministic — the same
 corpus dedups identically at any parallelism.
 """
 
@@ -34,20 +38,12 @@ MAX_FLIP_MASKS = 1 << 16
 # ------------------------------------------------------------------- exact
 
 
-def exact_dedup(df: DataFrame, col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Keep the smallest-id representative per exact content hash."""
-    w = Window.partitionBy(F.xxhash64(F.col(col))).orderBy(id_col)
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .drop("_rn")
-    )
-
-
 def exact_dup_groups(df: DataFrame, col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """(hash, n_dups, representative) for groups with >1 member."""
+    """(content_hash, n_dups, keep_id) for groups with >1 member, keyed on
+    the sha2-256 content hash: a 64-bit key would merge distinct
+    documents at corpus scale (see :func:`minhash_dedup`)."""
     return (
-        df.groupBy(F.xxhash64(F.col(col)).alias("content_hash"))
+        df.groupBy(F.sha2(F.col(col), 256).alias("content_hash"))
         .agg(F.count("*").alias("n_dups"), F.min(id_col).alias("keep_id"))
         .where(F.col("n_dups") > 1)
     )
@@ -346,14 +342,22 @@ def all_pairs_jaccard(
     return ngram_jaccard_pairs(df, pairs, col, id_col).where(F.col("jaccard") >= th)
 
 
-def star_components(pairs: DataFrame, max_iter: int = 40) -> DataFrame:
-    """Connected components over an (id1, id2) pair graph by alternating
-    large-star / small-star contraction (Kiveris et al., "Connected
-    Components in MapReduce and Beyond") — the TRUE-graph-scale path the
-    label-propagation kernel's docstring points at: each round halves
-    long chains (O(log n) rounds vs O(diameter)), every round is two
-    self-describing groupBy passes over the edge list, and no per-unit
-    assumption is made.
+def near_dup_groups(pairs: DataFrame, max_iter: int = 50) -> DataFrame:
+    """Collapse verified near-duplicate pairs (id1, id2) into dedup
+    groups: connected components over the pair graph, each member labeled
+    with its group's min doc id — the canonical representative a training
+    pipeline keeps.  At oracle scale the pairs come from
+    :func:`all_pairs_jaccard`; at 100 TB from
+    :func:`minhash_lsh_candidates` + verification — the component pass
+    only ever sees the (sparse) surviving pair graph, never the corpus.
+    This is also the DAG component kernel
+    (:func:`logdag_spark.operators.graphops.connected_components`).
+
+    Alternating large-star / small-star contraction (Kiveris et al.,
+    "Connected Components in MapReduce and Beyond", SoCC 2014): each
+    round halves long chains (O(log n) rounds, not O(diameter) — a
+    10^9-pair graph with long edit-chains converges in ~30 rounds), and
+    every round is two groupBy passes over the edge list.
 
     large-star: every node u links its strictly-larger neighbors to
     min(N(u) ∪ {u}).  small-star: u links its not-larger neighbors and
@@ -361,10 +365,11 @@ def star_components(pairs: DataFrame, max_iter: int = 40) -> DataFrame:
     neighbor is its component minimum.  Ids keep their own type — the
     algorithm only needs the column's total order (string doc ids like
     the generator's ``%013d-%s-%08d`` work; a long cast would crash
-    ANSI-mode or NULL-out silently).  Output matches
-    :func:`near_dup_groups`'s contract: (doc_id, group_id, is_canonical),
-    over every node that appears in at least one pair (a self-pair
-    contributes its node as a singleton group).
+    ANSI-mode or NULL-out silently; struct ids order field by field).
+    Raises if no fixpoint is reached in ``max_iter`` rounds.
+    Output: (doc_id, group_id, is_canonical) over every node that
+    appears in at least one pair (a self-pair contributes its node as a
+    singleton group).
     """
     edges = (
         pairs.select(F.col("id1").alias("u"), F.col("id2").alias("v"))
@@ -430,7 +435,7 @@ def star_components(pairs: DataFrame, max_iter: int = 40) -> DataFrame:
         cur, cur_cnt = nxt, nxt_cnt
     else:
         raise RuntimeError(
-            f"star_components did not converge in {max_iter} rounds"
+            f"near_dup_groups did not converge in {max_iter} rounds"
         )
     # star forest: every edge is (member, root); roots link to themselves
     members = cur.select(F.col("u").alias("doc_id"), F.col("v").alias("group_id"))
@@ -442,51 +447,6 @@ def star_components(pairs: DataFrame, max_iter: int = 40) -> DataFrame:
     out = out.unionByName(singles).distinct()
     return out.select(
         "doc_id", "group_id", (F.col("doc_id") == F.col("group_id")).alias("is_canonical")
-    )
-
-
-def near_dup_groups(
-    pairs: DataFrame, max_iter: int = 50, algorithm: str = "star"
-) -> DataFrame:
-    """Collapse verified near-duplicate pairs (id1, id2) into dedup
-    groups: connected components over the pair graph, each member labeled
-    with its group's min doc id — the canonical representative a training
-    pipeline keeps.  At oracle scale the pairs come from
-    :func:`all_pairs_jaccard`; at 100 TB from
-    :func:`minhash_lsh_candidates` + verification — the component pass
-    only ever sees the (sparse) surviving pair graph, never the corpus.
-
-    ``algorithm='star'`` (default) is the O(log n)-round alternating
-    large-star/small-star contraction — a 10^9-pair graph with long
-    edit-chains converges in ~30 rounds regardless of diameter.
-    ``'propagation'`` reuses the per-unit min-label kernel (one hop per
-    round, O(diameter); raises on non-convergence) — fine for shallow
-    clusters, parity-tested against star.
-    Output: (doc_id, group_id, is_canonical)."""
-    if algorithm == "star":
-        return star_components(pairs, max_iter=max_iter)
-    if algorithm != "propagation":
-        raise ValueError(
-            f"unknown algorithm {algorithm!r}: expected 'star' or 'propagation'"
-        )
-    from logdag_spark.operators.graphops import connected_components
-
-    edges = pairs.select(
-        F.lit("").alias("unit"),
-        F.col("id1").alias("src_eid"),
-        F.col("id2").alias("dst_eid"),
-    )
-    nodes = (
-        pairs.select(F.col("id1").alias("eid"))
-        .unionByName(pairs.select(F.col("id2").alias("eid")))
-        .distinct()
-        .select(F.lit("").alias("unit"), "eid")
-    )
-    comp = connected_components(edges, nodes, max_iter)
-    return comp.select(
-        F.col("eid").alias("doc_id"),
-        F.col("component").alias("group_id"),
-        (F.col("eid") == F.col("component")).alias("is_canonical"),
     )
 
 

@@ -15,11 +15,12 @@ edge_search.py:605-620), and trouble-ticket matching (J8,
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from logdag_spark.config import to_utc_ms
+from logdag_spark.operators.dedup import near_dup_groups
 
 
 # --------------------------------------------------------------- enriching
@@ -262,57 +263,30 @@ def anomaly_score(tfidf: DataFrame) -> DataFrame:
 
 
 def connected_components(edges: DataFrame, evdim: DataFrame, max_iter: int = 20) -> DataFrame:
-    """Per-unit connected components by iterative label propagation
-    (small-diameter DAGs converge in a few rounds; at true graph scale
-    swap in a GraphFrames-style alternating algorithm).
-    Output: (unit, eid, component) where component = min eid reachable.
+    """Per-unit connected components by large-star/small-star contraction
+    (:func:`logdag_spark.operators.dedup.near_dup_groups`, O(log n)
+    rounds at any component diameter; raises if ``max_iter`` rounds do
+    not reach the fixpoint).  Nodes are ``struct(unit, eid)`` ids, and a
+    struct orders unit first, so a component's minimum node is its
+    minimum eid.  Every ``evdim`` node is labelled; one no edge touches
+    is its own component.
+    Precondition: every edge endpoint is an ``evdim`` node.
+    Output: (unit, eid, component) where component = min eid reachable."""
+    def node(eid: str) -> Column:
+        return F.struct("unit", F.col(eid).alias("eid"))
 
-    Raises if the propagation has not converged after ``max_iter``
-    rounds: min-label propagation moves one hop per round, so a
-    component whose diameter exceeds the budget would otherwise be
-    SILENTLY split into several pieces, each reporting its own
-    "component" id — for the dedup-group consumer that means duplicate
-    canonical documents with no warning.  Raise loudly, tell the caller
-    to raise max_iter (or switch algorithms)."""
-    if max_iter < 1:
-        raise ValueError(f"max_iter must be >= 1, got {max_iter}")
-    sym = (
-        edges.select("unit", F.col("src_eid").alias("a"), F.col("dst_eid").alias("b"))
-        .unionByName(
-            edges.select("unit", F.col("dst_eid").alias("a"), F.col("src_eid").alias("b"))
-        )
-        .distinct()
+    groups = near_dup_groups(
+        edges.select(node("src_eid").alias("id1"), node("dst_eid").alias("id2")),
+        max_iter,
     )
-    labels = evdim.select("unit", F.col("eid"), F.col("eid").alias("component"))
-    for _ in range(max_iter):
-        prop = (
-            sym.join(
-                labels.select("unit", F.col("eid").alias("b"), F.col("component").alias("nc")),
-                ["unit", "b"],
-            )
-            .groupBy("unit", F.col("a").alias("eid"))
-            .agg(F.min("nc").alias("min_nbr"))
-        )
-        new_labels = (
-            labels.join(prop, ["unit", "eid"], "left")
-            .withColumn("new_c", F.least("component", F.coalesce("min_nbr", "component")))
-            .select("unit", "eid", F.col("new_c").alias("component"))
-        )
-        changed = (
-            new_labels.join(labels.withColumnRenamed("component", "old"), ["unit", "eid"])
-            .where(F.col("component") != F.col("old"))
-            .count()
-        )
-        labels = new_labels.localCheckpoint(eager=True) if changed else new_labels
-        if changed == 0:
-            break
-    else:
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds "
-            f"({changed} labels still changing): a component's diameter "
-            f"exceeds the iteration budget — raise max_iter"
-        )
-    return labels
+    labels = groups.select(
+        F.col("doc_id.unit").alias("unit"),
+        F.col("doc_id.eid").alias("eid"),
+        F.col("group_id.eid").alias("component"),
+    )
+    return evdim.select("unit", "eid").join(labels, ["unit", "eid"], "left").select(
+        "unit", "eid", F.coalesce("component", "eid").alias("component")
+    )
 
 
 def stats_by_threshold(edges: DataFrame, n_steps: int = 10) -> DataFrame:

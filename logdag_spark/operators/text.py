@@ -99,44 +99,28 @@ def lang_id(col: str = "text") -> Column:
     return F.transform(F.array(toks), label)[0]
 
 
-def fingerprint(col: str = "text", window: int = 8) -> Column:
-    """Document fingerprint: min of rolling xxhash64 over token n-gram
-    windows (winnowing-style).  Deterministic, shuffle-free.  The token
-    array is let-bound (single-element transform) so the regex split runs
-    once per row, not once per window position."""
+def fingerprint(col: str = "text", window: int = 8, hash_fn: str = "xxhash64") -> Column:
+    """Document fingerprint: min over token ``window``-gram positions of
+    a hash of the gram (winnowing-style).  Deterministic, shuffle-free.
+    ``hash_fn='xxhash64'`` is the fast Spark-only hash; ``'md5'`` takes
+    the first 8 md5 hex digits as an integer — md5 is engine-identical
+    (Spark and DuckDB emit the same hex), so that variant gets an EXACT
+    oracle.  The token array is let-bound (single-element transform) so
+    the regex split runs once per row, not once per window position."""
+    if hash_fn == "xxhash64":
+        gram_hash = F.xxhash64
+    elif hash_fn == "md5":
+        def gram_hash(g: Column) -> Column:
+            return F.conv(F.substring(F.md5(g), 1, 8), 16, 10).cast("long")
+    else:
+        raise ValueError(f"hash_fn must be xxhash64|md5, got {hash_fn!r}")
 
     def per_doc(toks: Column) -> Column:
         idx = F.sequence(F.lit(0), F.greatest(F.size(toks) - window, F.lit(0)))
         return F.array_min(
             F.transform(
                 idx,
-                lambda i: F.xxhash64(F.array_join(F.slice(toks, i + 1, window), " ")),
-            )
-        )
-
-    return F.transform(F.array(tokenize(col)), per_doc)[0]
-
-
-def fingerprint_portable(col: str = "text", window: int = 8) -> Column:
-    """:func:`fingerprint` on a SQL-portable hash: min over token
-    ``window``-gram positions of the first 8 md5 hex digits parsed as an
-    integer.  md5 is engine-identical (Spark and DuckDB emit the same
-    hex), so this variant gets an EXACT oracle where the xxhash64
-    default (faster, Spark-only) is rows-only checked.  Same let-binding
-    shape as :func:`fingerprint`."""
-
-    def per_doc(toks: Column) -> Column:
-        idx = F.sequence(F.lit(0), F.greatest(F.size(toks) - window, F.lit(0)))
-        return F.array_min(
-            F.transform(
-                idx,
-                lambda i: F.conv(
-                    F.substring(
-                        F.md5(F.array_join(F.slice(toks, i + 1, window), " ")),
-                        1, 8,
-                    ),
-                    16, 10,
-                ).cast("long"),
+                lambda i: gram_hash(F.array_join(F.slice(toks, i + 1, window), " ")),
             )
         )
 

@@ -38,8 +38,6 @@ def docs_with_dups(spark):
 
 
 def test_exact_dedup(spark, docs_with_dups):
-    out = dedup.exact_dedup(docs_with_dups)
-    assert out.count() == docs_with_dups.count() - 4
     groups = dedup.exact_dup_groups(docs_with_dups)
     assert groups.count() == 4
     assert all(r["n_dups"] == 2 for r in groups.collect())
@@ -801,10 +799,21 @@ def test_sampling_stages_decorrelated(spark):
     assert splits == {"train", "val", "test"}
 
 
+def _nx_labels(pairs, nodes=()):
+    """node -> min node of its networkx connected component."""
+    import networkx as nx
+
+    g = nx.Graph()
+    g.add_nodes_from(nodes)
+    g.add_edges_from(pairs)
+    return {n: min(c) for c in nx.connected_components(g) for n in c}
+
+
 def test_star_components_parity_and_long_chain(spark):
-    """Alternating large-star/small-star matches label propagation on a
-    random pair graph, and handles a 60-node chain (diameter far beyond
-    the propagation budget) in O(log n) rounds."""
+    """Star contraction matches networkx on a random pair graph and on a
+    multi-unit DAG with isolated nodes, and handles a 60-node chain
+    (diameter far beyond a one-hop-per-round budget) in O(log n)
+    rounds."""
     import random
 
     rng = random.Random(7)
@@ -812,44 +821,69 @@ def test_star_components_parity_and_long_chain(spark):
     pairs = {(min(a, b), max(a, b))
              for a, b in (rng.sample(nodes, 2) for _ in range(150))}
     pdf = spark.createDataFrame(sorted(pairs), "id1 long, id2 long")
-    lp = {
-        (r["doc_id"], r["group_id"])
-        for r in dedup.near_dup_groups(pdf, algorithm="propagation").collect()
+    st = {(r["doc_id"], r["group_id"]) for r in dedup.near_dup_groups(pdf).collect()}
+    assert st == set(_nx_labels(pairs).items())
+
+    units = {u: [rng.sample(range(80), 2) for _ in range(60)] for u in ("a", "b", "c")}
+    edges = spark.createDataFrame(
+        [(u, x, y) for u, es in units.items() for x, y in es],
+        "unit string, src_eid long, dst_eid long",
+    )
+    evdim = spark.createDataFrame(
+        [(u, e) for u in units for e in range(80)], "unit string, eid long"
+    )
+    want = {
+        (u, n): c
+        for u, es in units.items()
+        for n, c in _nx_labels(es, range(80)).items()
     }
-    st = {(r["doc_id"], r["group_id"]) for r in dedup.star_components(pdf).collect()}
-    assert st == lp
+    assert len(set(want.values())) < len(want)  # some edges, some isolated
+    got = graphops.connected_components(edges, evdim).collect()
+    assert len(got) == len(want)
+    assert {(r["unit"], r["eid"]): r["component"] for r in got} == want
 
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(60)], "id1 long, id2 long"
     )
-    got = dedup.star_components(chain).collect()
+    got = dedup.near_dup_groups(chain).collect()
     assert all(r["group_id"] == 0 for r in got)
     assert len(got) == 61
     assert sum(1 for r in got if r["is_canonical"]) == 1
 
 
+def test_connected_components_long_chain(spark):
+    """A 60-node path in one unit is one component labelled 0: its
+    diameter is three times the default round budget, which only a
+    contraction (not a one-hop-per-round propagation) fits."""
+    edges = spark.createDataFrame(
+        [("u", i, i + 1) for i in range(59)],
+        "unit string, src_eid long, dst_eid long",
+    )
+    evdim = spark.createDataFrame([("u", i) for i in range(60)], "unit string, eid long")
+    got = graphops.connected_components(edges, evdim).collect()
+    assert len(got) == 60
+    assert {r["component"] for r in got} == {0}
+
+
 def test_star_components_string_ids_and_self_pairs(spark):
     """Ids keep their own type (the generator's doc ids are strings —
     a long cast crashed ANSI mode), and a self-pair surfaces its node
-    as a singleton group, matching the propagation path."""
+    as a singleton group."""
     pairs = spark.createDataFrame(
         [("0001-h-01", "0001-h-02"), ("0001-h-02", "0001-h-03"),
          ("0009-z-09", "0009-z-09")],
         "id1 string, id2 string",
     )
-    for algo in ("star", "propagation"):
-        got = {
-            (r["doc_id"], r["group_id"], r["is_canonical"])
-            for r in dedup.near_dup_groups(pairs, algorithm=algo).collect()
-        }
-        assert got == {
-            ("0001-h-01", "0001-h-01", True),
-            ("0001-h-02", "0001-h-01", False),
-            ("0001-h-03", "0001-h-01", False),
-            ("0009-z-09", "0009-z-09", True),
-        }, algo
-    with pytest.raises(ValueError):
-        dedup.near_dup_groups(pairs, algorithm="stars")
+    got = {
+        (r["doc_id"], r["group_id"], r["is_canonical"])
+        for r in dedup.near_dup_groups(pairs).collect()
+    }
+    assert got == {
+        ("0001-h-01", "0001-h-01", True),
+        ("0001-h-02", "0001-h-01", False),
+        ("0001-h-03", "0001-h-01", False),
+        ("0009-z-09", "0009-z-09", True),
+    }
 
 
 def test_update_event_labels_coalesce(spark):

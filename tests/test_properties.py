@@ -352,3 +352,52 @@ def test_sampling_rows_independent_of_partition_count(spark, case):
         one, default, seven = _rows_at_partitions(spark, build)
         assert one == default == seven
     docs.unpersist()
+
+
+@st.composite
+def pair_graphs(draw):
+    """Per-unit random edge lists over a few node ids, self-pairs allowed."""
+    n = draw(st.integers(1, 30))
+    units = draw(st.lists(
+        st.lists(st.tuples(st.integers(0, n - 1), st.integers(0, n - 1)), max_size=40),
+        min_size=1, max_size=3,
+    ))
+    return n, units
+
+
+@PROP_KERNEL
+@given(pair_graphs())
+def test_dedup_verdicts_independent_of_partition_count(spark, case):
+    """near_dup_groups, dedup_keep_canonical and per-unit
+    connected_components label the same rows at any parallelism, as the
+    dedup module docstring claims."""
+    from logdag_spark.operators.dedup import dedup_keep_canonical, near_dup_groups
+    from logdag_spark.operators.graphops import connected_components
+
+    n, units = case
+    edges = spark.createDataFrame(
+        [(f"u{u}", a, b) for u, es in enumerate(units) for a, b in es],
+        "unit string, src_eid long, dst_eid long",
+    ).cache()
+    evdim = spark.createDataFrame(
+        [(f"u{u}", e) for u in range(len(units)) for e in range(n)],
+        "unit string, eid long",
+    )
+    pairs = edges.where(F.col("unit") == "u0").select(
+        F.col("src_eid").alias("id1"), F.col("dst_eid").alias("id2")
+    )
+    # few distinct scores, so the canonical pick exercises the id tie-break
+    docs = spark.createDataFrame(
+        [(e, e * 7 % 3) for e in range(n)], "doc_id long, n_chars long"
+    )
+    for build in (
+        lambda: near_dup_groups(_shuffled(spark, pairs)),
+        lambda: dedup_keep_canonical(
+            _shuffled(spark, docs),
+            near_dup_groups(_shuffled(spark, pairs)).select("doc_id", "group_id"),
+        ),
+        lambda: connected_components(_shuffled(spark, edges), evdim),
+    ):
+        one, default, seven = _rows_at_partitions(spark, build)
+        assert one == default == seven
+    edges.unpersist()
