@@ -88,11 +88,21 @@ from logdag_spark.config import PipelineConfig
 from logdag_spark.session import get_spark
 
 
+def _bin_size(s: str) -> str:
+    """``--bin-size``: the duration check ``PipelineConfig`` runs on
+    ``ci_bin_size``, at parse time."""
+    try:
+        PipelineConfig(ci_bin_size=s)
+    except ValueError as e:
+        raise argparse.ArgumentTypeError(str(e)) from None
+    return s
+
+
 def _common(p: argparse.ArgumentParser) -> None:
     p.add_argument("--warehouse", default="/tmp/logdag_spark_warehouse")
     p.add_argument("--scale", type=float, default=1.0)
     p.add_argument("--cores", type=int, default=None)
-    p.add_argument("--bin-size", default="1m")
+    p.add_argument("--bin-size", type=_bin_size, default="1m")
     p.add_argument(
         "--algorithm", default="pc-corr",
         choices=["pc", "pc-corr", "lingam", "lingam-corr"],

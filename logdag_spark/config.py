@@ -4,8 +4,10 @@ Mirrors the knobs of the reference's INI config
 (/root/reference/logdag/data/config.conf.default) as a typed dataclass:
 bin sizes (``ci_bin_size``/``ci_bin_diff`` :153-160), unit windows
 (``unit_term``/``unit_diff`` :148-151), filter chain (:98-123) and PC
-parameters (:173-186).  Duration strings use the reference's grammar
-(``1m``, ``24h``, ``1d_10s`` — amulog ``config.str2dur``).
+parameters (:173-186).  Durations are strings like ``1m``, ``24h`` or
+``1d_10s`` (the reference's amulog ``config.str2dur`` spelling) that must
+come to a whole number of milliseconds, the resolution every bin and
+series offset is computed in.
 """
 
 from __future__ import annotations
@@ -13,6 +15,7 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass
 from datetime import datetime, timedelta, timezone
+from fractions import Fraction
 
 _UNIT_SECONDS = {"s": 1, "m": 60, "h": 3600, "d": 86400, "w": 604800}
 
@@ -30,19 +33,28 @@ def to_utc_ms(t: datetime) -> int:
     return int(t.timestamp() * 1000)
 
 
-def str2dur(s: str) -> timedelta:
-    """Parse ``1m``, ``24h``, ``1d_10s`` into a timedelta.
+def dur_ms(td: timedelta) -> int:
+    """``td`` in whole milliseconds, exactly: ``total_seconds() * 1000``
+    is a float product, and ``int()`` of it turns 1.001 s into 1000 ms."""
+    return td // timedelta(milliseconds=1)
 
-    Same grammar the reference config uses (amulog config.str2dur, used at
-    /root/reference/logdag/source/filter_log.py:231-252).
+
+def str2dur(s: str) -> timedelta:
+    """Parse ``1m``, ``24h``, ``1d_10s``, ``0.5s`` into a timedelta.
+
+    ``_``-joined parts, each a decimal number and a unit (s, m, h, d, w);
+    the sum must be a whole number of milliseconds.  Raises ValueError
+    otherwise, so ``10.0005s`` is refused rather than truncated.
     """
-    total = 0.0
+    total = Fraction(0)
     for part in s.split("_"):
         m = re.fullmatch(r"(\d+(?:\.\d+)?)([smhdw])", part.strip())
         if not m:
             raise ValueError(f"bad duration string: {s!r}")
-        total += float(m.group(1)) * _UNIT_SECONDS[m.group(2)]
-    return timedelta(seconds=total)
+        total += Fraction(m.group(1)) * _UNIT_SECONDS[m.group(2)] * 1000
+    if total.denominator != 1:
+        raise ValueError(f"duration {s!r} is not a whole number of milliseconds")
+    return timedelta(milliseconds=int(total))
 
 
 @dataclass
@@ -103,6 +115,20 @@ class PipelineConfig:
                 raise ValueError(
                     f"{name} must be one of {allowed}, got {getattr(self, name)!r}"
                 )
+        # every duration is whole milliseconds; all but pre_term are bin
+        # sizes or lengths and must be positive
+        durations = [
+            (name, getattr(self, name))
+            for name in ("ci_bin_size", "ci_bin_diff", "unit_term", "unit_diff",
+                         "pre_term", "linear_sample_rule_bin", "snmp_bin_size")
+        ] + [("fourier_sample_rule", d) for rule in self.fourier_sample_rule for d in rule]
+        for name, value in durations:
+            try:
+                dur = str2dur(value)
+            except ValueError as e:
+                raise ValueError(f"{name}: {e}") from None
+            if dur <= timedelta(0) and name != "pre_term":
+                raise ValueError(f"{name} must be a positive duration, got {value!r}")
 
     @property
     def bin_size(self) -> timedelta:

@@ -2586,13 +2586,25 @@ GROUP BY t.unit ORDER BY t.unit
 
 def q_netsize_daily(spark, sf_dir):
     """G8/A12: connected components of each daily DAG + size histogram
-    (showdag.py:738-760)."""
+    (showdag.py:738-760).
+
+    Every sf0.01 daily component is a single edge, so the raw histogram
+    cannot tell a labelling that follows every hop from one that stops
+    early.  Plant a 25-node path in its own unit (string eids, like the
+    event types) on BOTH sides; it must come out as one size-25
+    component."""
     from logdag_spark.operators.graphops import (
         connected_components,
         netsize_distribution,
     )
 
     edges, _ = _daily_graph(spark, sf_dir)
+    chain = local_frame(
+        spark,
+        [("chain", f"p{i:02d}", f"p{i + 1:02d}", True, 1.0) for i in range(24)],
+        "unit string, src_eid string, dst_eid string, directed boolean, weight double",
+    )
+    edges = edges.unionByName(chain)
     touched = (
         edges.select("unit", F.col("src_eid").alias("eid"))
         .unionByName(edges.select("unit", F.col("dst_eid").alias("eid")))
@@ -2606,9 +2618,14 @@ def q_netsize_daily(spark, sf_dir):
 
 
 SQL_NETSIZE = _SQL_DAILY_EDGES + """
-, sym AS (
-  SELECT unit, k1 AS a, k2 AS b FROM kept
-  UNION SELECT unit, k2, k1 FROM kept
+, chain AS (
+  SELECT 'chain' AS unit, printf('p%02d', i) AS k1, printf('p%02d', i + 1) AS k2
+  FROM range(24) t(i)
+),
+planted AS (SELECT unit, k1, k2 FROM kept UNION ALL SELECT unit, k1, k2 FROM chain),
+sym AS (
+  SELECT unit, k1 AS a, k2 AS b FROM planted
+  UNION SELECT unit, k2, k1 FROM planted
 ),
 nodes AS (SELECT DISTINCT unit, a AS node FROM sym),
 reach AS (

@@ -31,13 +31,9 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from logdag_spark.config import to_utc_ms
+from logdag_spark.config import dur_ms, to_utc_ms
 
 DEFAULT_KEYS = ("measure", "host", "key")
-
-
-def _ms(td: timedelta) -> int:
-    return int(td.total_seconds() * 1000)
 
 
 def _floordiv(a: Column, b: int) -> Column:
@@ -47,9 +43,9 @@ def _floordiv(a: Column, b: int) -> Column:
 
 def n_bins(dt_range: tuple[datetime, datetime], bin_size: timedelta,
            method: str = "sequential", bin_diff: timedelta | None = None) -> int:
-    term = _ms(dt_range[1] - dt_range[0])
-    size = _ms(bin_size)
-    slide = _ms(bin_diff) if bin_diff else size
+    term = dur_ms(dt_range[1] - dt_range[0])
+    size = dur_ms(bin_size)
+    slide = dur_ms(bin_diff) if bin_diff else size
     if method in ("sequential", "slide"):
         step = size if method == "sequential" else slide
         return -(-term // step)  # ceil
@@ -68,8 +64,8 @@ def bin_labels(
 ):
     """Column expression mapping bin index -> bin label timestamp (ms)."""
     t0 = to_utc_ms(dt_range[0])
-    size = _ms(bin_size)
-    slide = _ms(bin_diff) if bin_diff else size
+    size = dur_ms(bin_size)
+    slide = dur_ms(bin_diff) if bin_diff else size
     step = size if method == "sequential" else slide
     offset = slide // 2 if method == "radius" else 0
     return t0, step, offset
@@ -93,8 +89,8 @@ def discretize(
     """
     t0_ms = to_utc_ms(dt_range[0])
     end_ms = to_utc_ms(dt_range[1])
-    size = _ms(bin_size)
-    slide = _ms(bin_diff) if bin_diff else size
+    size = dur_ms(bin_size)
+    slide = dur_ms(bin_diff) if bin_diff else size
     total = n_bins(dt_range, bin_size, method, bin_diff)
 
     ems = F.unix_millis(F.col(ts_col))
@@ -170,9 +166,10 @@ def fill_bins(
     method: str = "sequential",
     bin_diff: timedelta | None = None,
     keys: Sequence[str] = DEFAULT_KEYS,
-    fill: float = 0.0,
+    fill: float | None = 0.0,
 ) -> DataFrame:
-    """Left-join the bin spine so every (key, bin) exists; missing -> fill.
+    """Left-join the bin spine so every (key, bin) exists; missing -> fill,
+    or null when ``fill`` is None.
 
     Mirrors the reference's reindex/fill(0)
     (/root/reference/logdag/source/convert.py:51-67, influx ``fill(0)``
@@ -181,10 +178,10 @@ def fill_bins(
     spine = bin_spine(
         binned.select(*keys).distinct(), dt_range, bin_size, method, bin_diff
     )
-    return (
-        spine.join(binned, [*keys, "bin"], "left")
-        .withColumn("cnt", F.coalesce("cnt", F.lit(fill)))
-    )
+    filled = spine.join(binned, [*keys, "bin"], "left")
+    if fill is None:
+        return filled
+    return filled.withColumn("cnt", F.coalesce("cnt", F.lit(fill)))
 
 
 def rebin(
@@ -196,7 +193,7 @@ def rebin(
     """A6: coarsen consecutive bins by summation
     (/root/reference/logdag/dtutil.py:586-598)."""
     t0_ms = to_utc_ms(dt_range[0])
-    size = _ms(new_bin)
+    size = dur_ms(new_bin)
     idx = _floordiv(F.unix_millis(F.col("bin")) - t0_ms, size)
     label = F.timestamp_millis(F.lit(t0_ms) + idx * size)
     return binned.groupBy(*keys, label.alias("bin")).agg(F.sum("cnt").alias("cnt"))

@@ -38,7 +38,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
-from logdag_spark.config import to_utc_ms
+from logdag_spark.config import dur_ms, to_utc_ms
 from logdag_spark.session import kernel_groups, local_frame
 
 EDGE_SCHEMA = (
@@ -400,8 +400,8 @@ def label_step_ms(
     sequential.  Indexing with bin_size when bin_diff differs collides or
     drops rows silently (ADVICE r1).
     """
-    size = int(bin_size.total_seconds() * 1000)
-    slide = int(bin_diff.total_seconds() * 1000) if bin_diff else size
+    size = dur_ms(bin_size)
+    slide = dur_ms(bin_diff) if bin_diff else size
     step = size if method == "sequential" else slide
     offset = slide // 2 if method == "radius" else 0
     return step, offset

@@ -9,21 +9,24 @@ Fresh implementations of the reference's log-event filters
 * ``filter_periodic`` — Fourier test; if periodic, zero the low-spectrum
   frequencies, subtract the median-valued periodic component and keep the
   remainder (period.py:26-38, :72-93).
-* ``remove_periodic`` — Fourier test only; drop series if periodic
+* ``remove_periodic`` — the same Fourier test; drop the series if periodic
   (period.py:16-23).
 * ``remove_corr``     — autocorrelation at 1h/1d lags (period.py:104-136).
 * ``remove_linear``   — drop series whose cumulative-count curve is close
   to a straight line (filter_log.py:162-185).
 
-All rules for one series run inside one ``mapInArrow`` kernel call per
-partition: the pre-binned rows are hash-partitioned by series and sorted
-by (series, bin offset), and the kernel walks each Arrow batch series by
-series, carrying a series that straddles two batches over to the next —
-one shuffle total, one Python call per batch rather than per series,
-numpy-vectorized inside (scipy is absent; FFT via numpy.fft,
-``argrelmax`` re-derived as an O(n) running maximum).
-At 10^12 rows the group count is |series| x |chunks|, each group small and
-independent — ideal executor parallelism, no driver involvement.
+The program has one rule chain, :meth:`SeriesFilter.apply`, and one Spark
+form of it, :func:`filter_series`.  Events are pre-aggregated JVM-side to
+the fine bin (:func:`fine_bin_ms`), the rows are hash-partitioned by
+series and sorted by (series, bin offset), and a ``mapInArrow`` kernel
+walks each Arrow batch series by series, carrying a series that
+straddles two batches over to the next — one shuffle total, one Python
+call per batch rather than per series, numpy-vectorized inside (scipy is
+absent; FFT via numpy.fft, ``argrelmax`` re-derived as an O(n) running
+maximum).  The chain over raw events and the raw-exchange Spark form that
+ships every event to Python are the oracles in
+``tests/series_filter_reference.py``; the chain on fine bins reproduces
+them exactly.
 
 Series are represented as (offset_seconds, count) pairs: the reference
 reverts the Fourier remainder to ``int(val)`` repeated timestamps at bin
@@ -46,7 +49,6 @@ from functools import partial
 from typing import Iterable, Iterator
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame
@@ -56,7 +58,7 @@ from pyspark.sql.types import (
     DoubleType, StringType, StructField, StructType, TimestampType,
 )
 
-from logdag_spark.config import PipelineConfig, str2dur, to_utc_ms
+from logdag_spark.config import PipelineConfig, dur_ms, str2dur, to_utc_ms
 from logdag_spark.session import kernel_partitions
 
 
@@ -176,8 +178,8 @@ class SeriesFilter:
     """Configured filter chain over one series.
 
     A series is (off, cnt): float-second offsets from the analysis-range
-    start plus per-offset multiplicities.  ``apply`` returns the surviving
-    (off, cnt) or None to drop the series.
+    start plus per-offset multiplicities.  :meth:`apply` runs the chain
+    over a series summed into fine bins.
     """
 
     def __init__(self, cfg: PipelineConfig, term: timedelta):
@@ -234,17 +236,6 @@ class SeriesFilter:
                 return keep * bin_s, remain[keep].astype(float)
         return None
 
-    def remove_periodic(self, off: np.ndarray, cnt: np.ndarray) -> bool:
-        for sample_len, bin_s in self.fourier_rules:
-            data = self._bin_counts(off, cnt, sample_len, bin_s)
-            is_per, _ = fourier_test_periodic(
-                data, np.fft.fft(data), bin_s, self.th_spec, self.th_eval,
-                self.peak_order,
-            )
-            if is_per:
-                return True
-        return False
-
     def remove_corr(self, off: np.ndarray, cnt: np.ndarray) -> bool:
         for sample_len, bin_s in self.fourier_rules:
             data = self._bin_counts(off, cnt, sample_len, bin_s)
@@ -265,51 +256,21 @@ class SeriesFilter:
         val = ((a_stat - a_linear) ** 2).sum() / (bins * total)
         return bool(val < self.linear_th)
 
-    def apply(self, off: np.ndarray, cnt: np.ndarray | None = None):
-        """Full chain (filter_log.py:187-201)."""
-        order = np.argsort(off)
-        off = off[order]
-        cnt = np.ones(len(off)) if cnt is None else cnt[order]
-        raw = (off, cnt)
-        cur_off, cur_cnt = off, cnt
-        for rule in self.rules:
-            if rule == "sizetest":
-                if not self.sizetest(cur_off, cur_cnt):
-                    return raw  # sizetest failure keeps raw, skips the rest
-            elif rule == "filter_periodic":
-                res = self.filter_periodic(cur_off, cur_cnt)
-                if res is not None:
-                    cur_off, cur_cnt = res
-                    if len(cur_off) == 0:
-                        return None
-            elif rule == "remove_periodic":
-                if self.remove_periodic(cur_off, cur_cnt):
-                    return None
-            elif rule == "remove_corr":
-                if self.remove_corr(cur_off, cur_cnt):
-                    return None
-            elif rule == "remove_linear":
-                if self.remove_linear(cur_off, cur_cnt):
-                    return None
-            else:
-                raise ValueError(f"unknown filter rule {rule!r}")
-        return cur_off, cur_cnt
-
-    def apply_binned(
+    def apply(
         self,
         boff: np.ndarray,
         w: np.ndarray,
         raw_total: float,
         raw_span: float,
     ) -> tuple[str, tuple[np.ndarray, np.ndarray] | None]:
-        """Chain over a fine-binned series; exact twin of :meth:`apply`.
+        """The chain (filter_log.py:187-201) over one fine-binned series.
 
         Input is the series pre-aggregated to fine bins whose size divides
         every rule's bin size and sample boundary (see
         :func:`fine_bin_ms`), plus the RAW total count and offset span —
         the only two statistics any rule reads at sub-bin resolution
         (``sizetest``).  Every other rule consumes ``_bin_counts`` output,
-        which is bit-identical on fine-binned input because
+        which is the same on fine-binned input as on raw events because
         ``floor(floor(off/f)*f / B) == floor(off/B)`` when ``f | B`` and
         sample-truncation boundaries are multiples of ``f``.
 
@@ -335,7 +296,7 @@ class SeriesFilter:
                     if len(cur_off) == 0:
                         return "drop", None
             elif rule == "remove_periodic":
-                if self.remove_periodic(cur_off, cur_cnt):
+                if self.filter_periodic(cur_off, cur_cnt) is not None:
                     return "drop", None
             elif rule == "remove_corr":
                 if self.remove_corr(cur_off, cur_cnt):
@@ -351,10 +312,6 @@ class SeriesFilter:
 
 
 SERIES_COLS = ("measure", "host", "key", "area", "group")
-_ROW_SCHEMA = (
-    "measure string, host string, key string, area string, "
-    "group string, ts timestamp, val double"
-)
 _VERDICT_SCHEMA = StructType(
     [StructField(c, StringType()) for c in (*SERIES_COLS, "verdict")]
     + [StructField("ts", TimestampType()), StructField("val", DoubleType())]
@@ -430,7 +387,7 @@ def _verdict_batch(
     head, verdict, ms, val = [], [], [], []
     for lo, hi in zip(bounds[:-1], bounds[1:]):
         boff, wk = boff_ms[lo:hi] / 1000.0, w[lo:hi]
-        verdict_k, repl = sf.apply_binned(
+        verdict_k, repl = sf.apply(
             boff, wk, float(wk.sum()), float(mx[lo:hi].max() - mn[lo:hi].min())
         )
         if verdict_k == "drop":
@@ -463,37 +420,23 @@ def _verdict_batch(
     )
 
 
-def _naive(t0: datetime) -> pd.Timestamp:
-    ts = pd.Timestamp(t0)
-    return ts.tz_localize(None) if ts.tzinfo else ts
-
-
-def fine_bin_ms(cfg: PipelineConfig, term: timedelta) -> int | None:
+def fine_bin_ms(cfg: PipelineConfig, term: timedelta) -> int:
     """Largest bin (ms) at which pre-aggregated input is EXACTLY
     equivalent to raw input for the configured filter chain: the gcd of
-    every rule's bin size and every Fourier sample-truncation boundary.
-    None when some duration isn't an integral number of milliseconds
-    (never under the reference's config grammar)."""
-    term_ms = int(term.total_seconds() * 1000)
-    vals: list[float] = []
+    every rule's bin size and every Fourier sample-truncation boundary
+    (``PipelineConfig`` holds each to a positive whole number of ms)."""
+    term_ms = dur_ms(term)
+    vals: list[int] = []
     rules = set(cfg.filter_rules)
     if rules & {"filter_periodic", "remove_periodic", "remove_corr"}:
         for sample, bin_s in cfg.fourier_sample_rule:
-            vals.append(str2dur(bin_s).total_seconds() * 1000)
-            boundary = term_ms - str2dur(sample).total_seconds() * 1000
+            vals.append(dur_ms(str2dur(bin_s)))
+            boundary = term_ms - dur_ms(str2dur(sample))
             if boundary > 0:
                 vals.append(boundary)
     if "remove_linear" in rules:
-        vals.append(str2dur(cfg.linear_sample_rule_bin).total_seconds() * 1000)
-    if not vals:
-        return 1000
-    ivals = [int(v) for v in vals]
-    if any(i != v or i <= 0 for i, v in zip(ivals, vals)):
-        return None
-    g = 0
-    for i in ivals:
-        g = math.gcd(g, i)
-    return g
+        vals.append(dur_ms(str2dur(cfg.linear_sample_rule_bin)))
+    return math.gcd(*vals) if vals else 1000
 
 
 def weighted_output_ok(
@@ -505,20 +448,17 @@ def weighted_output_ok(
     and every downstream bin boundary (t0-anchored, aggregate.discretize).
     """
     f = fine_bin_ms(cfg, dt_range[1] - dt_range[0])
-    if f is None:
-        return False
-    term_ms = int((dt_range[1] - dt_range[0]).total_seconds() * 1000)
-    size = int(cfg.bin_size.total_seconds() * 1000)
-    slide = int(cfg.bin_diff.total_seconds() * 1000)
+    term_ms = dur_ms(dt_range[1] - dt_range[0])
+    size = dur_ms(cfg.bin_size)
+    slide = dur_ms(cfg.bin_diff)
     if term_ms % f or size % f:
         return False
     if cfg.ci_bin_method == "sequential":
         return True
     if cfg.ci_bin_method == "slide":
         return slide % f == 0
-    if cfg.ci_bin_method == "radius":
-        return slide % f == 0 and (slide // 2) % f == 0 and (size // 2) % f == 0
-    return False
+    # radius
+    return slide % f == 0 and (slide // 2) % f == 0 and (size // 2) % f == 0
 
 
 def filter_series(
@@ -543,9 +483,9 @@ def filter_series(
     series and sorted by (series, bin offset) — and the ``mapInArrow``
     kernel (:func:`series_verdicts`, one call per partition) sees only
     those weighted bins plus exact raw (count, span) stats.  Equivalence
-    to the raw-exchange form is exact (see
-    :meth:`SeriesFilter.apply_binned`) and covered by tests against
-    :func:`filter_series_rows`.
+    to shipping every raw event through the chain is exact (see
+    :meth:`SeriesFilter.apply`) and covered by tests against the
+    raw-exchange oracle in ``tests/series_filter_reference.py``.
 
     ``output="events"``: surviving series keep their RAW rows (a broadcast
     semi-join of the tiny keep-list against the event stream); Fourier
@@ -560,11 +500,6 @@ def filter_series(
         raise ValueError(f"unknown output mode {output!r}")
     term = dt_range[1] - dt_range[0]
     fine = fine_bin_ms(cfg, term)
-    if fine is None:
-        if output != "events":
-            raise ValueError("weighted output needs integral-ms rule bins")
-        return filter_series_rows(routed, dt_range, cfg, measures)
-
     t0_ms = to_utc_ms(dt_range[0])
     kernel = partial(
         series_verdicts, sf=SeriesFilter(cfg, term), t0_ms=t0_ms,
@@ -602,44 +537,3 @@ def filter_series(
     replaced = out.where(F.col("verdict") == "replace").drop("verdict")
     return kept_raw.unionByName(replaced).unionByName(rest)
 
-
-def filter_series_rows(
-    routed: DataFrame,
-    dt_range: tuple[datetime, datetime],
-    cfg: PipelineConfig,
-    measures: Iterable[str] = ("log_feature",),
-) -> DataFrame:
-    """Raw-exchange reference form: ship every event row of the target
-    measures through Arrow into the per-series kernel.  Semantically the
-    oracle for :func:`filter_series`; O(|events|) Python exchange, so the
-    pipeline uses the pre-binned form instead."""
-    t0 = dt_range[0]
-    sf = SeriesFilter(cfg, dt_range[1] - dt_range[0])
-    measures = list(measures)
-    t0_naive = _naive(t0)
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        off = (pdf["ts"] - t0_naive).dt.total_seconds().to_numpy()
-        res = sf.apply(off, pdf["val"].to_numpy())
-        if res is None:
-            return pdf.iloc[0:0]
-        new_off, new_cnt = res
-        head = pdf.iloc[0]
-        return pd.DataFrame(
-            {
-                "measure": head["measure"],
-                "host": head["host"],
-                "key": head["key"],
-                "area": head["area"],
-                "group": head["group"],
-                "ts": t0_naive + pd.to_timedelta(new_off, unit="s"),
-                "val": new_cnt,
-            }
-        )
-
-    target = routed.where(routed["measure"].isin(measures))
-    rest = routed.where(~routed["measure"].isin(measures))
-    filtered = target.groupBy("measure", "host", "key").applyInPandas(
-        kernel, _ROW_SCHEMA
-    )
-    return filtered.unionByName(rest)

@@ -31,7 +31,7 @@ from pyspark.sql.window import Window
 
 from logdag_spark.config import PipelineConfig, str2dur
 from logdag_spark.operators import windows as W
-from logdag_spark.pipeline.aggregate import bin_spine, discretize
+from logdag_spark.pipeline.aggregate import discretize, fill_bins
 
 VSOURCE_KEY = "all"  # evgen_snmp.py:19
 
@@ -68,13 +68,10 @@ def _spine_series(
 ) -> DataFrame:
     """Bin raw samples to the evdb spine; absent bins become null (the
     reference's NaN reindex, evgen_snmp.py:458-460)."""
-    binned = discretize(series, dt_range, bin_size, keys=list(SERIES_KEYS))
-    spine = bin_spine(
-        binned.select(*SERIES_KEYS).distinct(), dt_range, bin_size
-    )
-    return (
-        spine.join(binned, [*SERIES_KEYS, "bin"], "left")
-        .select(*SERIES_KEYS, F.col("bin").alias("ts"), F.col("cnt").alias("val"))
+    keys = list(SERIES_KEYS)
+    binned = discretize(series, dt_range, bin_size, keys=keys)
+    return fill_bins(binned, dt_range, bin_size, keys=keys, fill=None).select(
+        *SERIES_KEYS, F.col("bin").alias("ts"), F.col("cnt").alias("val")
     )
 
 

@@ -110,6 +110,15 @@ def test_rebin(spark, events):
     assert got == want
 
 
+def test_bin_size_in_whole_ms_is_exact():
+    """A whole-ms bin is used as written: ``int(1.001 * 1000)`` is 1000,
+    which made 10 bins of 1.001 s count as 11."""
+    from logdag_spark.config import PipelineConfig
+
+    size = PipelineConfig(ci_bin_size="1.001s").bin_size
+    assert n_bins((T0, T0 + 10 * size), size) == 10
+
+
 def test_to_utc_ms_ignores_driver_local_timezone():
     """Naive datetimes are UTC by convention: the bin origin must not
     shift when the driver runs in a non-UTC timezone (review finding)."""

@@ -204,6 +204,21 @@ def test_config_commands_no_session(cli_run, capsys):
     assert "ci_bin_size = '5m'" in out and "cause_algorithm = 'lingam'" in out
 
 
+def test_bin_size_is_checked_before_a_session_starts(monkeypatch, capsys):
+    """--bin-size runs PipelineConfig's duration check as its argparse
+    type, so a bad value exits 2 without launching a JVM."""
+    from logdag_spark import cli
+
+    def no_session(*args, **kwargs):
+        raise AssertionError("a Spark session was started")
+
+    monkeypatch.setattr(cli, "get_spark", no_session)
+    with pytest.raises(SystemExit) as exc:
+        cli.main(["show-full-config", "--bin-size", "0s"])
+    assert exc.value.code == 2
+    assert "--bin-size" in capsys.readouterr().err
+
+
 def test_args_and_edge_search_commands(cli_run, warehouse, capsys, monkeypatch):
     """make-args / show-args round-trip the per-unit argument table
     (reference __main__.py:511-513,141-150); show-edge applies the

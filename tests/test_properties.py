@@ -203,20 +203,24 @@ def log_series(draw):
                          min_size=1, max_size=6))
 
 
+def _series_offsets(kind: str, seed: int) -> np.ndarray:
+    """Event offsets (s) of one :func:`log_series` series."""
+    r = np.random.default_rng(seed)
+    if kind == "periodic":
+        period = int(r.integers(60, 1800))
+        return np.arange(int(r.integers(0, period)), 86400, period)
+    if kind == "bursty":
+        return np.concatenate([r.uniform(c - 1800, c + 1800, 60)
+                               for c in r.uniform(3600, 82800, 3)])
+    if kind == "uniform":
+        return r.uniform(0, 86400, int(r.integers(20, 400)))
+    return r.uniform(0, 86400, int(r.integers(1, 5)))
+
+
 def _series_rows(case) -> list[tuple]:
     rows = []
     for s, (kind, seed) in enumerate(case):
-        r = np.random.default_rng(seed)
-        if kind == "periodic":
-            period = int(r.integers(60, 1800))
-            off = np.arange(int(r.integers(0, period)), 86400, period)
-        elif kind == "bursty":
-            off = np.concatenate([r.uniform(c - 1800, c + 1800, 60)
-                                  for c in r.uniform(3600, 82800, 3)])
-        elif kind == "uniform":
-            off = r.uniform(0, 86400, int(r.integers(20, 400)))
-        else:
-            off = r.uniform(0, 86400, int(r.integers(1, 5)))
+        off = _series_offsets(kind, seed)
         rows += [
             ("log_feature", f"h{s % 3}", str(s), "core", "g",
              T0 + timedelta(milliseconds=int(o * 1000)), 1.0)
@@ -225,6 +229,55 @@ def _series_rows(case) -> list[tuple]:
     # another measure passes through untouched
     rows.append(("snmp", "h0", "if0", "core", "g", T0, 3.0))
     return rows
+
+
+# one series per verdict of the default chain: drop, replace, raw
+VERDICT_ANCHORS = (("periodic", 0), ("bursty", 0), ("sparse", 0))
+# a minutely series spanning pre_term (6 h) and 1 ms less: sizetest's
+# edge, dropped on one side of it and kept raw on the other
+SPAN_EDGES = tuple(np.linspace(0, span, 361) + 3600 for span in (21600, 21599.999))
+
+
+@settings(max_examples=40, deadline=None)
+@given(log_series())
+def test_series_chain_matches_raw_reference(case):
+    """``SeriesFilter.apply`` on fine bins returns what the chain over raw
+    events (``apply_raw``) returns, under the default chain and one with
+    ``remove_periodic``, ``remove_corr`` and a truncated Fourier sample."""
+    from series_filter_reference import apply_raw, fine_binned
+
+    from logdag_spark.config import PipelineConfig
+    from logdag_spark.pipeline.series_filter import SeriesFilter, fine_bin_ms
+
+    term = timedelta(hours=24)
+    cfgs = (
+        PipelineConfig(),
+        PipelineConfig(
+            filter_rules=("sizetest", "remove_periodic", "remove_corr", "remove_linear"),
+            fourier_sample_rule=(("23h", "10s"),),
+        ),
+    )
+    # whole-ms offsets, as event timestamps reach filter_series
+    series = [
+        np.rint(off * 1000).astype(np.int64) / 1000.0
+        for off in (*(_series_offsets(k, s) for k, s in (*VERDICT_ANCHORS, *case)),
+                    *SPAN_EDGES)
+    ]
+    verdicts = set()
+    for cfg in cfgs:
+        sf, fine = SeriesFilter(cfg, term), fine_bin_ms(cfg, term)
+        for off in series:
+            cnt = np.ones(len(off))
+            verdict, payload = sf.apply(*fine_binned(off, cnt, fine))
+            want = apply_raw(sf, off, cnt)
+            verdicts.add(verdict)
+            if verdict == "drop":
+                assert want is None
+                continue
+            got = (np.sort(off), cnt) if verdict == "raw" else payload
+            assert want is not None
+            assert np.array_equal(got[0], want[0]) and np.array_equal(got[1], want[1])
+    assert verdicts == {"drop", "raw", "replace"}
 
 
 @PROP_KERNEL
@@ -351,6 +404,78 @@ def test_sampling_rows_independent_of_partition_count(spark, case):
     ):
         one, default, seven = _rows_at_partitions(spark, build)
         assert one == default == seven
+    docs.unpersist()
+
+
+@PROP_KERNEL
+@given(
+    st.lists(
+        st.tuples(st.sampled_from(["a", "b", None]), st.integers(0, 500),
+                  st.integers(0, 20)),
+        min_size=1, max_size=60, unique_by=lambda t: t[:2],
+    ),
+    st.integers(1, 64),
+)
+def test_prefix_sum_independent_of_partition_count(spark, rows, width):
+    """partitioned_prefix_sum gives every row the same running total at
+    any parallelism, NULL group keys included."""
+    from logdag_spark.operators.scan import partitioned_prefix_sum
+
+    df = spark.createDataFrame(rows, "part string, id long, v long").cache()
+    one, default, seven = _rows_at_partitions(
+        spark,
+        lambda: partitioned_prefix_sum(
+            _shuffled(spark, df), "v", "id", part_cols=("part",), shard_width=width
+        ),
+    )
+    assert one == default == seven
+    df.unpersist()
+
+
+@st.composite
+def token_docs(draw):
+    """(source, doc_id, text) documents of 0-9 tokens each."""
+    ids = draw(st.lists(st.integers(0, 500), min_size=1, max_size=40, unique=True))
+    return [
+        (f"s{draw(st.integers(0, 2))}", i, " ".join(["w"] * draw(st.integers(0, 9))))
+        for i in ids
+    ]
+
+
+@PROP_KERNEL
+@given(token_docs(), st.integers(1, 12))
+def test_pack_sequences_independent_of_partition_count(spark, rows, capacity):
+    """pack_sequences assigns the same bins at any parallelism, as its
+    docstring claims: per-source order, hash shards, and the exact
+    global order through the distributed scan."""
+    from logdag_spark.operators.text import pack_sequences
+
+    docs = spark.createDataFrame(rows, "source string, doc_id long, text string").cache()
+    for build in (
+        lambda: pack_sequences(_shuffled(spark, docs), capacity, num_shards=1),
+        lambda: pack_sequences(_shuffled(spark, docs), capacity, num_shards=4),
+        lambda: pack_sequences(
+            _shuffled(spark, docs), capacity, order_exact=True, shard_width=50
+        ),
+    ):
+        one, default, seven = _rows_at_partitions(spark, build)
+        assert one == default == seven
+    docs.unpersist()
+
+
+@PROP_KERNEL
+@given(token_docs(), st.integers(0, 200), st.floats(0, 1))
+def test_budget_mix_independent_of_partition_count(spark, rows, budget, w):
+    """budget_mix keeps the same documents at any parallelism; source s2
+    has no weight, so its rows stay with budget 0."""
+    from logdag_spark.operators.sampling import budget_mix
+
+    docs = spark.createDataFrame(rows, "source string, doc_id long, text string").cache()
+    weights = {"s0": w, "s1": 1 - w}
+    one, default, seven = _rows_at_partitions(
+        spark, lambda: budget_mix(_shuffled(spark, docs), budget, weights)
+    )
+    assert one == default == seven
     docs.unpersist()
 
 

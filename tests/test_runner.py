@@ -219,6 +219,25 @@ def test_config_rejects_unknown_choice(field):
         PipelineConfig(**{field: "bogus"})
 
 
+@pytest.mark.parametrize(
+    "kw",
+    [
+        {"ci_bin_size": "abc"},
+        {"ci_bin_size": "0s"},
+        {"ci_bin_size": "10.0005s"},
+        {"fourier_sample_rule": (("24h", "0s"),)},
+    ],
+    ids=["unparsed", "zero", "sub-ms", "zero-fourier-bin"],
+)
+def test_config_rejects_bad_duration(kw):
+    """A duration that does not parse, is not a whole number of
+    milliseconds, or is 0 where a bin size is needed fails when the config
+    is built, not as a truncated bin or a failed plan later."""
+    (field,) = kw
+    with pytest.raises(ValueError, match=field):
+        PipelineConfig(**kw)
+
+
 def test_checkpoint_resume(spark, inputs, tmp_path):
     labeled, hmeta, tdim = inputs
     cfg = PipelineConfig(cause_algorithm="pc-corr", ci_bin_size="5m")

@@ -19,15 +19,27 @@ from logdag_spark.pipeline.series_filter import (
     SeriesFilter,
     argrelmax,
     filter_series,
+    fine_bin_ms,
     self_corr,
 )
+from series_filter_reference import filter_series_rows, fine_binned
 
 TERM = timedelta(hours=24)
 CFG = PipelineConfig()
 
 
-def _sf(**kw):
-    return SeriesFilter(PipelineConfig(**kw), TERM)
+def _chain(off, cnt=None, **kw):
+    """``SeriesFilter.apply`` on the fine-binned series, in the raw
+    chain's terms: None when dropped, the raw (off, cnt) when it passes
+    raw, else the Fourier remainder."""
+    cfg = PipelineConfig(**kw)
+    cnt = np.ones(len(off)) if cnt is None else cnt
+    verdict, payload = SeriesFilter(cfg, TERM).apply(
+        *fine_binned(off, cnt, fine_bin_ms(cfg, TERM))
+    )
+    if verdict == "drop":
+        return None
+    return (off, cnt) if verdict == "raw" else payload
 
 
 def test_argrelmax_basic():
@@ -39,9 +51,8 @@ def test_argrelmax_basic():
 
 
 def test_periodic_series_detected_and_removed():
-    sf = _sf(filter_rules=("remove_periodic",))
     off = np.arange(0, 86400, 60, dtype=float)  # strict 60s period
-    assert sf.apply(off, None) is None
+    assert _chain(off, filter_rules=("remove_periodic",)) is None
 
 
 def test_bursty_series_survives():
@@ -50,46 +61,41 @@ def test_bursty_series_survives():
     "periodic" when a single peak clears th_spec (period.py:58-69: one
     interval -> std/mean = 0 < th_eval), so the series may be SHAVED by
     filter_periodic — but never dropped unless the remainder is empty."""
-    sf = _sf()
     rng = np.random.default_rng(7)
     centers = rng.uniform(0, 86400, 4)
     off = np.sort(
         np.concatenate([rng.uniform(c - 3600, c + 3600, 100) for c in centers])
     )
-    res = sf.apply(off, None)
+    res = _chain(off)
     assert res is not None and res[1].sum() > 0
 
 
 def test_bursty_untouched_without_fourier():
-    sf = _sf(filter_rules=("sizetest", "remove_corr", "remove_linear"))
     rng = np.random.default_rng(7)
     centers = rng.uniform(0, 86400, 4)
     off = np.sort(
         np.concatenate([rng.uniform(c - 3600, c + 3600, 100) for c in centers])
     )
-    res = sf.apply(off, None)
+    res = _chain(off, filter_rules=("sizetest", "remove_corr", "remove_linear"))
     assert res is not None
     assert res[1].sum() == len(off)
 
 
 def test_uniform_rate_series_removed_by_linear():
-    sf = _sf(filter_rules=("remove_linear",))
     rng = np.random.default_rng(7)
     off = np.sort(rng.uniform(0, 86400, 400))
-    assert sf.apply(off, None) is None
+    assert _chain(off, filter_rules=("remove_linear",)) is None
 
 
 def test_linear_series_removed():
-    sf = _sf(filter_rules=("remove_linear",))
     off = np.linspace(0, 86400, 500, endpoint=False)
-    assert sf.apply(off, None) is None
+    assert _chain(off, filter_rules=("remove_linear",)) is None
 
 
 def test_sizetest_keeps_raw():
-    sf = _sf(filter_rules=("sizetest", "remove_linear"))
     # perfectly linear but only 3 events -> sizetest fails -> keep raw
     off = np.array([0.0, 40000.0, 80000.0])
-    res = sf.apply(off, None)
+    res = _chain(off, filter_rules=("sizetest", "remove_linear"))
     assert res is not None and len(res[0]) == 3
 
 
@@ -103,12 +109,11 @@ def test_self_corr():
 def test_filter_periodic_remainder_keeps_burst():
     """A periodic carpet with one anomalous burst: the Fourier remainder
     must keep (most of) the burst while shaving the carpet."""
-    sf = _sf(filter_rules=("filter_periodic",))
     off = np.arange(0, 86400, 60, dtype=float)
     cnt = np.ones(len(off))
     burst_idx = (off >= 43200) & (off < 43200 + 600)
     cnt[burst_idx] = 9.0
-    res = sf.apply(off, cnt)
+    res = _chain(off, cnt, filter_rules=("filter_periodic",))
     assert res is not None
     kept_off, kept_cnt = res
     assert kept_cnt.sum() < cnt.sum()  # periodic part removed
@@ -158,8 +163,6 @@ def test_binned_exchange_matches_raw_exchange(spark, routed_log):
     """The pre-binned fast path must be row-identical to the raw-exchange
     oracle (filter_series_rows) — raw-kept series keep raw timestamps,
     Fourier remainders land on the same bin starts, drops agree."""
-    from logdag_spark.pipeline.series_filter import filter_series_rows
-
     dt_range = (DEFAULT_T0, DEFAULT_T0 + TERM)
     fast = filter_series(routed_log, dt_range, CFG, output="events")
     slow = filter_series_rows(routed_log, dt_range, CFG)
@@ -171,10 +174,7 @@ def test_weighted_output_discretize_parity(spark, routed_log):
     """output="weighted" feeds discretize |series| x |fine bins| rows but
     must produce bit-identical binned aggregates."""
     from logdag_spark.pipeline.aggregate import discretize
-    from logdag_spark.pipeline.series_filter import (
-        filter_series_rows,
-        weighted_output_ok,
-    )
+    from logdag_spark.pipeline.series_filter import weighted_output_ok
 
     dt_range = (DEFAULT_T0, DEFAULT_T0 + TERM)
     assert weighted_output_ok(CFG, dt_range)
@@ -187,7 +187,7 @@ def test_weighted_output_discretize_parity(spark, routed_log):
 
 
 def test_weighted_output_ok_gates():
-    from logdag_spark.pipeline.series_filter import fine_bin_ms, weighted_output_ok
+    from logdag_spark.pipeline.series_filter import weighted_output_ok
 
     dt_range = (DEFAULT_T0, DEFAULT_T0 + TERM)
     assert fine_bin_ms(CFG, TERM) == 10_000  # gcd(10s fourier, 10s linear)
